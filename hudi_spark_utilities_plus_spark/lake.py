@@ -31,8 +31,9 @@ the classpath:
 Scale notes (100 TB posture): the merge is a single shuffle on the record
 key (Spark plans partial window aggregation per partition); AQE splits
 skewed keys. For partitioned tables the COW rewrite cost is bounded by
-**dynamic partition overwrite**: the merge reads/rewrites only the
-partitions the incoming batch touches (``_rewrite_partitions``), other
+a **partition swap**: the merge reads only the partitions the incoming
+batch touches, writes them once to staging and swaps each staged
+partition directory into place (``_rewrite_partitions``); other
 partitions' files are never opened. Unpartitioned tables are rewritten
 whole via a staging dir + backup rename — local-filesystem only, and the
 implementation refuses DFS/object-store schemes rather than pretend the
@@ -125,6 +126,34 @@ def merge_latest_wins(
         df.withColumn("__hudi_rn", F.row_number().over(w))
         .filter(F.col("__hudi_rn") == 1)
         .drop("__hudi_rn")
+    )
+
+
+def _hidden_name(name: str) -> bool:
+    """Spark's file-index rule for names it never reads: a ``.`` prefix,
+    or a ``_`` prefix on anything but a ``col=value`` partition dir."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _in_list_exact(probe_type, table_type) -> bool:
+    """Whether probe-key values collected to Python and pushed back as
+    an IN-list select exactly the table rows an equi-join on the key
+    keeps: both sides integral, or both binary-collated strings.
+    Floating, temporal and other types keep the join."""
+    from pyspark.sql.types import IntegralType, StringType
+
+    def family(t):
+        if isinstance(t, IntegralType):
+            return "integral"
+        if (
+            isinstance(t, StringType)
+            and getattr(t, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+        ):
+            return "string"
+        return None
+
+    return family(probe_type) is not None and family(probe_type) == family(
+        table_type
     )
 
 
@@ -414,16 +443,18 @@ class HudiTable:
         else:
             if not os.path.exists(local):
                 return False
-            # driver-side table probe (r17): any parquet data file
-            # under the root means a read can succeed — replaces a
-            # per-call Spark footer-inference job (Spark 4 launches a
-            # 1-task job for every `spark.read.parquet(...).schema`,
-            # one per upsert/delete exists() probe). A root holding
-            # only _SUCCESS/hidden files stays False, matching the
-            # probe; an unreadable/corrupt footer is the one corner
-            # that now surfaces at read time instead of here.
-            for _dirpath, _dirs, files in os.walk(local):
-                if any(f.endswith(".parquet") for f in files):
+            # driver-side table probe: any VISIBLE parquet data file
+            # under the root means a read can succeed, with no Spark
+            # footer-inference job. Hidden names are skipped by the same
+            # rule Spark's file index applies, so a crashed writer's
+            # `_temporary/**.parquet` never makes an empty root a table;
+            # an unreadable footer surfaces at read time instead.
+            for _dirpath, dirs, files in os.walk(local):
+                dirs[:] = [d for d in dirs if not _hidden_name(d)]
+                if any(
+                    f.endswith(".parquet") and not _hidden_name(f)
+                    for f in files
+                ):
                     return True
             return False
         try:
@@ -660,7 +691,8 @@ class HudiTable:
         (``hoodie.read.pointlookup.inlist.max``, default 1000) are also
         pushed as a parquet-native IN filter — row-group min/max skip
         on plain tables, and inside the touched files of manifest
-        tables. ``_keys`` is the
+        tables; for integral or string keys that IN-list is exact and
+        replaces the two semi-joins. ``_keys`` is the
         same hook for internal callers whose EXACTNESS argument spans
         two reads (read_cdc's before/after diff: every commit after a
         valid cursor still lives in the log).
@@ -701,10 +733,12 @@ class HudiTable:
         # user-sized by definition) turns the probe into PushedFilters
         # row-group pruning, which works on PLAIN tables with no
         # manifest (min/max row-group skip) and inside the touched
-        # files of manifest tables. Purely additive: it selects exactly
-        # the rows the semi-join below keeps (NULL probe keys match no
-        # row under either), so correctness never depends on it. Large
-        # key frames skip the probe and keep the pure semi-join plan.
+        # files of manifest tables. It selects exactly the rows the
+        # semi-join below keeps (NULL probe keys match no row under
+        # either) wherever the key type round-trips through Python
+        # exactly, and there it stands in for the semi-join; other key
+        # types keep both. Large key frames skip the probe and keep the
+        # pure semi-join plan.
         # The internal _keys hook (read_cdc/read_incremental) never
         # probes — its key sets are delta-sized, not user-sized.
         in_filter = None
@@ -792,10 +826,20 @@ class HudiTable:
             if self._is_manifest
             else self._base_read(spark)
         )
+        semi_keys = _keys
         if in_filter is not None:
             base = base.filter(in_filter)
-        if _keys is not None:
-            base = base.join(_keys, self.record_key, "left_semi")
+            # the IN-list holds the WHOLE probe set; where the key type
+            # round-trips exactly it keeps exactly the rows the
+            # semi-join would, so the key frame is not evaluated again
+            # (the manifest file pruning above still used it)
+            if _in_list_exact(
+                keys.schema[self.record_key].dataType,
+                base.schema[self.record_key].dataType,
+            ):
+                semi_keys = None
+        if semi_keys is not None:
+            base = base.join(semi_keys, self.record_key, "left_semi")
         if mode == "read_optimized" or not (
             self.is_mor and self._has_log(spark)
         ):
@@ -811,8 +855,8 @@ class HudiTable:
         log = self._log_read(spark)
         if in_filter is not None:
             log = log.filter(in_filter)
-        if _keys is not None:
-            log = log.join(_keys, self.record_key, "left_semi")
+        if semi_keys is not None:
+            log = log.join(semi_keys, self.record_key, "left_semi")
         if as_of_seq is not None:
             log = log.filter(F.col("__hudi_seq") <= as_of_seq)
         tagged_base = base.withColumn("__hudi_op", F.lit("upsert")).withColumn(
@@ -1069,8 +1113,8 @@ class HudiTable:
         (the partition-pruning key list, not data). Returns
         ``(non_null_values, has_null)``: a null partition value is a real
         partition (Spark writes it to ``__HIVE_DEFAULT_PARTITION__``) and
-        MUST be part of the touched scope — dropping it silently made
-        dynamic overwrite replace the null-partition directory with only
+        MUST be part of the touched scope — dropping it would make the
+        partition rewrite replace the null-partition directory with only
         the batch's rows, deleting pre-existing null-partition data."""
         vals = [
             r[0] for r in df.select(self.partition_field).distinct().collect()
@@ -1501,19 +1545,20 @@ class HudiTable:
             return floor
         return max(self._log_scan_next(spark), floor)
 
-    def _alloc_seq(self, spark: SparkSession) -> int:
-        """Durably allocate the next commit seq BEFORE the log append.
+    def _alloc_seq(self, spark: SparkSession, n: int = 1) -> int:
+        """Durably allocate ``n`` consecutive commit seqs BEFORE the log
+        append; returns the first.
 
         Claim path (store resolved): one LIST for the candidate (via
         the _next_seq peek — same floors, computed once), one
-        conditional PUT to claim it, bump-and-retry on contention —
-        O(1) RPCs, multi-writer-unique with no lock (measured: 8 procs
-        × 40 claims = 320/320 distinct dense; flat [0.26…0.20] s/commit
-        over a 120-commit timeline vs the log-scan fallback's drifting
-        [0.52…0.65] s). Sidecar path: read-modify-replace under the
-        table lock. Either way a crash after allocation wastes a seq
-        (gap — the read merge and cursors don't care) instead of
-        re-issuing one (two commits sharing a seq would merge as one).
+        conditional PUT per seq, bump-and-retry on contention — O(1)
+        RPCs, multi-writer-unique with no lock. A lost claim restarts
+        the run just past it, so a run is always contiguous; seqs this
+        writer already won below it become gaps. Sidecar path:
+        read-modify-replace under the table lock. Either way a crash
+        after allocation wastes seqs (gaps — the read merge and cursors
+        don't care) instead of re-issuing one (two commits sharing a
+        seq would merge as one).
 
         The sidecar is (re)written on BOTH paths — on claim allocations
         it is redundant for the claim protocol itself but keeps the
@@ -1523,29 +1568,71 @@ class HudiTable:
         store = self._seq_claim_store()
         seq = self._next_seq(spark, _store=store)
         if store is not None:
-            while not store.claim(seq):
-                seq += 1
-        self._write_seqmax(seq)
+            won = 0
+            while won < n:
+                if store.claim(seq + won):
+                    won += 1
+                else:
+                    seq, won = seq + won + 1, 0
+        self._write_seqmax(seq + n - 1)
         return seq
 
-    def _append_log(self, df: DataFrame, op: str, spark: SparkSession) -> None:
+    def _delete_markers(self, keys_df: DataFrame) -> DataFrame:
+        """A delete's log entry: the (key[, precombine][, partition])
+        columns of ``keys_df``. A marker carrying the precombine
+        competes by (precombine, commit seq); a key-only marker deletes
+        unconditionally. Duplicate markers merge as one."""
+        cols = [self.record_key]
+        if self.precombine in keys_df.columns:
+            cols.append(self.precombine)
+        if self.partition_field and self.partition_field in keys_df.columns:
+            cols.append(self.partition_field)
+        return keys_df.select(*cols)
+
+    def _append_log(
+        self,
+        df: DataFrame,
+        op: str,
+        spark: SparkSession,
+        markers: DataFrame | None = None,
+    ) -> None:
         """MERGE_ON_READ write path: append the batch to the delta log —
         no base files are opened, the write cost is O(batch), and the
-        merge is deferred to read()/compact()."""
-        seq = self._alloc_seq(spark)
+        merge is deferred to read()/compact().
+
+        ``markers`` (delete markers, see _delete_markers) ride in the
+        SAME append: ``df`` takes seq s and the markers seq s+1, so the
+        timeline — time travel, incremental and CDC reads, restore and
+        the inline-compaction count — is exactly that of two commits,
+        while the batch costs one write job and one set of files."""
+        seq = self._alloc_seq(spark, 1 if markers is None else 2)
         # materialize, don't guard: on a partitioned table a log entry
         # missing the partition column (typically a key-only delete
-        # marker) used to append at the log ROOT while sibling entries
-        # sat in dt=... dirs — Spark's partition discovery silently
-        # drops the root-level files from such a mixed layout, so the
-        # delete marker was LOST and the doomed row survived the merge.
-        # NULL routes the entry to __HIVE_DEFAULT_PARTITION__, keeping
-        # one consistent layout; the merge joins on record_key, so a
-        # marker's partition value is irrelevant to its semantics.
-        df = self._with_partition_col(df, spark)
-        entry = df.withColumn("__hudi_op", F.lit(op)).withColumn(
-            "__hudi_seq", F.lit(seq).cast("long")
+        # marker) would append at the log ROOT while sibling entries sit
+        # in dt=... dirs, and Spark's partition discovery drops the
+        # root-level files of such a mixed layout — the marker would be
+        # lost. NULL routes the entry to __HIVE_DEFAULT_PARTITION__,
+        # keeping one consistent layout; the merge joins on record_key,
+        # so a marker's partition value is irrelevant to its semantics.
+        entry = (
+            self._with_partition_col(df, spark)
+            .withColumn("__hudi_op", F.lit(op))
+            .withColumn("__hudi_seq", F.lit(seq).cast("long"))
         )
+        if markers is not None:
+            entry = entry.unionByName(
+                self._with_partition_col(markers, spark)
+                .withColumn("__hudi_op", F.lit("delete"))
+                .withColumn("__hudi_seq", F.lit(seq + 1).cast("long")),
+                allowMissingColumns=True,
+            )
+        # one shuffle to few right-sized tasks: a small batch writes one
+        # file (per partition), where the upstream plan's partitioning
+        # would write one per shuffle partition; AQE splits large ones
+        if self.partition_field:
+            entry = entry.hint("rebalance", self.partition_field)
+        else:
+            entry = entry.hint("rebalance")
         self._writer(entry, "append").parquet(self._log_path)
 
     def _maybe_compact(self, spark: SparkSession) -> None:
@@ -1553,7 +1640,14 @@ class HudiTable:
         ``hoodie.compact.inline.max.delta.commits``, default 5): after a
         log append, fold the log into the base once it has accumulated N
         delta commits. Off unless ``hoodie.compact.inline=true`` —
-        matching Hudi's default of deferring compaction."""
+        matching Hudi's default of deferring compaction.
+
+        Checked once per log APPEND, so an ``upsert(df, deletes=...)``
+        batch — one append holding two delta commits — compacts at the
+        batch boundary: with an odd threshold the count can pass N on
+        the batch's upserts, and the compaction then folds the batch's
+        delete markers too, where a separate upsert and delete would
+        compact between them. The resulting state is the same."""
         if str(self.options.get("hoodie.compact.inline", "false")).lower() != "true":
             return
         max_commits = int(
@@ -1799,7 +1893,7 @@ class HudiTable:
                 "__hudi_zkey"
             )
         if self.partition_field and not self._is_manifest:
-            self._rewrite_partitions(clustered, spark)
+            self._rewrite_partitions(clustered, spark, rebalance=False)
         else:
             # manifest tables (partitioned or not): full-replace commit;
             # the partition column is a data column, and the range
@@ -1864,7 +1958,7 @@ class HudiTable:
             df = self.read(spark).repartition(
                 n_target, F.col(self.partition_field)
             )
-            self._rewrite_partitions(df, spark)
+            self._rewrite_partitions(df, spark, rebalance=False)
         elif self.partition_field:
             # partitioned manifest: keep the compacted files
             # partition-clustered so the partition envelopes stay tight
@@ -1953,6 +2047,8 @@ class HudiTable:
         df: DataFrame,
         spark: SparkSession | None = None,
         expected_seq: int | None = None,
+        *,
+        deletes: DataFrame | None = None,
     ) -> None:
         """Upsert: merge incoming with existing, latest-wins on
         (record_key, precombine); incoming beats existing on ties, which
@@ -1960,10 +2056,20 @@ class HudiTable:
 
         COPY_ON_WRITE merges eagerly and rewrites; partitioned tables
         merge and rewrite **only the partitions the incoming batch
-        touches** (dynamic partition overwrite) — the rewrite cost is
-        proportional to the touched partitions, not the table.
-        MERGE_ON_READ appends the batch to the delta log (O(batch)
-        write) and defers the merge to read()/compact().
+        touches** (staged, then swapped in partition by partition) —
+        the rewrite cost is proportional to the touched partitions, not
+        the table. MERGE_ON_READ appends the batch to the delta log
+        (O(batch) write) and defers the merge to read()/compact().
+
+        ``deletes`` (Hudi's upsert with deleted records): a key frame
+        applied as ``delete(deletes)`` right after the upsert, in the
+        same commit-lock scope. On an existing MERGE_ON_READ table the
+        upserts and the delete markers go into ONE log append holding
+        two delta commits (upserts at seq s, markers at s+1), so every
+        reader sees exactly the upsert-then-delete timeline; elsewhere
+        it is the upsert followed by the delete. The markers are
+        written as given, without delete()'s dedup shuffle: a
+        duplicate marker costs log bytes, never a different result.
 
         ``expected_seq`` is OPTIMISTIC CONCURRENCY CONTROL (Hudi's
         ``hoodie.write.concurrency.mode=optimistic_concurrency_control``
@@ -2018,10 +2124,20 @@ class HudiTable:
         # and the streaming demux upserts many tables per micro-batch
         table_exists = self.exists(spark)
         if self.is_mor and table_exists:
-            self._append_log(df, "upsert", spark)
+            markers = None if deletes is None else self._delete_markers(deletes)
+            self._append_log(df, "upsert", spark, markers=markers)
             self._maybe_compact(spark)
             self._maybe_sync_catalog(spark)
             return
+        self._merge_rewrite(df, spark, table_exists)
+        if deletes is not None:
+            self.delete(deletes, spark)
+
+    def _merge_rewrite(
+        self, df: DataFrame, spark: SparkSession, table_exists: bool
+    ) -> None:
+        """The eager (COPY_ON_WRITE, or MOR genesis) upsert: merge the
+        batch with the rows it can collide with and rewrite them."""
         incoming = df.withColumn("__hudi_src", F.lit(1))
         # manifest tables keep the partition column as a DATA column
         # (no hive dirs), so the key-envelope file-group path below is
@@ -2090,7 +2206,7 @@ class HudiTable:
             merged, self.record_key, self.precombine, tiebreak="__hudi_src"
         ).drop("__hudi_src")
         if partitioned:
-            self._rewrite_partitions(result, spark)
+            self._rewrite_partitions(result, spark, touched=(parts, has_null))
         else:
             self._atomic_rewrite(result, spark)
         self._maybe_sync_catalog(spark)
@@ -2110,15 +2226,9 @@ class HudiTable:
         if not self.exists(spark):
             return
         if self.is_mor:
-            cols = [self.record_key]
-            if self.precombine in keys_df.columns:
-                cols.append(self.precombine)
-            if (
-                self.partition_field
-                and self.partition_field in keys_df.columns
-            ):
-                cols.append(self.partition_field)
-            self._append_log(keys_df.select(*cols).distinct(), "delete", spark)
+            self._append_log(
+                self._delete_markers(keys_df).distinct(), "delete", spark
+            )
             self._maybe_compact(spark)
             self._maybe_sync_catalog(spark)
             return
@@ -2177,21 +2287,11 @@ class HudiTable:
             if not parts and not has_null:
                 return
             scoped = existing.filter(self._partition_scope(parts, has_null))
-            remaining = _survivors(scoped)
-            # a partition whose every row is deleted has nothing left for
-            # dynamic overwrite to replace — find those BEFORE the rewrite
-            # (remaining's plan reads the pre-rewrite files), then drop
-            # their directories after. None stands in for the null
-            # partition (__HIVE_DEFAULT_PARTITION__ on disk).
-            r_parts, r_null = self._touched_partitions(remaining)
-            emptied = set(parts) - set(r_parts)
-            if has_null and not r_null:
-                emptied.add(None)
-            self._rewrite_partitions(remaining, spark)
-            if emptied:
-                self._drop_partitions(
-                    sorted(emptied, key=lambda v: (v is None, v))
-                )
+            # a touched partition whose every row is deleted stages no
+            # directory; the swap drops it
+            self._rewrite_partitions(
+                _survivors(scoped), spark, touched=(parts, has_null)
+            )
         else:
             if self._is_manifest:
                 # file-group pruning, delete form: only files whose key
@@ -3230,44 +3330,70 @@ class HudiTable:
             key_unique=unique,
         )
 
-    def _rewrite_partitions(self, df: DataFrame, spark: SparkSession) -> None:
-        """Dynamic partition overwrite: materialize the merge result to
-        staging (the source table is being read), then re-read staging
-        and overwrite only the partitions present in it — untouched
-        partitions' files are never opened or rewritten. A crash before
-        the final write leaves the live table in its pre-merge state
-        (re-running the batch is idempotent by the upsert contract)."""
+    def _rewrite_partitions(
+        self,
+        df: DataFrame,
+        spark: SparkSession,
+        touched: tuple[list, bool] | None = None,
+        rebalance: bool = True,
+    ) -> None:
+        """Replace the partitions ``df`` covers with its rows: write
+        ``df`` ONCE to a sibling staging dir (the source table is being
+        read), then swap each staged ``field=value`` directory into
+        place — live → backup, staged → live — and drop the backups.
+        Untouched partitions' files are never opened or moved.
+
+        ``touched`` is the ``(values, has_null)`` scope the caller
+        merged over; touched partitions that staged no rows (the merge
+        emptied them — every row deleted, or every key moved to another
+        partition) are dropped. Without it only staged partitions are
+        replaced.
+
+        ``rebalance`` shuffles ``df`` by the partition column first, so
+        a small partition is one file and AQE splits a large one;
+        callers whose frame is already shaped (cluster, rectify) pass
+        False to keep their layout.
+
+        A crash before the first swap leaves the live table in its
+        pre-merge state (re-running the batch is idempotent by the
+        upsert contract); mid-swap, each partition is old, new, or
+        parked in the backup dir. Local-fs only (see _local_fs_path)."""
         if self._is_manifest:
             raise AssertionError(
                 "internal: manifest tables never use the hive-layout "
                 "rewrite — mutations route through the file-group paths "
                 "and _manifest_overwrite_partitions"
             )
-        local = self._local_fs_path()
-        staging = f"{local.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy(self.partition_field).parquet(staging)
         import shutil
 
-        (
-            # explicit schema: staging may be empty (e.g. a delete
-            # that emptied every touched partition) and empty dirs
-            # can't infer one. partitionOverwriteMode rides as a
-            # PER-WRITE option, NOT a session conf flip: concurrent
-            # writers on one session (the demux thread pool) raced on
-            # the shared conf — thread A restoring STATIC while thread
-            # B's overwrite planned could truncate B's whole table.
-            spark.read.schema(df.schema).parquet(staging)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(self.partition_field)
-            .parquet(local)
+        local = self._local_fs_path().rstrip("/")
+        suffix = uuid.uuid4().hex[:8]
+        staging = f"{local}__staging_{suffix}"
+        backup = f"{local}__prev_{suffix}"
+        if rebalance:
+            df = df.hint("rebalance", self.partition_field)
+        df.write.mode("overwrite").partitionBy(self.partition_field).parquet(
+            staging
         )
+        prefix = f"{self.partition_field}="
+        staged = sorted(d for d in os.listdir(staging) if d.startswith(prefix))
+        os.makedirs(backup)
+        for d in staged:
+            live = os.path.join(local, d)
+            if os.path.exists(live):
+                os.replace(live, os.path.join(backup, d))
+            os.replace(os.path.join(staging, d), live)
+        if touched is not None:
+            parts, has_null = touched
+            self._drop_partitions(parts + [None] * has_null, keep=set(staged))
+        shutil.rmtree(backup)
         shutil.rmtree(staging)
 
-    def _drop_partitions(self, values: list) -> None:
-        """Physically remove partition directories (delete may empty a
-        partition entirely; dynamic overwrite only replaces partitions
-        that still have rows).
+    def _drop_partitions(self, values: list, keep: set[str]) -> None:
+        """Physically remove the directories of partition ``values``
+        (``None`` = the null partition) except those named in ``keep``:
+        a rewrite may empty a touched partition entirely, and the swap
+        only replaces partitions that still have rows.
 
         Matching is by UNESCAPED value against the listed directories,
         not by constructing ``k=str(v)``: Spark percent-escapes special
@@ -3279,15 +3405,13 @@ class HudiTable:
         from urllib.parse import unquote
 
         local = self._local_fs_path()
-        if not os.path.isdir(local):
-            return
         want = {
             "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
             for v in values
         }
         prefix = f"{self.partition_field}="
         for d in os.listdir(local):
-            if not d.startswith(prefix):
+            if not d.startswith(prefix) or d in keep:
                 continue
             leaf = d[len(prefix):]
             # unquote inverts Spark's escapePathName for any value Spark

@@ -187,6 +187,22 @@ def read_binlog_stream(
     return reader.load()
 
 
+def _compact_order(
+    batch_df: DataFrame, precombine: str, binlog_name_prefix: str
+) -> list:
+    """compact_batch's latest-first ordering: precombine, then the
+    binlog position where the envelope carries it."""
+    order = [F.col(precombine).desc()]
+    cols = set(batch_df.columns)
+    if "binlog_file" in cols:
+        order.append(
+            _parsed_binlog_index(binlog_name_prefix).desc_nulls_last()
+        )
+    if "binlog_offset" in cols:
+        order.append(F.col("binlog_offset").desc_nulls_last())
+    return order
+
+
 def compact_batch(
     batch_df: DataFrame,
     record_key: str,
@@ -207,15 +223,9 @@ def compact_batch(
     would let a foreign file's index outrank this series' tombstone —
     a cross-series comparison with no meaning. Foreign/unparseable
     names rank like positionless events (nulls last)."""
-    order = [F.col(precombine).desc()]
-    cols = set(batch_df.columns)
-    if "binlog_file" in cols:
-        order.append(
-            _parsed_binlog_index(binlog_name_prefix).desc_nulls_last()
-        )
-    if "binlog_offset" in cols:
-        order.append(F.col("binlog_offset").desc_nulls_last())
-    w = Window.partitionBy(record_key).orderBy(*order)
+    w = Window.partitionBy(record_key).orderBy(
+        *_compact_order(batch_df, precombine, binlog_name_prefix)
+    )
     return (
         batch_df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -236,14 +246,15 @@ def apply_cdc_batch(
     by timestamp with the newer upsert already in the table — a
     key-only delete is unconditional and would kill the newer row.
 
-    Cost note (100 TB): a mixed-op micro-batch issues two table writes
-    (upsert, then delete). On MERGE_ON_READ both are O(batch) delta-log
-    appends — which is why streaming CDC targets should be MOR-typed
+    A mixed-op micro-batch is ONE table write:
+    ``table.upsert(upserts, deletes=...)``. On MERGE_ON_READ that is a
+    single O(batch) delta-log append holding two delta commits — which
+    is why streaming CDC targets should be MOR-typed
     (``hoodie.table.type=MERGE_ON_READ`` in the demux props), Hudi's
-    own guidance for write-heavy streams. On COPY_ON_WRITE each pass
-    re-reads and rewrites the touched partitions, so a mixed batch pays
-    that twice; COW remains correct (and fine for low-rate streams or
-    bounded backfills) but is not the scale path here.
+    own guidance for write-heavy streams. On COPY_ON_WRITE the upsert
+    and the delete each re-read and rewrite the touched partitions;
+    COW remains correct (and fine for low-rate streams or bounded
+    backfills) but is not the scale path here.
 
     Malformed events are skipped BEFORE compaction — and LOGGED with a
     per-op breakdown, so the drop is observable (the demux route's
@@ -254,7 +265,7 @@ def apply_cdc_batch(
     case-insensitively after trimming — an emitter shouting ``DELETE``
     or trailing a newline must not have its tombstone silently applied
     as an UPSERT, and an unknown op like ``truncate`` must not be
-    applied as one either; previously any non-'delete' string upserted).
+    applied as one either).
 
     ``binlog_name_prefix`` scopes compact_batch's position tie-break to
     the stream's actual binlog series (see _parsed_binlog_index) — it
@@ -263,73 +274,75 @@ def apply_cdc_batch(
     # regexp, not F.trim: Spark's trim strips only SPACE characters,
     # while the sloppy-producer case is a trailing newline/tab
     op_n = F.regexp_replace(F.lower(F.col("op")), r"^\s+|\s+$", "")
-    keep = op_n.isin("insert", "update", "delete") & F.col(
-        table.record_key
-    ).isNotNull()
-    # The skip must be OBSERVABLE: an upstream emitting 'truncate' or
-    # corrupt keys would otherwise lose events with no trace — but the
-    # audit must not re-read the batch SOURCE every trigger (the r10
-    # shape ran an unconditional filter+groupBy straight against it).
-    # The batch is tagged with the keep flag and persisted, so the
-    # source is scanned ONCE; the audit breakdown and the compaction
-    # both run over the cache. ``coalesce(keep, false)`` — not ``keep``
-    # alone — so NULL-op rows land in the complement instead of
-    # vanishing from both sides of the tag.
-    # persists happen INSIDE the try: compact_batch raises on a batch
-    # missing the precombine column, and a persist taken before the try
-    # would leak its cached blocks on every such failed micro-batch of
-    # a long-lived driver that retries triggers
-    tagged = compacted = None
+    # ``coalesce(..., false)`` so NULL-op rows land among the skipped
+    # rows instead of vanishing from both sides of the tag
+    keep = F.coalesce(
+        op_n.isin("insert", "update", "delete")
+        & F.col(table.record_key).isNotNull(),
+        F.lit(False),
+    )
+    is_del = op_n == "delete"
+    staged = None
     try:
-        tagged = batch_df.withColumn(
-            "__cdc_keep", F.coalesce(keep, F.lit(False))
-        ).persist()
-        compacted = compact_batch(
-            tagged.filter(F.col("__cdc_keep")).drop("__cdc_keep"),
-            table.record_key,
-            table.precombine,
-            binlog_name_prefix=binlog_name_prefix,
-        ).persist()
-        upserts = compacted.filter(op_n != "delete").drop("op", "db", "table")
-        # the precombine column is unconditionally present here:
-        # compact_batch's window ordered by it, so a batch lacking it
-        # raised before this line
-        deletes = compacted.filter(op_n == "delete").select(
-            table.record_key, table.precombine
+        # One persisted frame, the source scanned once: kept events are
+        # compacted to their latest op per key (compact_batch's window,
+        # partitioned by the keep flag too so skipped rows never compete
+        # with kept ones); skipped events stay, for the audit. Persisting
+        # inside the try: the window raises on a batch missing the
+        # precombine column, and must not leak a cache per failed
+        # trigger of a long-lived driver.
+        tagged = batch_df.withColumn("__cdc_keep", keep)
+        w = Window.partitionBy("__cdc_keep", table.record_key).orderBy(
+            *_compact_order(batch_df, table.precombine, binlog_name_prefix)
         )
-        # first action: a FULL aggregate (not isEmpty — its limit-1
-        # short-circuit would only part-fill the cache), materializing
-        # both caches and yielding the per-route counts the write gates
-        # below need. The write gates use COMPACTED counts, not the raw
-        # batch's: a key whose delete lost to a newer upsert leaves the
-        # delete route empty, and gating on the raw count would commit
-        # an empty (seq-allocating) delete entry to the MOR log.
-        routes = {
-            bool(r["is_del"]): r["n"]
-            for r in compacted.groupBy((op_n == "delete").alias("is_del"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        dropped = (
-            tagged.filter(~F.col("__cdc_keep"))
-            .groupBy(F.coalesce(op_n, F.lit("<null op>")).alias("op"))
+        staged = (
+            tagged.withColumn("__rn", F.row_number().over(w))
+            .filter(~F.col("__cdc_keep") | (F.col("__rn") == 1))
+            .drop("__rn")
+            .persist()
+        )
+        # one FULL aggregate (not isEmpty — a limit-1 short-circuit would
+        # only part-fill the cache): per-route counts of the COMPACTED
+        # events, which gate the writes (a key whose delete lost to a
+        # newer upsert leaves the delete route empty, and an empty
+        # route must not commit a seq-allocating log entry), plus the
+        # per-op count of the skipped events
+        routes: dict[bool, int] = {}
+        dropped: dict[str, int] = {}
+        for r in (
+            staged.groupBy(
+                F.when(F.col("__cdc_keep"), is_del).alias("is_del"),
+                F.when(
+                    ~F.col("__cdc_keep"), F.coalesce(op_n, F.lit("<null op>"))
+                ).alias("bad_op"),
+            )
             .count()
             .collect()
-        )
+        ):
+            if r["bad_op"] is None:
+                routes[r["is_del"]] = r["count"]
+            else:
+                dropped[r["bad_op"]] = r["count"]
         if dropped:
             _LOG.warning(
                 "apply_cdc_batch(%s): skipped %d malformed event(s) "
                 "(NULL %s key, NULL op, or op outside insert|update|delete): %s",
                 table.table_name,
-                sum(r["count"] for r in dropped),
+                sum(dropped.values()),
                 table.record_key,
-                {r["op"]: r["count"] for r in dropped},
+                dropped,
             )
+        kept = staged.filter(F.col("__cdc_keep")).drop("__cdc_keep")
+        upserts = kept.filter(~is_del).drop("op", "db", "table")
+        # the precombine column is unconditionally present here: the
+        # window ordered by it, so a batch lacking it raised above
+        deletes = kept.filter(is_del).select(table.record_key, table.precombine)
         if routes.get(False, 0):
-            table.upsert(upserts, spark)
-        if routes.get(True, 0):
+            table.upsert(
+                upserts, spark, deletes=deletes if routes.get(True, 0) else None
+            )
+        elif routes.get(True, 0):
             table.delete(deletes, spark)
     finally:
-        for cached in (compacted, tagged):
-            if cached is not None:
-                cached.unpersist()
+        if staged is not None:
+            staged.unpersist()

@@ -56,6 +56,40 @@ def test_partition_pruning_on_partitioned_lake(spark, tmp_path):
     assert audit.has_partition_filters(pruned), audit.executed_plan(pruned)
 
 
+def test_point_lookup_in_list_replaces_semi_join(spark, tmp_path):
+    """A small probe set of integral keys is collected whole into the
+    IN-list, which selects exactly what the semi-join would: base and
+    log are not joined to the key frame again. Floating keys do not
+    round-trip through Python exactly and keep the semi-join."""
+    from hudi_spark_utilities_plus_spark.lake import HudiTable
+
+    for key_type, cast in (("long", int), ("double", float)):
+        t = HudiTable(
+            path=str(tmp_path / f"pl_{key_type}"),
+            record_key="id",
+            precombine="ver",
+            table_type="MERGE_ON_READ",
+        )
+        schema = f"id {key_type}, ver int, v string"
+        t.bulk_insert(
+            spark.createDataFrame(
+                [(cast(i), 1, f"v{i}") for i in range(10)], schema
+            )
+        )
+        t.upsert(spark.createDataFrame([(cast(4), 2, "u4")], schema))
+        probe = spark.createDataFrame([(cast(3),), (cast(4),)], f"id {key_type}")
+        got = t.read(spark, keys=probe)
+        assert sorted((r["id"], r["v"]) for r in got.collect()) == [
+            (3, "v3"),
+            (4, "u4"),
+        ]
+        plan = audit.executed_plan(got)
+        if key_type == "long":
+            assert "LeftSemi" not in plan, plan
+        else:
+            assert "LeftSemi" in plan, plan
+
+
 def test_no_cartesian_in_near_dedup(spark, sf_dir):
     plan = audit.executed_plan(QUERIES["dedup_minhash_lsh"](spark, sf_dir))
     assert "CartesianProduct" not in plan

@@ -334,6 +334,135 @@ def test_apply_cdc_batch_op_totality_and_null_key_skip(spark, tmp_path, caplog):
     assert "'<null op>': 1" in msg and "'truncate': 1" in msg and "'insert': 1" in msg
 
 
+_CDC_ROW = (
+    "op string, db string, `table` string, id long, data string, ts long, "
+    "binlog_file string, binlog_offset long"
+)
+
+
+def _apply_as_two_commits(table, batch, spark):
+    """The reference apply: skip malformed events, compact per key,
+    then ``upsert`` the non-deletes and ``delete`` the delete keys as
+    two separate table writes."""
+    from hudi_spark_utilities_plus_spark.streaming.cdc import compact_batch
+
+    op_n = F.regexp_replace(F.lower(F.col("op")), r"^\s+|\s+$", "")
+    kept = batch.filter(
+        op_n.isin("insert", "update", "delete") & F.col("id").isNotNull()
+    )
+    compacted = compact_batch(kept, "id", "ts").collect()
+    ups = [r for r in compacted if r["op"].strip().lower() != "delete"]
+    dels = [r for r in compacted if r["op"].strip().lower() == "delete"]
+    if ups:
+        table.upsert(
+            spark.createDataFrame(ups, _CDC_ROW).drop("op", "db", "table"), spark
+        )
+    if dels:
+        table.delete(
+            spark.createDataFrame([(r["id"], r["ts"]) for r in dels], "id long, ts long"),
+            spark,
+        )
+
+
+def test_single_append_cdc_apply_matches_two_commits(spark, tmp_path, caplog):
+    """Twin MERGE_ON_READ tables fed the same CDC batches — one through
+    apply_cdc_batch (one log append per batch, upserts at seq s and
+    markers at s+1), one through separate upsert() and delete() —
+    agree on every reader of the timeline: snapshot, time travel at
+    every seq, incremental and CDC reads from every cursor, and the
+    head seq. With an even inline-compaction threshold both compact
+    after the same batch. A small batch is one log file, and the
+    malformed-event warning keeps its per-op counts."""
+    import logging
+
+    from hudi_spark_utilities_plus_spark.lake import HudiTable
+    from hudi_spark_utilities_plus_spark.streaming.cdc import apply_cdc_batch
+
+    opts = {
+        "hoodie.compact.inline": "true",
+        "hoodie.compact.inline.max.delta.commits": "4",
+    }
+    twins = [
+        HudiTable(
+            path=str(tmp_path / name),
+            record_key="id",
+            precombine="ts",
+            table_name=name,
+            table_type="MERGE_ON_READ",
+            options=dict(opts),
+        )
+        for name in ("single", "pair")
+    ]
+    genesis = spark.createDataFrame(
+        [(k, f"g{k}", 0, "mysql-bin.000001", k) for k in range(12)],
+        "id long, data string, ts long, binlog_file string, binlog_offset long",
+    )
+    for t in twins:
+        t.bulk_insert(genesis)
+
+    def ev(op, k, ts, off):
+        return (op, "db", "t", k, f"{op[:1]}{k}@{ts}", ts, "mysql-bin.000001", off)
+
+    batches = [
+        [ev("update", 1, 5, 100), ev("update", 1, 6, 101), ev("insert", 20, 5, 102),
+         ev("delete", 2, 5, 103), ev("update", 3, 5, 104), ev("delete", 3, 6, 105)],
+        [ev("insert", 21, 9, 200), ev("delete", 20, 9, 201), ev("update", 4, 9, 202),
+         ev("delete", 5, 8, 203), ev("update", 5, 9, 204), ev("delete", 6, 9, 205)],
+        [ev("update", 7, 12, 300), ev("delete", 21, 12, 301), ev("insert", 2, 12, 302),
+         ev("delete", 8, 12, 303), (None, "db", "t", 9, "x", 12, "mysql-bin.000001", 304),
+         ev("truncate", 9, 12, 305), ev("truncate", 10, 12, 306),
+         ev("insert", None, 12, 307)],
+    ]
+
+    def rows(df):
+        return sorted(repr(tuple(r[c] for c in sorted(df.columns))) for r in df.collect())
+
+    def same_timeline():
+        a, b = twins
+        head = a.latest_commit_seq(spark)
+        assert head == b.latest_commit_seq(spark)
+        assert a._seq_base() == b._seq_base()
+        assert rows(a.read(spark)) == rows(b.read(spark))
+        for s in range(max(-1, a._seq_base() - 1), head + 1):
+            assert rows(a.read(spark, as_of_seq=s)) == rows(b.read(spark, as_of_seq=s)), s
+            assert rows(a.read_incremental(spark, s)) == rows(b.read_incremental(spark, s)), s
+            assert rows(a.read_cdc(spark, s)) == rows(b.read_cdc(spark, s)), s
+
+    log_files = lambda t: [  # noqa: E731
+        f for f in os.listdir(t._log_path) if f.endswith(".parquet")
+    ]
+    for i, events in enumerate(batches):
+        batch = spark.createDataFrame(events, _CDC_ROW)
+        caplog.clear()
+        with caplog.at_level(
+            logging.WARNING, logger="hudi_spark_utilities_plus_spark.streaming.cdc"
+        ):
+            apply_cdc_batch(twins[0], batch, spark)
+        _apply_as_two_commits(twins[1], batch, spark)
+        if i == 0:
+            # two delta commits, one append, one file
+            assert twins[0].latest_commit_seq(spark) == 1
+            assert len(log_files(twins[0])) == 1
+            assert len(log_files(twins[1])) >= 2
+            same_timeline()
+        elif i == 1:
+            # seqs 0..3 reach the threshold of 4: both compacted
+            for t in twins:
+                assert t._seq_base() == 4 and not t._has_log(spark)
+            assert rows(twins[0].read(spark)) == rows(twins[1].read(spark))
+        else:
+            assert twins[0].latest_commit_seq(spark) == 5
+            same_timeline()
+            msgs = [r.getMessage() for r in caplog.records]
+            assert any(
+                "skipped 4 malformed" in m
+                and "'<null op>': 1" in m
+                and "'truncate': 2" in m
+                and "'insert': 1" in m
+                for m in msgs
+            ), msgs
+
+
 @pytest.mark.streaming
 def test_demux_many_tables_parallel_apply(spark, tmp_path):
     """≥4 tables in one micro-batch: the thread-pooled per-table applies

@@ -243,6 +243,82 @@ def test_hudi_partitioned_delete_drops_emptied_partition(spark, tmp_path):
     assert not os.path.exists(os.path.join(t.path, "dt=d1"))
 
 
+def test_hudi_partitioned_upsert_drops_partition_emptied_by_moved_key(
+    spark, tmp_path
+):
+    """An upsert whose merge moves a partition's only key elsewhere
+    leaves that touched partition with no rows: its old files must go,
+    or the moved key comes back from them as a duplicate."""
+    schema = "id int, ver int, p string"
+    t = HudiTable(
+        path=str(tmp_path / "mv"),
+        record_key="id",
+        precombine="ver",
+        partition_field="p",
+    )
+    t.upsert(spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], schema))
+    t.upsert(spark.createDataFrame([(1, 2, "c"), (1, 1, "a")], schema))
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (1, 2, "c"),
+        (2, 1, "b"),
+    ]
+    assert not os.path.exists(os.path.join(t.path, "p=a"))
+
+
+def _parquet_stats(d: str) -> dict:
+    return {
+        f: (os.stat(os.path.join(d, f)).st_ino, os.path.getmtime(os.path.join(d, f)))
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    }
+
+
+def test_hudi_partition_swap_layout(spark, tmp_path):
+    """A partitioned COW upsert writes each touched partition once, as
+    one file for a small batch, and leaves untouched partitions' files
+    in place: same names, inodes and mtimes. AQE's partition coalescing
+    is off for the write, so the single file comes from the rewrite's
+    own rebalance and not from the merge happening to coalesce."""
+    t = HudiTable(
+        path=str(tmp_path / "sw"),
+        record_key="id",
+        precombine="ver",
+        partition_field="p",
+    )
+    schema = "id int, ver int, v string, p string"
+    t.bulk_insert(
+        spark.createDataFrame(
+            [(i, 1, f"v{i}", f"p{i % 4}") for i in range(40)], schema
+        ).repartition(4)
+    )
+    untouched = {
+        p: _parquet_stats(os.path.join(t.path, f"p={p}")) for p in ("p2", "p3")
+    }
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        t.upsert(
+            spark.createDataFrame(
+                [(0, 2, "u0", "p0"), (1, 2, "u1", "p1"), (100, 1, "n", "p0")],
+                schema,
+            ).repartition(3)
+        )
+    finally:
+        spark.conf.set(coalesce, prior)
+    for p in ("p0", "p1"):
+        files = _parquet_stats(os.path.join(t.path, f"p={p}"))
+        assert len(files) == 1, (p, files)
+    for p, before in untouched.items():
+        assert _parquet_stats(os.path.join(t.path, f"p={p}")) == before, p
+    # no staging or backup dir survives the swap
+    assert sorted(os.listdir(tmp_path)) == ["sw"]
+    state = {r["id"]: (r["v"], r["p"]) for r in t.read(spark).collect()}
+    assert len(state) == 41
+    assert state[0] == ("u0", "p0") and state[1] == ("u1", "p1")
+    assert state[100] == ("n", "p0") and state[2] == ("v2", "p2")
+
+
 def test_hudi_mor_log_write_read_merge_compact(spark, tmp_path):
     """MERGE_ON_READ: upserts/deletes append to the delta log (base
     files untouched), read() merges, compact() folds the log away."""
@@ -4023,15 +4099,11 @@ print("OK")
 
 
 def test_tune_runtime_respects_startup_shuffle_conf():
-    """r17 guard (ADVICE r16): a shuffle-partition value configured at
-    STARTUP — even the literal 200, previously indistinguishable from
-    Spark's default — is never clobbered by tune_runtime's core-count
-    derive; an untouched default still is. Subprocess: the decision
-    reads the startup SparkConf, which the shared fixture already
-    spent."""
-    import subprocess
-    import sys
-
+    """A shuffle-partition value configured at STARTUP — even the
+    literal 200, which equals Spark's default — is never clobbered by
+    tune_runtime's core-count derive; an untouched default still is.
+    Subprocess: the decision reads the startup SparkConf, which the
+    shared fixture already spent."""
     import subprocess as sp
     import sys
 
@@ -4170,7 +4242,7 @@ def test_log_read_schema_matches_merge_inference(spark, tmp_path):
 
 
 def test_exists_fs_probe_edges(spark, tmp_path):
-    """r17: exists() decides driver-side on local paths (no Spark
+    """exists() decides driver-side on local paths (no Spark
     footer-inference job). Missing dir / dir with only non-parquet
     files => False; any parquet data file (including nested) => True."""
     t = HudiTable(path=str(tmp_path / "t"), record_key="k", precombine="ts")
@@ -4189,3 +4261,28 @@ def test_exists_fs_probe_edges(spark, tmp_path):
     )
     tp.bulk_insert(spark.createDataFrame([(1, 10, "x")], "k long, ts long, d string"))
     assert tp.exists(spark)  # nested hive-layout files found
+
+
+def test_exists_ignores_hidden_parquet(spark, tmp_path):
+    """A crashed writer's ``_temporary/0/part-0.parquet`` (or any file
+    under a hidden dir, or a hidden file) in an otherwise empty root is
+    not a table: Spark's file index would read nothing there."""
+    t = HudiTable(path=str(tmp_path / "t"), record_key="k", precombine="ts")
+    tmp = tmp_path / "t" / "_temporary" / "0"
+    os.makedirs(tmp)
+    (tmp / "part-0.parquet").write_bytes(b"PAR1")
+    os.makedirs(tmp_path / "t" / ".hidden")
+    (tmp_path / "t" / ".hidden" / "part-1.parquet").write_bytes(b"PAR1")
+    (tmp_path / "t" / "_part-2.parquet").write_bytes(b"PAR1")
+    assert not t.exists(spark)
+    # a `_`-prefixed PARTITION dir is visible, as it is to Spark
+    tp = HudiTable(
+        path=str(tmp_path / "p"),
+        record_key="k",
+        precombine="ts",
+        partition_field="_d",
+    )
+    tp.bulk_insert(
+        spark.createDataFrame([(1, 10, "x")], "k long, ts long, _d string")
+    )
+    assert tp.exists(spark)
