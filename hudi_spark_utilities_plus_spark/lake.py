@@ -129,6 +129,23 @@ def merge_latest_wins(
     )
 
 
+def _widened(memo, schema):
+    """The base-schema memo after an append of ``schema``: columns the
+    batch lacks stay (older files carry them; the explicit-schema read
+    null-fills them for the new files), new columns are added, and a
+    column the batch retypes makes it None, so the next read infers."""
+    from pyspark.sql.types import StructField, StructType
+
+    have = {f.name: f.dataType for f in memo.fields}
+    added = []
+    for f in schema.fields:
+        if f.name not in have:
+            added.append(StructField(f.name, f.dataType, True))
+        elif f.dataType != have[f.name]:
+            return None
+    return StructType(list(memo.fields) + added)
+
+
 def _hidden_name(name: str) -> bool:
     """Spark's file-index rule for names it never reads: a ``.`` prefix,
     or a ``_`` prefix on anything but a ``col=value`` partition dir."""
@@ -386,15 +403,17 @@ class HudiTable:
     _lock_local: threading.local = field(
         default_factory=threading.local, repr=False, compare=False
     )
-    # per-instance base-schema memo (r17): Spark 4 launches a 1-task
-    # footer job for EVERY `spark.read.parquet(...).schema` inference,
-    # so each exists() probe / merge read paid one. The memo holds the
-    # schema from THIS instance's own genesis write or from one actual
-    # inference, normalized all-nullable (inference's posture), and is
-    # dropped whenever this instance rewrites base files — the next
-    # read re-infers once. Unpartitioned non-manifest tables only: on
-    # hive layouts the partition column's type comes from directory-
-    # value inference, which a cached write-side schema would override.
+    # per-instance base-schema memo: Spark 4 launches a 1-task footer
+    # job for EVERY `spark.read.parquet(...).schema` inference, so each
+    # merge read would pay one. The memo holds the schema from THIS
+    # instance's own genesis write, full rewrite or one actual
+    # inference, normalized all-nullable (inference's posture); an
+    # append by this instance adds its new columns (_widened). It is
+    # dropped whenever this instance rewrites base files, and when an
+    # append retypes a column — the next read re-infers once.
+    # Unpartitioned non-manifest tables only: on hive layouts the
+    # partition column's type comes from directory-value inference,
+    # which a cached write-side schema would override.
     # Trust model matches the other per-instance memos (seq store,
     # lock): an EXTERNAL writer evolving the schema mid-lifetime is
     # outside the single-writer-per-instance contract; cross-process
@@ -613,13 +632,18 @@ class HudiTable:
         to carry (writer invariant: each entry is the batch frame —
         which always holds the record key — plus __hudi_op/__hudi_seq),
         so an explicit schema of just those fields is exact with no
-        verification; data-column types come from ``base_schema``.
+        verification; data-column types come from ``base_schema``. The
+        partition column of a partitioned table is the exception: its
+        values live in the log's directory names, whose type Spark
+        infers from the log's own directories, so a request for it
+        takes the mergeSchema read.
         ``columns=None``: the full merge read — exact only under the
         footer-verified contract of ``_log_full_schema``. Either path
-        falls back to the r16-and-earlier mergeSchema read whenever the
-        cheap schema is unavailable; correctness never depends on the
-        fast path."""
-        if columns is not None:
+        falls back to the mergeSchema read whenever the cheap schema is
+        unavailable; correctness never depends on the fast path."""
+        if columns is not None and not (
+            self.partition_field and self.partition_field in columns
+        ):
             from pyspark.sql.types import (
                 LongType,
                 StringType,
@@ -859,6 +883,18 @@ class HudiTable:
             log = log.join(semi_keys, self.record_key, "left_semi")
         if as_of_seq is not None:
             log = log.filter(F.col("__hudi_seq") <= as_of_seq)
+        out = self._merge_log(base, log)
+        if pfilter is not None:
+            # AFTER the merge: a row's partition membership is decided
+            # by its WINNING version (a key may have moved partitions
+            # via the log), so pre-merge row filtering would be unsound
+            out = out.filter(pfilter)
+        return out
+
+    def _merge_log(self, base: DataFrame, log: DataFrame) -> DataFrame:
+        """The MERGE_ON_READ snapshot of ``base`` + delta-log rows
+        ``log``: latest-wins per key by (unconditional-delete,
+        precombine, commit seq), winners with a delete op dropped."""
         tagged_base = base.withColumn("__hudi_op", F.lit("upsert")).withColumn(
             "__hudi_seq", F.lit(-1).cast("long")
         )
@@ -879,17 +915,11 @@ class HudiTable:
             F.col(self.precombine).desc_nulls_last(),
             F.col("__hudi_seq").desc(),
         )
-        out = (
+        return (
             live.withColumn("__hudi_rn", F.row_number().over(w))
             .filter((F.col("__hudi_rn") == 1) & (F.col("__hudi_op") != "delete"))
             .drop("__hudi_rn", "__hudi_op", "__hudi_seq", "__hudi_barrier")
         )
-        if pfilter is not None:
-            # AFTER the merge: a row's partition membership is decided
-            # by its WINNING version (a key may have moved partitions
-            # via the log), so pre-merge row filtering would be unsound
-            out = out.filter(pfilter)
-        return out
 
     def latest_commit_seq(self, spark: SparkSession) -> int:
         """Highest delta-commit seq in the log (-1 = no log commits) —
@@ -978,9 +1008,9 @@ class HudiTable:
         spark = df.sparkSession
         df = self._with_partition_col(df, spark)
         if self.is_mor and self.exists(spark):
-            self._append_log(df, "upsert", spark)
-            self._maybe_compact(spark)
-        elif self._is_manifest:
+            self._commit_log(df, "upsert", spark)
+            return
+        if self._is_manifest:
             files, ranges, pranges = self._manifest_write_batch(df)
             # append commit: the head list is merged INSIDE the
             # conditional-put retry loop (a stale-head retry would drop
@@ -1040,10 +1070,16 @@ class HudiTable:
                 key_unique=ku,
             )
         else:
+            genesis = not self.exists(spark)
             self._writer(df, "append").parquet(self.path)
-            # genesis/append wrote exactly df's columns — memo so later
-            # reads/probes skip the footer-inference job
-            self._memo_base_schema(df.schema)
+            if genesis:
+                # the base is exactly df's columns: memo, so later reads
+                # skip the footer-inference job
+                self._memo_base_schema(df.schema)
+            elif self._base_schema_memo is not None:
+                self._base_schema_memo = _widened(
+                    self._base_schema_memo, df.schema
+                )
         self._maybe_sync_catalog(spark)
 
     # insert shares the bulk path in the parquet fallback (no small-file
@@ -1188,7 +1224,7 @@ class HudiTable:
         conditional-put provides for the commits themselves).
 
         Reentrant per (instance, thread): compound ops (cluster →
-        compact, upsert → inline compact) take it once."""
+        compact, insert_overwrite → compact) take it once."""
         if not self._lock_enabled():
             yield
             return
@@ -1589,23 +1625,36 @@ class HudiTable:
             cols.append(self.partition_field)
         return keys_df.select(*cols)
 
-    def _append_log(
+    def _commit_log(
         self,
         df: DataFrame,
         op: str,
         spark: SparkSession,
         markers: DataFrame | None = None,
     ) -> None:
-        """MERGE_ON_READ write path: append the batch to the delta log —
-        no base files are opened, the write cost is O(batch), and the
-        merge is deferred to read()/compact().
+        """The MERGE_ON_READ commit of upsert, delete and bulk_insert on
+        an existing table: one delta commit of ``df`` with op ``op``.
 
         ``markers`` (delete markers, see _delete_markers) ride in the
-        SAME append: ``df`` takes seq s and the markers seq s+1, so the
+        SAME write: ``df`` takes seq s and the markers seq s+1, so the
         timeline — time travel, incremental and CDC reads, restore and
         the inline-compaction count — is exactly that of two commits,
-        while the batch costs one write job and one set of files."""
-        seq = self._alloc_seq(spark, 1 if markers is None else 2)
+        while the batch costs one write job and one set of files.
+
+        The entry is appended to the delta log: no base files are
+        opened, the write cost is O(batch), and the merge is deferred to
+        read()/compact(). Inline compaction (Hudi's
+        ``hoodie.compact.inline``, off by default, and
+        ``hoodie.compact.inline.max.delta.commits``, default 5) replaces
+        the append on the commit whose seqs bring the delta commits
+        since the last compaction to the threshold: base, log and the
+        new entry are folded in one base rewrite (compact() with the
+        entry pending), and the entry is never written to the log or
+        read back from it. The base files, seqbase, seqmax and catalog
+        end state are those of appending and then calling compact(). A
+        two-seq commit compacts as a whole."""
+        n = 1 if markers is None else 2
+        seq = self._alloc_seq(spark, n)
         # materialize, don't guard: on a partitioned table a log entry
         # missing the partition column (typically a key-only delete
         # marker) would append at the log ROOT while sibling entries sit
@@ -1626,6 +1675,18 @@ class HudiTable:
                 .withColumn("__hudi_seq", F.lit(seq + 1).cast("long")),
                 allowMissingColumns=True,
             )
+        # commits SINCE the last compaction, not the absolute seq: seqs
+        # are monotonic across compactions (the seqbase watermark)
+        inline = (
+            str(self.options.get("hoodie.compact.inline", "false")).lower()
+            == "true"
+        )
+        max_commits = int(
+            self.options.get("hoodie.compact.inline.max.delta.commits", 5)
+        )
+        if inline and seq + n - self._seq_base() >= max_commits:
+            self.compact(spark, _pending=(entry, seq + n))
+            return
         # one shuffle to few right-sized tasks: a small batch writes one
         # file (per partition), where the upstream plan's partitioning
         # would write one per shuffle partition; AQE splits large ones
@@ -1634,52 +1695,51 @@ class HudiTable:
         else:
             entry = entry.hint("rebalance")
         self._writer(entry, "append").parquet(self._log_path)
-
-    def _maybe_compact(self, spark: SparkSession) -> None:
-        """Inline compaction trigger (Hudi's ``hoodie.compact.inline`` +
-        ``hoodie.compact.inline.max.delta.commits``, default 5): after a
-        log append, fold the log into the base once it has accumulated N
-        delta commits. Off unless ``hoodie.compact.inline=true`` —
-        matching Hudi's default of deferring compaction.
-
-        Checked once per log APPEND, so an ``upsert(df, deletes=...)``
-        batch — one append holding two delta commits — compacts at the
-        batch boundary: with an odd threshold the count can pass N on
-        the batch's upserts, and the compaction then folds the batch's
-        delete markers too, where a separate upsert and delete would
-        compact between them. The resulting state is the same."""
-        if str(self.options.get("hoodie.compact.inline", "false")).lower() != "true":
-            return
-        max_commits = int(
-            self.options.get("hoodie.compact.inline.max.delta.commits", 5)
-        )
-        # commits SINCE the last compaction, not the absolute seq: seqs
-        # are monotonic across compactions (the seqbase watermark), so
-        # comparing _next_seq alone would fire on EVERY commit once the
-        # absolute count passed the threshold — degrading MOR's O(batch)
-        # write to an O(table) rewrite per micro-batch and advancing the
-        # incremental horizon under every cursor
-        if self._next_seq(spark) - self._seq_base() >= max_commits:
-            self.compact(spark)
+        self._maybe_sync_catalog(spark)
 
     @_locked
-    def compact(self, spark: SparkSession) -> None:
+    def compact(
+        self,
+        spark: SparkSession,
+        *,
+        _pending: tuple[DataFrame, int] | None = None,
+    ) -> None:
         """Fold the MOR delta log into the base files (Hudi compaction):
-        materialize the merged state, rewrite the base, drop the log.
-        After compaction read() is a plain base scan again."""
-        if not (self.is_mor and self._has_log(spark)):
-            return
-        next_seq = self._next_seq(spark)  # watermark BEFORE the log drops
-        merged = self.read(spark)
-        self._atomic_rewrite(merged, spark)
+        rewrite the base as the merged snapshot, drop the log, and
+        record the next commit seq as the seqbase watermark. Later
+        commits continue from it, so incremental cursors stay valid (or
+        fail loudly, never silently empty) across compaction. After
+        compaction read() is a plain base scan again.
+
+        ``_pending`` is _commit_log's inline compaction: a delta commit
+        that is not written yet, as (entry rows, the seq after it),
+        folded in together with the log."""
         import shutil
 
+        has_log = self.is_mor and self._has_log(spark)
+        if _pending is None:
+            if not has_log:
+                return
+            # the watermark is taken BEFORE the log drops
+            entry, next_seq = None, self._next_seq(spark)
+        else:
+            entry, next_seq = _pending
+        log = self._log_read(spark) if has_log else None
+        if entry is not None:
+            log = (
+                entry
+                if log is None
+                else log.unionByName(entry, allowMissingColumns=True)
+            )
+        base = (
+            self._manifest_read(spark)
+            if self._is_manifest
+            else self._base_read(spark)
+        )
+        self._atomic_rewrite(self._merge_log(base, log), spark)
         log_local = f"{self._local_fs_path().rstrip('/')}__hudi_log"
         if os.path.exists(log_local):
             shutil.rmtree(log_local)
-        # persist the seq watermark: later commits continue from here, so
-        # incremental cursors stay valid (or fail loudly — never silently
-        # empty) across compaction
         with open(f"{self._local_fs_path().rstrip('/')}__hudi_seqbase", "w") as fh:
             fh.write(str(next_seq))
         # the log is gone: invalidate the allocation sidecar so the
@@ -2125,9 +2185,7 @@ class HudiTable:
         table_exists = self.exists(spark)
         if self.is_mor and table_exists:
             markers = None if deletes is None else self._delete_markers(deletes)
-            self._append_log(df, "upsert", spark, markers=markers)
-            self._maybe_compact(spark)
-            self._maybe_sync_catalog(spark)
+            self._commit_log(df, "upsert", spark, markers=markers)
             return
         self._merge_rewrite(df, spark, table_exists)
         if deletes is not None:
@@ -2226,11 +2284,9 @@ class HudiTable:
         if not self.exists(spark):
             return
         if self.is_mor:
-            self._append_log(
+            self._commit_log(
                 self._delete_markers(keys_df).distinct(), "delete", spark
             )
-            self._maybe_compact(spark)
-            self._maybe_sync_catalog(spark)
             return
         keys = keys_df.select(self.record_key).distinct()
         # COW conditional delete: when the marker frame carries the

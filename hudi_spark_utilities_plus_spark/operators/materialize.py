@@ -106,6 +106,15 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def release(df: DataFrame) -> None:
+    """Free the blocks behind a frame returned by ``materialize`` now,
+    instead of when the ContextCleaner collects its RDD. For a
+    producer that knows its last consumer has run; the frame must not
+    be used afterwards. Checkpoint files of the reliable branch stay
+    with the cleaner."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
     """``materialize`` fused with a row count: ONE job instead of two.
 

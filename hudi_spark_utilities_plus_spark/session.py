@@ -10,6 +10,7 @@ scale-oriented settings the reference left to submit scripts:
 - Arrow for pandas UDF exchange
 - parquet datetime rebase CORRECTED (``test-startup.sh:5``)
 - UTC session timezone so timestamp semantics are stable across hosts
+- a generated-class cache that holds a pipeline's working set
 """
 
 from __future__ import annotations
@@ -32,7 +33,19 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Generated-class cache size. Spark's default of 100 is below the
+    # distinct classes a lake pipeline (about 310: importer commits,
+    # lookups, CDC batches, snapshot reads) or a 15-query mix (about
+    # 260 per pass, 510 with the collect-side variants) keeps reusing,
+    # so the LRU evicted byte-identical classes before their next use
+    # and every cycle recompiled them; 1000 holds either with room to
+    # spare. A STATIC conf: the JVM reads it once, when the code
+    # generator first loads, so it only takes effect through the
+    # builder, never through tune_runtime.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
+
+_CODEGEN_CLASS = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
 
 
 def build_spark_session(
@@ -58,19 +71,23 @@ def build_spark_session(
     for k, v in merged.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # Shuffle parallelism tracks the session's ACTUAL core count (the
-    # bench runs at several $SPARK_GRAFT_CPUS values to measure scaling —
-    # a constant tuned for one core count mis-sizes every other run, and
-    # a cluster's capacity intent arrives via explicit conf). Guards
-    # (r17, ADVICE r16): (a) an explicitly configured value is detected
-    # via the STARTUP SparkConf (spark-defaults / --conf / builder), so
-    # a deliberate "200" is no longer mistaken for Spark's default —
-    # the value-equality heuristic remains only as tune_runtime's
-    # fallback where no startup conf is reachable; (b) the derive is
-    # LOCAL-master-only — on a cluster with dynamic allocation,
-    # defaultParallelism at session build can reflect zero registered
-    # executors and would mis-size the whole session. Results are
-    # partition-count independent by design — perf-only.
+    # Load the code generator on this thread, which sees the session's
+    # conf. Its class cache is sized when it first loads; left to the
+    # first plan, that can happen on a thread whose SQLConf lookup falls
+    # back to Spark's defaults (a ``df.rdd`` probe made from a new
+    # Python thread does), leaving 100 entries whatever the conf says.
+    # A no-op once the JVM has loaded it.
+    try:
+        spark.sparkContext._jvm.java.lang.Class.forName(_CODEGEN_CLASS)
+    except Exception:
+        pass
+    # Shuffle parallelism tracks the session's actual core count. An
+    # explicitly configured value, found in the startup SparkConf
+    # (spark-defaults, --conf or the builder), is kept even when it is
+    # Spark's default "200". The derive runs on local masters only: on
+    # a cluster with dynamic allocation, defaultParallelism at session
+    # build can reflect zero registered executors. Results do not
+    # depend on the partition count.
     if "spark.sql.shuffle.partitions" not in merged:
         try:
             sc = spark.sparkContext
@@ -96,7 +113,9 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
 
     Used when the harness hands us a session we didn't build (driver
     verify path): only runtime-mutable confs are set, silently skipping
-    any that this Spark build treats as static.
+    any that this Spark build treats as static. Static confs in
+    ``DEFAULT_CONF``, such as the codegen cache size, cannot be applied
+    here: the JVM has already read them.
     """
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
@@ -109,21 +128,13 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass
-    # Align shuffle parallelism with the host's actual core count ONLY
-    # when the session owner left Spark's 200 default in place (the
-    # default mainly taxes the stateful streaming ids: 200 state-store
-    # partitions per micro-batch on a 32-core box). A deliberately
-    # configured value — e.g. 2000 for a large cluster — is capacity
-    # intent and must not be clobbered; a startup-conf-set value is
-    # detected exactly, and the value-equality check remains for
-    # runtime sets. KNOWN EDGE (ADVICE r16, documented): an owner who
-    # deliberately chose the literal 200 via a runtime spark.conf.set
-    # is indistinguishable from Spark's default here and gets the
-    # core-count derive — inherent to the heuristic; results are
-    # partition-count independent by design either way (perf-only).
-    # LOCAL masters only: under dynamic allocation a cluster session's
-    # defaultParallelism at call time can reflect zero registered
-    # executors and would mis-size every later stage.
+    # Align shuffle parallelism with the host's core count only when the
+    # session owner left Spark's 200 default in place: a value set in
+    # the startup conf is kept, and so is any runtime value other than
+    # 200. A deliberate runtime set of exactly 200 cannot be told apart
+    # from the default and gets the core-count value; results do not
+    # depend on the partition count. Local masters only, as in
+    # build_spark_session.
     try:
         sc = spark.sparkContext
         if (

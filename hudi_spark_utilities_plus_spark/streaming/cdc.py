@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..lake import HudiTable
+from ..operators.materialize import materialize, release
 
 _LOG = logging.getLogger(__name__)
 
@@ -248,7 +249,9 @@ def apply_cdc_batch(
 
     A mixed-op micro-batch is ONE table write:
     ``table.upsert(upserts, deletes=...)``. On MERGE_ON_READ that is a
-    single O(batch) delta-log append holding two delta commits — which
+    single O(batch) delta-log append holding two delta commits (on the
+    batch that reaches the inline-compaction threshold, one base
+    rewrite that folds the batch in instead) — which
     is why streaming CDC targets should be MOR-typed
     (``hoodie.table.type=MERGE_ON_READ`` in the demux props), Hudi's
     own guidance for write-heavy streams. On COPY_ON_WRITE the upsert
@@ -284,25 +287,27 @@ def apply_cdc_batch(
     is_del = op_n == "delete"
     staged = None
     try:
-        # One persisted frame, the source scanned once: kept events are
+        # One staged frame, the source scanned once: kept events are
         # compacted to their latest op per key (compact_batch's window,
         # partitioned by the keep flag too so skipped rows never compete
-        # with kept ones); skipped events stay, for the audit. Persisting
-        # inside the try: the window raises on a batch missing the
-        # precombine column, and must not leak a cache per failed
-        # trigger of a long-lived driver.
+        # with kept ones); skipped events stay, for the audit. The frame
+        # is a lazy materialize, not a persist: the full audit aggregate
+        # below is its first consumer, so the window runs once, and
+        # outside a cached plan AQE may coalesce the window's shuffle to
+        # the few tasks a micro-batch needs. The blocks are released in
+        # the finally, whether or not the batch commits.
         tagged = batch_df.withColumn("__cdc_keep", keep)
         w = Window.partitionBy("__cdc_keep", table.record_key).orderBy(
             *_compact_order(batch_df, table.precombine, binlog_name_prefix)
         )
-        staged = (
+        staged = materialize(
             tagged.withColumn("__rn", F.row_number().over(w))
             .filter(~F.col("__cdc_keep") | (F.col("__rn") == 1))
-            .drop("__rn")
-            .persist()
+            .drop("__rn"),
+            eager=False,
         )
         # one FULL aggregate (not isEmpty — a limit-1 short-circuit would
-        # only part-fill the cache): per-route counts of the COMPACTED
+        # only part-fill the blocks): per-route counts of the COMPACTED
         # events, which gate the writes (a key whose delete lost to a
         # newer upsert leaves the delete route empty, and an empty
         # route must not commit a seq-allocating log entry), plus the
@@ -345,4 +350,4 @@ def apply_cdc_batch(
             table.delete(deletes, spark)
     finally:
         if staged is not None:
-            staged.unpersist()
+            release(staged)

@@ -16,9 +16,15 @@ run the idempotent CDC apply. Offsets commit to the checkpoint after the
 batch, giving the reference's recovery contract.
 
 Scale notes: the batch is persisted once and filtered per table (K
-filters over one cached micro-batch beat K full re-reads); each table's
-upsert is an independent keyed shuffle, so hot tables don't serialize
-cold ones behind a global key shuffle.
+filters over one cached micro-batch beat K full re-reads), and the
+tables apply concurrently on a driver thread pool. Each table's apply is
+one keyed window over its slice, staged as executor blocks that its
+route-count aggregate fills (outside a cached plan, so AQE sizes that
+shuffle to the slice) and that are freed when the apply returns; then
+one MERGE_ON_READ commit: a delta-log append, or, on the commit that
+reaches the inline-compaction threshold, one base rewrite that folds the
+batch in. A hot table never serializes cold ones behind a global key
+shuffle.
 """
 
 from __future__ import annotations

@@ -334,6 +334,43 @@ def test_apply_cdc_batch_op_totality_and_null_key_skip(spark, tmp_path, caplog):
     assert "'<null op>': 1" in msg and "'truncate': 1" in msg and "'insert': 1" in msg
 
 
+def test_apply_cdc_batch_releases_staged_blocks(spark, tmp_path):
+    """apply_cdc_batch stages its compacted batch in executor blocks and
+    frees them before returning, after a batch that commits and after
+    one whose write raises: no RDD storage is left behind."""
+    from hudi_spark_utilities_plus_spark.lake import HudiTable
+    from hudi_spark_utilities_plus_spark.streaming.cdc import apply_cdc_batch
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {i.id() for i in jsc.getRDDStorageInfo()}
+
+    before = stored()
+    t = HudiTable(
+        path=str(tmp_path / "rel"),
+        record_key="id",
+        precombine="ts",
+        table_type="MERGE_ON_READ",
+    )
+    t.bulk_insert(spark.createDataFrame([(1, 1, "a")], "id long, ts long, data string"))
+    batch = spark.createDataFrame(
+        [("update", "db", "t", 1, "b", 2), ("delete", "db", "t", 2, "x", 2)],
+        "op string, db string, `table` string, id long, data string, ts long",
+    )
+    apply_cdc_batch(t, batch, spark)
+    assert stored() <= before
+    assert {r["id"]: r["data"] for r in t.read(spark).collect()} == {1: "b"}
+
+    def failing_upsert(*args, **kwargs):
+        raise RuntimeError("write failed")
+
+    t.upsert = failing_upsert
+    with pytest.raises(RuntimeError, match="write failed"):
+        apply_cdc_batch(t, batch, spark)
+    assert stored() <= before
+
+
 _CDC_ROW = (
     "op string, db string, `table` string, id long, data string, ts long, "
     "binlog_file string, binlog_offset long"
@@ -365,22 +402,31 @@ def _apply_as_two_commits(table, batch, spark):
 
 
 def test_single_append_cdc_apply_matches_two_commits(spark, tmp_path, caplog):
-    """Twin MERGE_ON_READ tables fed the same CDC batches — one through
+    """MERGE_ON_READ tables fed the same CDC batches — one through
     apply_cdc_batch (one log append per batch, upserts at seq s and
-    markers at s+1), one through separate upsert() and delete() —
+    markers at s+1), one through separate upsert() and delete(), and
+    one through apply_cdc_batch with inline compaction off and
+    compact() called after the batch that reaches the threshold —
     agree on every reader of the timeline: snapshot, time travel at
-    every seq, incremental and CDC reads from every cursor, and the
-    head seq. With an even inline-compaction threshold both compact
-    after the same batch. A small batch is one log file, and the
-    malformed-event warning keeps its per-op counts."""
+    every live seq, incremental and CDC reads from every cursor, the
+    head seq and the seqbase. With an even inline-compaction threshold
+    the first two fold the triggering commit into the base (no log is
+    written for it) after the same batch the third compacts. A small
+    batch is one log file, and the malformed-event warning keeps its
+    per-op counts."""
     import logging
 
     from hudi_spark_utilities_plus_spark.lake import HudiTable
     from hudi_spark_utilities_plus_spark.streaming.cdc import apply_cdc_batch
 
+    sync = {
+        "hoodie.datasource.hive_sync.enable": "true",
+        "hoodie.datasource.hive_sync.database": "fold_twins",
+    }
     opts = {
         "hoodie.compact.inline": "true",
         "hoodie.compact.inline.max.delta.commits": "4",
+        **sync,
     }
     twins = [
         HudiTable(
@@ -393,6 +439,16 @@ def test_single_append_cdc_apply_matches_two_commits(spark, tmp_path, caplog):
         )
         for name in ("single", "pair")
     ]
+    # the reference for the fold-in: append, then compact()
+    appended = HudiTable(
+        path=str(tmp_path / "appended"),
+        record_key="id",
+        precombine="ts",
+        table_name="appended",
+        table_type="MERGE_ON_READ",
+        options=dict(sync),
+    )
+    twins.append(appended)
     genesis = spark.createDataFrame(
         [(k, f"g{k}", 0, "mysql-bin.000001", k) for k in range(12)],
         "id long, data string, ts long, binlog_file string, binlog_offset long",
@@ -417,16 +473,24 @@ def test_single_append_cdc_apply_matches_two_commits(spark, tmp_path, caplog):
     def rows(df):
         return sorted(repr(tuple(r[c] for c in sorted(df.columns))) for r in df.collect())
 
+    def catalog(t):
+        return [
+            spark.catalog.tableExists(f"fold_twins.{t.table_name}{sfx}")
+            for sfx in ("", "_ro", "_rt")
+        ]
+
     def same_timeline():
-        a, b = twins
+        a = twins[0]
         head = a.latest_commit_seq(spark)
-        assert head == b.latest_commit_seq(spark)
-        assert a._seq_base() == b._seq_base()
-        assert rows(a.read(spark)) == rows(b.read(spark))
-        for s in range(max(-1, a._seq_base() - 1), head + 1):
-            assert rows(a.read(spark, as_of_seq=s)) == rows(b.read(spark, as_of_seq=s)), s
-            assert rows(a.read_incremental(spark, s)) == rows(b.read_incremental(spark, s)), s
-            assert rows(a.read_cdc(spark, s)) == rows(b.read_cdc(spark, s)), s
+        for b in twins[1:]:
+            assert catalog(a) == catalog(b), b.table_name
+            assert head == b.latest_commit_seq(spark), b.table_name
+            assert a._seq_base() == b._seq_base(), b.table_name
+            assert rows(a.read(spark)) == rows(b.read(spark)), b.table_name
+            for s in range(max(-1, a._seq_base() - 1), head + 1):
+                assert rows(a.read(spark, as_of_seq=s)) == rows(b.read(spark, as_of_seq=s)), s
+                assert rows(a.read_incremental(spark, s)) == rows(b.read_incremental(spark, s)), s
+                assert rows(a.read_cdc(spark, s)) == rows(b.read_cdc(spark, s)), s
 
     log_files = lambda t: [  # noqa: E731
         f for f in os.listdir(t._log_path) if f.endswith(".parquet")
@@ -439,6 +503,7 @@ def test_single_append_cdc_apply_matches_two_commits(spark, tmp_path, caplog):
         ):
             apply_cdc_batch(twins[0], batch, spark)
         _apply_as_two_commits(twins[1], batch, spark)
+        apply_cdc_batch(appended, batch, spark)
         if i == 0:
             # two delta commits, one append, one file
             assert twins[0].latest_commit_seq(spark) == 1
@@ -446,10 +511,16 @@ def test_single_append_cdc_apply_matches_two_commits(spark, tmp_path, caplog):
             assert len(log_files(twins[1])) >= 2
             same_timeline()
         elif i == 1:
-            # seqs 0..3 reach the threshold of 4: both compacted
+            # seqs 0..3 reach the threshold of 4: the inline tables
+            # folded the triggering commit, the reference compacts now
+            assert len(log_files(appended)) == 2
+            appended.compact(spark)
             for t in twins:
-                assert t._seq_base() == 4 and not t._has_log(spark)
-            assert rows(twins[0].read(spark)) == rows(twins[1].read(spark))
+                assert t._seq_base() == 4, t.table_name
+                assert not os.path.exists(t._log_path), t.table_name
+                assert t._read_seqmax() is None, t.table_name
+                assert catalog(t) == [True, True, True], t.table_name
+            same_timeline()
         else:
             assert twins[0].latest_commit_seq(spark) == 5
             same_timeline()

@@ -4286,3 +4286,119 @@ def test_exists_ignores_hidden_parquet(spark, tmp_path):
         spark.createDataFrame([(1, 10, "x")], "k long, ts long, _d string")
     )
     assert tp.exists(spark)
+
+
+def test_log_read_partition_column_takes_merge_read(spark, tmp_path):
+    """On a partitioned MERGE_ON_READ table a narrow log read that asks
+    for the partition column must not type it from the base: the log's
+    directory values are inferred from the log's own directories.
+    Here the base partitions look numeric and a log entry's does not;
+    an explicit schema typed from the base would lose that value."""
+    t = HudiTable(
+        path=str(tmp_path / "pm"),
+        record_key="k",
+        precombine="ts",
+        partition_field="p",
+        table_type="MERGE_ON_READ",
+    )
+    t.bulk_insert(
+        spark.createDataFrame(
+            [(1, 1, "1"), (2, 1, "2")], "k long, ts long, p string"
+        )
+    )
+    t.upsert(
+        spark.createDataFrame([(3, 2, "x"), (1, 2, "2")], "k long, ts long, p string")
+    )
+    got = {
+        (r["k"], str(r["p"]))
+        for r in t._log_read(
+            spark, columns=["k", "p"], base_schema=t._base_schema(spark)
+        ).collect()
+    }
+    assert got == {(3, "x"), (1, "2")}
+    # the key-only projection keeps its explicit-schema read
+    keys = t._log_read(spark, columns=["k"], base_schema=t._base_schema(spark))
+    assert sorted(r["k"] for r in keys.select("k").collect()) == [1, 3]
+
+
+def test_append_with_narrower_schema_keeps_older_columns(spark, tmp_path):
+    """An append whose batch lacks a column the base already has must
+    not narrow the schema later reads use: the memo keeps every column
+    the files carry, a wider append adds its new columns, an append
+    that retypes a column drops the memo, and an instance that did not
+    write the genesis memoizes nothing on append."""
+    t = HudiTable(path=str(tmp_path / "t"), record_key="k", precombine="ts")
+    t.bulk_insert(
+        spark.createDataFrame([(1, 1, "a", 10)], "k long, ts long, v string, w long")
+    )
+    genesis = t._base_schema_memo
+    assert genesis is not None
+    t.bulk_insert(spark.createDataFrame([(2, 1, "b")], "k long, ts long, v string"))
+    assert t._base_schema_memo == genesis
+    rows = {r["k"]: (r["v"], r["w"]) for r in t.read(spark).collect()}
+    assert rows == {1: ("a", 10), 2: ("b", None)}
+    t.bulk_insert(
+        spark.createDataFrame([(3, 1, "c", 5)], "k long, ts long, v string, x int")
+    )
+    assert t._base_schema_memo.fieldNames() == ["k", "ts", "v", "w", "x"]
+    rows = {r["k"]: (r["w"], r["x"]) for r in t.read(spark).collect()}
+    assert rows == {1: (10, None), 2: (None, None), 3: (None, 5)}
+    t.bulk_insert(spark.createDataFrame([(4, 1, 7)], "k long, ts long, v long"))
+    assert t._base_schema_memo is None
+    u = HudiTable(path=t.path, record_key="k", precombine="ts")
+    u.bulk_insert(spark.createDataFrame([(5, 1, "e")], "k long, ts long, v string"))
+    assert u._base_schema_memo is None
+
+
+def test_build_spark_session_codegen_cache_bound():
+    """build_spark_session sets the generated-class cache bound, a
+    caller's ``conf`` overrides it, and the bound is the one the JVM's
+    code generator uses even when its first plan executes on a new
+    thread outside a query (a ``df.rdd`` partition probe, as
+    operators/dedup.scatter makes): a second pass over more distinct
+    classes than Spark's default of 100 compiles nothing.
+    Subprocesses: the bound is a static conf, read once per JVM."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    default = """
+import sys; sys.path.insert(0, {repo!r})
+from concurrent.futures import ThreadPoolExecutor
+from hudi_spark_utilities_plus_spark.session import DEFAULT_CONF, build_spark_session
+key = "spark.sql.codegen.cache.maxEntries"
+spark = build_spark_session(master="local[2]", conf={{"spark.ui.enabled": "false"}})
+assert spark.conf.get(key) == DEFAULT_CONF[key], spark.conf.get(key)
+assert int(DEFAULT_CONF[key]) >= 300
+jvm = spark.sparkContext._jvm
+compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+probe = lambda: spark.range(4).selectExpr("id + 1 AS v").rdd.getNumPartitions()
+with ThreadPoolExecutor(1) as pool:
+    pool.submit(probe).result()
+q = lambda i: spark.range(3).selectExpr(f"id * {{i}} + 7 AS v").collect()
+for i in range(150):
+    q(i)
+c0 = compiles.getCount()
+for i in range(150):
+    q(i)
+assert compiles.getCount() == c0, compiles.getCount() - c0
+print("OK")
+""".format(repo=repo)
+    override = """
+import sys; sys.path.insert(0, {repo!r})
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+spark = build_spark_session(
+    master="local[1]",
+    conf={{"spark.ui.enabled": "false", "spark.sql.codegen.cache.maxEntries": "64"}},
+)
+assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "64"
+print("OK")
+""".format(repo=repo)
+    for code in (default, override):
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True,
+            timeout=300,
+        )
+        assert out.returncode == 0 and "OK" in out.stdout, (
+            out.stdout[-2000:], out.stderr[-2000:]
+        )

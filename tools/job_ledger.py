@@ -6,10 +6,15 @@ For each named query this prints
   - n_jobs and, per job, (job_id, #stages, #tasks, description/callsite)
     from the live AppStatusStore (works with spark.ui.enabled=false);
   - Exchange / BroadcastExchange / SortMergeJoin / BroadcastHashJoin /
-    ShuffledHashJoin / BatchEvalPython / ArrowEvalPython node counts in
-    the pre-execution formatted plan;
+    ShuffledHashJoin node counts and the Python-boundary nodes
+    (BatchEvalPython / ArrowEvalPython / MapInPandas / MapInArrow /
+    FlatMapGroupsInPandas[WithState] / FlatMapCoGroupsInPandas) in the
+    pre-execution formatted plan;
   - min-of-N isolated walls (build_s / action_s split like
-    profile_query.py).
+    profile_query.py);
+  - generated classes compiled per rep (the delta of Spark's
+    CodegenMetrics compilation count): after the first rep, a non-zero
+    count means the codegen cache did not hold the query's classes.
 
 Usage: python tools/job_ledger.py q1,q2,... [reps]
 
@@ -34,6 +39,11 @@ PLAN_NODES = (
     "ShuffledHashJoin",
     "BatchEvalPython",
     "ArrowEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInPandasWithState",
+    "FlatMapCoGroupsInPandas",
 )
 
 
@@ -55,6 +65,12 @@ def _plan_census(df) -> dict[str, int]:
                 counts[n] += 1
                 break
     return counts
+
+
+def _compiles(spark) -> int:
+    """Generated classes compiled by this JVM so far (cache misses)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _jobs_since(spark, first_job_id: int) -> list[dict]:
@@ -113,6 +129,7 @@ def main() -> None:
         best = None
         ledger = None
         census = None
+        compiles = []
         for rep in range(reps):
             jl = sc._jsc.sc().statusStore().jobsList(None)
             next_job = (
@@ -121,6 +138,7 @@ def main() -> None:
                 else 0
             )
             sc.setJobDescription(f"ledger:{name}")
+            c0 = _compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -128,6 +146,7 @@ def main() -> None:
                 census = _plan_census(df)
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
+            compiles.append(_compiles(spark) - c0)
             sc.setJobDescription(None)
             jobs = _jobs_since(spark, next_job)
             rec = {
@@ -148,11 +167,12 @@ def main() -> None:
         results[name] = {
             "best": best,
             "plan": census,
+            "compiles": compiles,
             "n_jobs": ledger["n_jobs"],
             "jobs": ledger["jobs"],
         }
         print(name, json.dumps(results[name]["best"]), "plan",
-              json.dumps(census), flush=True)
+              json.dumps(census), "compiles", compiles, flush=True)
         for j in ledger["jobs"]:
             print(f"   job {j['job']:>4} stages={j['stages']} "
                   f"tasks={j['tasks']:>4} {j['name']}", flush=True)
