@@ -74,17 +74,35 @@ def shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-# scatter() decision memo, keyed by (app id, analyzed-plan semantic
-# hash, scanned file set). Scan partitioning for a file source is a pure
-# function of the file set, the plan over it, and the session's split
-# size, so one probe per (plan, corpus) per session is enough; repeated
-# operator calls over the same table skip the DataFrame→RDD plan
-# conversion entirely. The semantic hash keeps a repartitioned/
+# scatter() decision memo, keyed by _scatter_key. Scan partitioning
+# for a file source is a pure function of the file set, the plan over
+# it, the split-size confs and the target parallelism, so one probe per
+# key per session is enough: repeated calls over the same table skip the
+# DataFrame→RDD conversion. The semantic hash keeps a repartitioned or
 # post-shuffle DataFrame over the same file set from reusing the raw
-# scan's sparse/dense decision. Bounded: cleared at _SCATTER_MEMO_MAX
-# entries (a probe is cheap; unbounded growth per session is not).
+# scan's decision. Bounded: cleared at _SCATTER_MEMO_MAX entries.
 _SCATTER_MEMO: dict[tuple, bool] = {}
 _SCATTER_MEMO_MAX = 256
+
+
+def _scatter_key(df: DataFrame, target: int) -> tuple | None:
+    """Memo key of ``scatter``'s partition-count probe, or None for a
+    source that scans no files (nothing to key the decision on)."""
+    try:
+        files = df.inputFiles()
+    except Exception:  # non-file source
+        return None
+    if not files:
+        return None
+    spark = df.sparkSession
+    return (
+        spark.sparkContext.applicationId,
+        df.semanticHash(),  # analyzed-plan fingerprint, driver-side
+        tuple(sorted(files)),
+        spark.conf.get("spark.sql.files.maxPartitionBytes"),
+        spark.conf.get("spark.sql.files.openCostInBytes"),
+        target,
+    )
 
 
 def scatter(df: DataFrame, by: str | None = None) -> DataFrame:
@@ -105,36 +123,23 @@ def scatter(df: DataFrame, by: str | None = None) -> DataFrame:
     aggregates after an explode+broadcast-join chain, window top-k per
     doc) satisfies its clustering requirement from this one exchange
     instead of inserting another full shuffle of the derived rows,
-    which at corpus scale are a multiple of the raw bytes (r16:
-    plan-verified on contamination_check — the post-join per-doc
-    aggregation exchange disappears).
+    which at corpus scale are a multiple of the raw bytes (on
+    contamination_check the post-join per-doc aggregation exchange
+    disappears).
 
     Only wrap RAW-SCAN DataFrames (a file read, optionally projected/
     filtered): the partition-count probe converts the plan to an RDD, and
     doing that to a post-shuffle DataFrame under AQE can eagerly execute
-    upstream stages. The probe result is memoized per (session, file set)
-    so steady-state calls never touch ``.rdd``.
+    upstream stages. The probe result of a file source is memoized per
+    ``_scatter_key``, so repeated calls over an unchanged key never touch
+    ``.rdd``.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            df.semanticHash(),  # analyzed-plan fingerprint, driver-side
-            tuple(sorted(df.inputFiles())),
-            # split-size confs shape the probed partition count: a
-            # mid-session retune must not be served a stale decision
-            spark.conf.get("spark.sql.files.maxPartitionBytes", ""),
-            spark.conf.get("spark.sql.files.openCostInBytes", ""),
-            target,
-        )
-    except Exception:  # non-file source — probe without memoizing
-        key = None
-    if key is not None and key[2] and key in _SCATTER_MEMO:
-        sparse = _SCATTER_MEMO[key]
-    else:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    key = _scatter_key(df, target)
+    sparse = _SCATTER_MEMO.get(key)
+    if sparse is None:
         sparse = df.rdd.getNumPartitions() < target
-        if key is not None and key[2]:
+        if key is not None:
             if len(_SCATTER_MEMO) >= _SCATTER_MEMO_MAX:
                 _SCATTER_MEMO.clear()
             _SCATTER_MEMO[key] = sparse
@@ -435,13 +440,12 @@ def _minhash_signature(sh_hashed: Column) -> Column:
     """Array of k minhashes from an array of bounded base shingle hashes.
 
     k independent ``array_min(transform(...))`` traversals, one per lane.
-    This deliberately REVERTS the round-1 "single fold with a length-k
-    accumulator" rework: that shape allocates two k-element arrays per
-    shingle (the affine lane array + the zip_with result), and measured
-    2× slower at sf0.1 (1.48 s vs 0.73 s signatures-only). k plain
-    traversals keep each lane's affine+min loop allocation-free inside
-    whole-stage codegen — per-row cost is k·|sh| fused long ops, the
-    shape that scales.
+    Not a single fold with a length-k accumulator: that shape allocates
+    two k-element arrays per shingle (the affine lane array + the
+    zip_with result), and measured 2× slower at sf0.1 (1.48 s vs 0.73 s
+    signatures-only). k plain traversals keep each lane's affine+min
+    loop allocation-free inside whole-stage codegen — per-row cost is
+    k·|sh| fused long ops, the shape that scales.
     """
 
     def _affine(a: int, b: int):
@@ -767,9 +771,9 @@ def _freq_ordered(s: DataFrame) -> DataFrame:
     # to the originals for every doc that has postings, and docs WITHOUT
     # postings (null text → null shh, dropped by the explode) were
     # dropped by the old inner join too. One fewer join = one fewer
-    # exchange + query stage per near-dup operator (r16: the per-stage
-    # cost, not per-row compute, dominated these queries at bench scale,
-    # and at 100 TB the removed exchange is a full postings shuffle).
+    # exchange + query stage per near-dup operator (the per-stage cost,
+    # not per-row compute, dominates these queries at bench scale, and at
+    # 100 TB the removed exchange is a full postings shuffle).
     return (
         posts_all.join(df_tab, "h")
         .groupBy("doc")
@@ -777,7 +781,7 @@ def _freq_ordered(s: DataFrame) -> DataFrame:
         .select(
             "doc",
             F.transform("_p", lambda p: p["h"]).alias("shp"),
-            # the aligned global doc-frequencies (r17): prefix joins
+            # the aligned global doc-frequencies: prefix joins
             # prune postings whose shingle no OTHER doc contains
             # (dfreq == 1 ⇒ no partner can hold the shingle, in prefix
             # or anywhere) BEFORE the self-join exchange — the

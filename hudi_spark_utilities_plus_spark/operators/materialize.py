@@ -20,8 +20,8 @@ intermediate that a RETURNED DataFrame still references:
 checkpoint directory — survives executor loss, the cluster posture) or
 ``localCheckpoint(eager=True)`` (MEMORY_AND_DISK blocks on the
 executors) replaces the plan with a scan of the materialized RDD.
-The interleaved A/B (BASELINE.md, round 9) measured checkpoint ≈
-persist on the global-window operators.
+On the global-window operators an interleaved A/B measured checkpoint
+≈ persist.
 
 Reclamation differs by form, so the reliable branch is CONDITIONAL:
 ``localCheckpoint`` blocks are freed by the ContextCleaner once the
@@ -62,10 +62,11 @@ def _reliable_cleanup_enabled(sc) -> bool:
     files. Read from the STARTUP SparkConf, not the runtime session conf:
     spark.cleaner.* is a core conf the cleaner captures at context start
     (Spark 4 rejects runtime modification with CANNOT_MODIFY_CONFIG), so
-    the startup value is the only one that governs reclamation."""
+    the startup value is the only one that governs reclamation. Looked
+    up on the context's live SparkConf: ``sc.getConf()`` would copy the
+    whole conf over py4j on every call."""
     return (
-        sc.getConf()
-        .get("spark.cleaner.referenceTracking.cleanCheckpoints", "false")
+        sc._conf.get("spark.cleaner.referenceTracking.cleanCheckpoints", "false")
         .lower()
         == "true"
     )
@@ -132,7 +133,7 @@ def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
     (global_windows) must keep the eager form so no partial evaluation
     can ever precede materialization.
 
-    Reliable-checkpoint caveat (ADVICE r16): the one-job fusion holds
+    Reliable-checkpoint caveat: the one-job fusion holds
     for the localCheckpoint branch (blocks are stored by the count's
     own tasks). On the RELIABLE branch, ``checkpoint(eager=False)``
     writes its files in a separate job scheduled after the count — a

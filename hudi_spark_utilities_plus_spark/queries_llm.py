@@ -237,7 +237,7 @@ _JACCARD_ORACLE = (
 def dedup_ngram_jaccard(spark, sf_dir):
     """Exact n-gram-Jaccard near-dup pairs (τ=0.8) via inverted-index
     candidate join — no O(n²) stage; oracle is DuckDB brute force."""
-    d = scatter(_t(spark, sf_dir, "documents")["documents"])
+    d = _t(spark, sf_dir, "documents")["documents"]
     return D.ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
 
 
@@ -247,7 +247,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     the 100 TB near-dedup path. Verified output equals the brute-force
     ≥0.8 pair set (banding miss probability < 1e-7 at τ=0.8), so it
     shares the exact-Jaccard oracle."""
-    d = scatter(_t(spark, sf_dir, "documents")["documents"])
+    d = _t(spark, sf_dir, "documents")["documents"]
     return D.minhash_lsh_pairs(d, "text", "doc_id", n=3, threshold=0.8)
 
 

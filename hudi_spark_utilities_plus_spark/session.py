@@ -84,16 +84,17 @@ def build_spark_session(
     # Shuffle parallelism tracks the session's actual core count. An
     # explicitly configured value, found in the startup SparkConf
     # (spark-defaults, --conf or the builder), is kept even when it is
-    # Spark's default "200". The derive runs on local masters only: on
-    # a cluster with dynamic allocation, defaultParallelism at session
-    # build can reflect zero registered executors. Results do not
-    # depend on the partition count.
+    # Spark's default "200"; it is looked up on the context's live
+    # SparkConf, since ``sc.getConf()`` copies the whole conf over py4j.
+    # The derive runs on local masters only: on a cluster with dynamic
+    # allocation, defaultParallelism at session build can reflect zero
+    # registered executors. Results do not depend on the partition count.
     if "spark.sql.shuffle.partitions" not in merged:
         try:
             sc = spark.sparkContext
             if (
                 sc.master.startswith("local")
-                and not sc.getConf().contains("spark.sql.shuffle.partitions")
+                and not sc._conf.contains("spark.sql.shuffle.partitions")
                 # value check too: getOrCreate may have handed us a
                 # REUSED session whose owner set the conf at runtime
                 and spark.conf.get("spark.sql.shuffle.partitions", "200")
@@ -134,12 +135,13 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     # 200. A deliberate runtime set of exactly 200 cannot be told apart
     # from the default and gets the core-count value; results do not
     # depend on the partition count. Local masters only, as in
-    # build_spark_session.
+    # build_spark_session. This runs before every query of a caller that
+    # hands in its own session, so it makes single conf lookups only.
     try:
         sc = spark.sparkContext
         if (
             sc.master.startswith("local")
-            and not sc.getConf().contains("spark.sql.shuffle.partitions")
+            and not sc._conf.contains("spark.sql.shuffle.partitions")
             and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200"
         ):
             spark.conf.set(

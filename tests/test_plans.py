@@ -4,6 +4,7 @@ regress them (SURVEY §4)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hudi_spark_utilities_plus_spark.plans import audit
@@ -554,3 +555,31 @@ def test_refine_span_bounds_stays_jvm_side(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("qid", ["dedup_ngram_jaccard", "dedup_minhash_lsh"])
+def test_near_dedup_shingles_after_one_doc_id_exchange(spark, sf_dir, monkeypatch, qid):
+    """The Jaccard and MinHash ids hand the raw scan to the operator, so
+    shingling runs after exactly one exchange, _shingled's scatter
+    hash-partitioned on doc_id (not after a round-robin scatter that
+    _shingled's probe would then find already wide)."""
+    import re as _re
+
+    from hudi_spark_utilities_plus_spark.operators import dedup
+
+    captured = []
+    orig = dedup._shingled
+
+    def spy(*args, **kwargs):
+        out = orig(*args, **kwargs)
+        captured.append(out)
+        return out
+
+    monkeypatch.setattr(dedup, "_shingled", spy)
+    QUERIES[qid](spark, sf_dir)
+    assert len(captured) == 1
+    plan = captured[0]._jdf.queryExecution().executedPlan().toString()
+    exchanges = _re.findall(r"Exchange (\w+)\(([^\n]*)", plan)
+    assert len(exchanges) == 1, plan
+    assert exchanges[0][0] == "hashpartitioning", plan
+    assert exchanges[0][1].startswith("doc_id"), plan

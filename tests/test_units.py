@@ -4402,3 +4402,194 @@ print("OK")
         assert out.returncode == 0 and "OK" in out.stdout, (
             out.stdout[-2000:], out.stderr[-2000:]
         )
+
+
+# ---------------------------------------------------------------------------
+# fixed driver cost per query: schema memo, scatter memo, conf lookups
+# ---------------------------------------------------------------------------
+
+
+def _drain_listener(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+
+
+def test_load_table_schema_memo_matches_inference(spark, sf_dir, tmp_path):
+    """The schema load_table serves from its memo equals a fresh
+    inference for every fixture table, for a TIMESTAMP(NANOS) file
+    whether or not nanosAsLong was already on, and for a binary column
+    on both sides of a binaryAsString toggle (the conf is in the key)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hudi_spark_utilities_plus_spark import catalog
+
+    # the sf0.01 fixture set next to the test one, when present
+    sf = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.01")
+    if not os.path.isdir(sf):
+        sf = sf_dir
+    for name in catalog.TABLES:
+        catalog.load_table(spark, sf, name)
+        hit = catalog.load_table(spark, sf, name)
+        fresh = spark.read.parquet(os.path.join(sf, f"{name}.parquet")).schema
+        assert hit.schema == fresh, name
+
+    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
+    binary_key = "spark.sql.parquet.binaryAsString"
+    saved = {k: spark.conf.get(k) for k in (nanos_key, binary_key)}
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1], pa.int64()),
+            "ts": pa.array([1704164645123456789], pa.timestamp("ns")),
+            "raw": pa.array([b"ab"], pa.binary()),
+        }),
+        path,
+    )
+
+    def memo_entry():
+        _, footer = catalog._read_footer(path)
+        confs = tuple(spark.conf.get(c) for c in catalog._SCHEMA_CONFS)
+        return catalog._SCHEMA_MEMO[footer + confs]
+
+    try:
+        for nanos_on in ("false", "true"):
+            spark.conf.set(nanos_key, nanos_on)
+            for _ in range(2):  # miss, then hit
+                df = catalog.load_table(spark, str(tmp_path), "t")
+                assert memo_entry() == spark.read.parquet(path).schema
+                assert [r.ts for r in df.collect()] == [
+                    datetime.datetime(2024, 1, 2, 3, 4, 5, 123456)
+                ]
+                assert df.schema["raw"].dataType.typeName() == "binary"
+        spark.conf.set(binary_key, "true")
+        for _ in range(2):
+            df = catalog.load_table(spark, str(tmp_path), "t")
+            assert memo_entry() == spark.read.parquet(path).schema
+            assert df.schema["raw"].dataType.typeName() == "string"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_load_table_memo_hit_starts_no_job(spark, sf_dir):
+    """A second load of an unchanged file takes its schema from the
+    memo: no schema-inference job."""
+    from hudi_spark_utilities_plus_spark.catalog import load_table
+
+    sc = spark.sparkContext
+    load_table(spark, sf_dir, "orders")
+    group = "load-table-memo-hit"
+    sc.setJobGroup(group, "second load")
+    try:
+        load_table(spark, sf_dir, "orders")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _drain_listener(spark)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_load_table_reinfers_rewritten_file(spark, tmp_path):
+    """A file rewritten at the same path with another schema has
+    another footer key, so its schema is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hudi_spark_utilities_plus_spark.catalog import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    assert load_table(spark, str(tmp_path), "t").count() == 2
+    pq.write_table(
+        pa.table({"a": pa.array(["x"]), "b": pa.array([1.5])}), path
+    )
+    df = load_table(spark, str(tmp_path), "t")
+    assert [(f.name, f.dataType.typeName()) for f in df.schema] == [
+        ("a", "string"), ("b", "double"),
+    ]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_scatter_memo_skips_rdd_on_second_call(spark, sf_dir, monkeypatch):
+    """scatter()'s memo key builds on this Spark (its split-size conf
+    reads must not raise), and a second call over the same file makes
+    no DataFrame→RDD conversion."""
+    from hudi_spark_utilities_plus_spark.catalog import load_table
+    from hudi_spark_utilities_plus_spark.operators.dedup import (
+        _scatter_key,
+        scatter,
+    )
+
+    target = spark.sparkContext.defaultParallelism
+    first = load_table(spark, sf_dir, "documents")
+    assert _scatter_key(first, target) is not None
+    scatter(first)
+    cls = type(first)
+    orig = cls.rdd
+    calls = []
+
+    def counting(self):
+        calls.append(1)
+        return orig.fget(self)
+
+    monkeypatch.setattr(cls, "rdd", property(counting))
+    again = load_table(spark, sf_dir, "documents")
+    assert _scatter_key(again, target) == _scatter_key(first, target)
+    out = scatter(again)
+    assert calls == []
+    assert "RoundRobinPartitioning" in out._jdf.queryExecution().executedPlan().toString()
+    assert _scatter_key(spark.range(3), target) is None
+
+
+def test_conf_reads_do_not_copy_sparkconf(spark, monkeypatch):
+    """tune_runtime (run before every query of an external session) and
+    materialize's cleaner-conf check look confs up on the live
+    SparkConf instead of copying it with getConf()."""
+    from hudi_spark_utilities_plus_spark.operators.materialize import (
+        _reliable_cleanup_enabled,
+    )
+    from hudi_spark_utilities_plus_spark.session import tune_runtime
+
+    sc = spark.sparkContext
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    calls = []
+    monkeypatch.setattr(
+        type(sc), "getConf", lambda self: calls.append(1) or None
+    )
+    tune_runtime(spark)
+    assert _reliable_cleanup_enabled(sc) is False
+    assert calls == []
+    # the fixture's startup value is explicit, so it is kept
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_build_spark_session_keeps_startup_shuffle_conf():
+    """build_spark_session over a context whose startup conf sets
+    spark.sql.shuffle.partitions (even to Spark's default 200) keeps
+    that value, as tune_runtime does. Subprocess: the shared fixture
+    already started its context."""
+    import subprocess
+    import sys
+
+    code = """
+import sys; sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+SparkSession.builder.master("local[3]").appName("ks-t").config(
+    "spark.ui.enabled", "false").config(
+    "spark.sql.shuffle.partitions", "200").getOrCreate()
+s = build_spark_session(app_name="ks-t", master="local[3]",
+                        conf={{"spark.ui.enabled": "false"}})
+assert s.conf.get("spark.sql.shuffle.partitions") == "200", \\
+    s.conf.get("spark.sql.shuffle.partitions")
+print("OK")
+""".format(repo=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0 and "OK" in out.stdout, (
+        out.stdout[-2000:], out.stderr[-2000:]
+    )

@@ -3,8 +3,12 @@ census, the stable optimization signals on an oversubscribed host
 (wall clocks vary 2-5x here; job/exchange counts are deterministic).
 
 For each named query this prints
-  - n_jobs and, per job, (job_id, #stages, #tasks, description/callsite)
-    from the live AppStatusStore (works with spark.ui.enabled=false);
+  - n_jobs, split into build_jobs (started while the query function
+    built its DataFrame: schema inference, partition probes, eager
+    collects and count gates) and action_jobs (started by the noop
+    write), and, per job, (job_id, phase, #stages, #tasks,
+    description/callsite) from the live AppStatusStore (works with
+    spark.ui.enabled=false);
   - Exchange / BroadcastExchange / SortMergeJoin / BroadcastHashJoin /
     ShuffledHashJoin node counts and the Python-boundary nodes
     (BatchEvalPython / ArrowEvalPython / MapInPandas / MapInArrow /
@@ -73,7 +77,17 @@ def _compiles(spark) -> int:
     return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _jobs_since(spark, first_job_id: int) -> list[dict]:
+def _next_job_id(spark) -> int:
+    """Id the next submitted job will get, once the listener bus has
+    delivered every job start to the status store."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30_000)
+    jl = sc.statusStore().jobsList(None)
+    return 1 + max((jl.apply(i).jobId() for i in range(jl.size())), default=-1)
+
+
+def _jobs_since(spark, first_job_id: int, action_job_id: int) -> list[dict]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     seq = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
     out = []
     for i in range(seq.size()):
@@ -83,12 +97,18 @@ def _jobs_since(spark, first_job_id: int) -> list[dict]:
             out.append(
                 {
                     "job": j.jobId(),
+                    "phase": "build" if j.jobId() < action_job_id else "action",
                     "stages": j.stageIds().size(),
                     "tasks": j.numTasks(),
                     "name": (desc.get() if desc.isDefined() else j.name())[:140],
                 }
             )
     return sorted(out, key=lambda r: r["job"])
+
+
+def _phase_counts(jobs: list[dict]) -> dict[str, int]:
+    build = sum(1 for j in jobs if j["phase"] == "build")
+    return {"n_jobs": len(jobs), "build_jobs": build, "action_jobs": len(jobs) - build}
 
 
 def main() -> None:
@@ -131,34 +151,32 @@ def main() -> None:
         census = None
         compiles = []
         for rep in range(reps):
-            jl = sc._jsc.sc().statusStore().jobsList(None)
-            next_job = (
-                max(jl.apply(i).jobId() for i in range(jl.size())) + 1
-                if jl.size()
-                else 0
-            )
+            next_job = _next_job_id(spark)
             sc.setJobDescription(f"ledger:{name}")
             c0 = _compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
+            # untimed: the job-id mark and the plan census
+            action_job = _next_job_id(spark)
             if census is None:
                 census = _plan_census(df)
+            t1a = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             compiles.append(_compiles(spark) - c0)
             sc.setJobDescription(None)
-            jobs = _jobs_since(spark, next_job)
+            jobs = _jobs_since(spark, next_job, action_job)
             rec = {
                 "build_s": round(t1 - t0, 3),
-                "action_s": round(t2 - t1, 3),
-                "total_s": round(t2 - t0, 3),
-                "n_jobs": len(jobs),
+                "action_s": round(t2 - t1a, 3),
+                "total_s": round(t1 - t0 + t2 - t1a, 3),
+                **_phase_counts(jobs),
             }
             if best is None or rec["total_s"] < best["total_s"]:
                 best = rec
             if ledger is None or len(jobs) != ledger["n_jobs"]:
-                ledger = {"n_jobs": len(jobs), "jobs": jobs}
+                ledger = {**_phase_counts(jobs), "jobs": jobs}
             spark.catalog.clearCache()
             import gc
 
@@ -168,13 +186,12 @@ def main() -> None:
             "best": best,
             "plan": census,
             "compiles": compiles,
-            "n_jobs": ledger["n_jobs"],
-            "jobs": ledger["jobs"],
+            **ledger,
         }
         print(name, json.dumps(results[name]["best"]), "plan",
               json.dumps(census), "compiles", compiles, flush=True)
         for j in ledger["jobs"]:
-            print(f"   job {j['job']:>4} stages={j['stages']} "
+            print(f"   job {j['job']:>4} {j['phase']:<6} stages={j['stages']} "
                   f"tasks={j['tasks']:>4} {j['name']}", flush=True)
     print("LEDGER " + json.dumps(results))
 
