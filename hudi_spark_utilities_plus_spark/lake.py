@@ -241,19 +241,18 @@ def _envelope_groups_disjoint(
 
 
 class SeqClaimStore:
-    """Minimal conditional-put surface for O(1) commit-seq allocation on
-    shared storage — the claim-dir protocol behind MOR seq allocation on
-    paths where the ``__hudi_seqmax`` sidecar (POSIX rename) is
-    unavailable. A claim is an immutable zero-payload object named
-    ``seq-%012d``; allocation is one LIST (max claimed seq) + one
-    if-none-match PUT, with a bump-and-retry on contention — natively
-    multi-writer-unique, no lock required, and durable BEFORE the log
-    append so a crash wastes a seq (gap) instead of duplicating one.
-    The LIST stays bounded because ``_drop_seqmax`` truncates claims
-    whenever the log itself is truncated (compaction advances the
-    seqbase watermark; restore rewinds the timeline).
+    """Conditional-put surface that hands out MOR commit seqs. A claim
+    is an immutable object named ``seq-%012d``; allocating is one LIST
+    (max claimed seq) + one if-none-match PUT per seq, with a
+    bump-and-retry on contention — unique across writers with no lock,
+    and durable BEFORE the log append so a crash wastes a seq (gap)
+    instead of duplicating one. The LIST stays bounded because
+    ``_truncate_claims`` deletes the claims whenever the log itself is
+    truncated (compaction advances the seqbase watermark; restore
+    rewinds the timeline).
 
-    Deployments back this with their object-store client
+    Local paths use ``_LocalSeqClaimStore``; deployments on other
+    schemes back this with their object-store client
     (``register_seq_claim_store``); ``claim()`` must map the store's
     conditional-put failure (HTTP 412 / precondition failed) to False.
     """
@@ -287,12 +286,10 @@ class SeqClaimStore:
 
 
 class _LocalSeqClaimStore(SeqClaimStore):
-    """Claim dir on a local filesystem: tmp + hard-link conditional put,
-    the same if-none-match model ``_publish_manifest`` uses (with the
-    identical O_EXCL fallback for linkless filesystems). Used when
-    ``hoodie.seq.allocation=claim`` forces the claim protocol on a local
-    table — e.g. to exercise exactly what an object-store deployment
-    runs — and as the probe's measurable stand-in for that deployment."""
+    """Claim dir ``<path>__hudi_seqclaim`` of every local or ``file://``
+    MOR table: tmp + hard-link conditional put, the same if-none-match
+    model ``_publish_manifest`` uses (with the identical O_EXCL fallback
+    for linkless filesystems)."""
 
     def __init__(self, dirpath: str):
         self.dir = dirpath
@@ -350,19 +347,14 @@ _SEQ_CLAIM_STORES: dict[str, "Callable[[str], SeqClaimStore]"] = {}
 def register_seq_claim_store(scheme: str, factory) -> None:
     """Register a SeqClaimStore factory for a URI scheme (e.g. ``s3``).
     ``factory`` receives the claim-dir URI ``<table-path>__hudi_seqclaim``
-    and returns the store. With a store registered, MOR seq allocation on
-    that scheme is O(1) conditional-put RPCs instead of the O(log) Spark
-    max-agg scan per append the 120-commit probe condemned."""
+    and returns the store. With a store registered, a MOR commit on that
+    scheme claims its seq in O(1) conditional-put RPCs; without one,
+    every append pays a Spark max-agg scan of the delta log."""
     _SEQ_CLAIM_STORES[scheme.lower()] = factory
 
 
 def unregister_seq_claim_store(scheme: str) -> None:
     _SEQ_CLAIM_STORES.pop(scheme.lower(), None)
-
-
-# sentinel distinguishing "store not yet resolved" from "resolved to
-# None" in _next_seq's _store parameter and the per-instance memo
-_UNRESOLVED = object()
 
 
 @dataclass
@@ -372,14 +364,14 @@ class HudiTable:
     Parquet-backed COPY_ON_WRITE implementation of the write semantics
     the reference delegates to ``format("hudi")``.
 
-    FILESYSTEM SCOPE (deployment note): two sidecar mechanisms require
-    a LOCAL (or NFS-like POSIX) table path and degrade — never break —
-    elsewhere. (1) The ``__hudi_seqmax`` seq-allocation sidecar: on a
-    non-local path ``_read_seqmax`` returns None and every MOR append
-    falls back to scanning the delta log since the last compaction for
-    the max seq — O(log) per write instead of O(1), the exact cost the
-    120-commit probe condemned, so schedule compaction accordingly or
-    keep MOR tables on local paths. (2) The filesystem lock provider
+    FILESYSTEM SCOPE (deployment note): (1) MOR commit seqs are claimed
+    by conditional put in a ``SeqClaimStore`` — the hard-link claim dir
+    on a local path, the store registered for the scheme
+    (``register_seq_claim_store``) elsewhere. A non-local scheme with no
+    registered store degrades — never breaks: every MOR append scans
+    the delta log since the last compaction for the max seq, O(log) per
+    write instead of O(1), and seqs are unique only under the table
+    lock. (2) The filesystem lock provider
     (``hoodie.write.lock.provider``) needs atomic ``O_CREAT|O_EXCL``
     exclusive create (and rename) — local filesystems and NFSv4+; on
     object stores it raises at lock-path resolution rather than
@@ -895,6 +887,22 @@ class HudiTable:
         """The MERGE_ON_READ snapshot of ``base`` + delta-log rows
         ``log``: latest-wins per key by (unconditional-delete,
         precombine, commit seq), winners with a delete op dropped."""
+        from pyspark.sql.types import NumericType
+
+        # hive-layout partition values are typed by directory inference,
+        # separately for base and log: base dirs p=1, p=2 infer INT where
+        # a log dir p=x infers STRING, and the union's implicit cast of
+        # 'x' to a number fails under ANSI. Types that do not both widen
+        # as numbers meet as STRING, the type the mixed directory set
+        # infers after compaction.
+        pf = self.partition_field
+        if pf and pf in base.columns and pf in log.columns:
+            bt, lt = base.schema[pf].dataType, log.schema[pf].dataType
+            if bt != lt and not (
+                isinstance(bt, NumericType) and isinstance(lt, NumericType)
+            ):
+                base = base.withColumn(pf, F.col(pf).cast("string"))
+                log = log.withColumn(pf, F.col(pf).cast("string"))
         tagged_base = base.withColumn("__hudi_op", F.lit("upsert")).withColumn(
             "__hudi_seq", F.lit(-1).cast("long")
         )
@@ -1362,157 +1370,39 @@ class HudiTable:
                 return int(fh.read().strip() or 0)
         return 0
 
-    def _seqmax_path(self) -> str:
-        return f"{self._local_fs_path().rstrip('/')}__hudi_seqmax"
-
-    def _read_seqmax(self) -> int | None:
-        """Highest commit seq ever ALLOCATED, from the sidecar; None =
-        sidecar absent (pre-sidecar table, post-restore, or non-local
-        filesystem) — callers fall back to the log scan."""
-        try:
-            p = self._seqmax_path()
-        except NotImplementedError:
+    @functools.cached_property
+    def _seq_claim_store(self) -> SeqClaimStore | None:
+        """The claim store that allocates this table's commit seqs: the
+        local claim dir on a local or ``file://`` path, else the factory
+        registered for the scheme; None on a non-local scheme with no
+        registered store (allocation then scans the log per append).
+        Memoized: the path and registry entry are fixed for the table's
+        lifetime, and a deployment factory may construct a real store
+        client, which the append hot path must not pay for."""
+        m = re.match(r"^([a-z][a-z0-9+.-]*)://(.*)$", self.path)
+        scheme = m.group(1) if m else None
+        if scheme is None or scheme == "file":
+            return _LocalSeqClaimStore(
+                f"{self._local_fs_path().rstrip('/')}__hudi_seqclaim"
+            )
+        factory = _SEQ_CLAIM_STORES.get(scheme)
+        if factory is None:
             return None
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            txt = fh.read().strip()
-        return int(txt) if txt else None
+        return factory(f"{self.path.rstrip('/')}__hudi_seqclaim")
 
-    def _write_seqmax(self, seq: int) -> None:
-        """Publish ``seq`` into the sidecar MONOTONICALLY — merge
-        max(existing, seq), never a blind replace. The claim path calls
-        this LOCK-FREE (claims are the multi-writer mechanism; the
-        table lock may be disabled), so two concurrent claimers can
-        interleave their sidecar publishes: with a blind replace, A
-        (seq N) landing after B (seq N+1) left the sidecar at N while
-        N+1 was live, and a later claim->auto flip re-issued N+1 — two
-        commits sharing a seq merge as one (the ADVICE r14 race).
-
-        Lock-free convergence: skip when the existing value already
-        covers ``seq``; otherwise tmp+replace, then RE-READ — a racing
-        writer may have replaced with a lower value between our read
-        and our replace, or clobbered ours after it, so retry until the
-        sidecar covers ``seq``. Each writer loops only while the
-        sidecar is below its own seq and only ever publishes its own
-        seq, so the value converges to the max of the racing seqs in at
-        most a handful of iterations (deterministically interleaved and
-        thread-stress pinned in tests/test_units.py). A crash inside
-        the window can still strand the sidecar low — claims survive as
-        allocation ground truth, and the auto-mode floor consults them
-        (``_residual_claim_floor``), so the pair of mechanisms is
-        crash-safe, not just race-safe."""
-        try:
-            p = self._seqmax_path()
-        except NotImplementedError:
-            return
-        while True:
-            cur = self._read_seqmax()
-            if cur is not None and cur >= seq:
-                return
-            tmp = f"{p}.tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                fh.write(str(seq))
-            os.replace(tmp, p)
-
-    def _drop_seqmax(self) -> None:
-        """Invalidate the allocation state — the sidecar AND the claim
-        dir. Called by every path that REMOVES log entries (compact,
-        restore) — the next _next_seq falls back to the log scan /
-        seqbase watermark, and the next append re-establishes whichever
-        allocation mechanism the table resolves. Claims are truncated
-        wholesale (not pruned below seqbase): both call sites re-derive
-        the correct floor afterward — compaction's advanced seqbase, or
-        restore's surviving-log rescan — and a full truncate keeps the
-        claim LIST bounded by commits-since-compaction exactly like the
-        log itself."""
-        try:
-            p = self._seqmax_path()
-        except NotImplementedError:
-            pass
-        else:
-            if os.path.exists(p):
-                os.remove(p)
-        store = self._seq_claim_store()
+    def _truncate_claims(self) -> None:
+        """Delete every seq claim. Called by every path that REMOVES log
+        entries (compact, restore): the next _next_seq re-derives the
+        floor from the advanced seqbase watermark or the surviving log,
+        and the claim LIST stays bounded by commits-since-compaction
+        like the log itself."""
+        store = self._seq_claim_store
         if store is not None:
             store.truncate()
 
-    def _seq_claim_store(self) -> SeqClaimStore | None:
-        """Resolve the claim-dir store for this table's path, or None
-        when the plain sidecar/log-scan path applies.
-
-        - ``hoodie.seq.allocation=claim`` forces the claim protocol:
-          local paths get the built-in hard-link store, non-local
-          schemes need a registered factory (raises otherwise — the
-          option is an explicit promise of O(1) allocation).
-        - default (``auto``): local paths keep the sidecar (measured
-          ~25% faster than the claim dir and lock-protected); non-local
-          schemes use a registered store when present, else the
-          per-append log-scan fallback (the documented degradation).
-
-        Memoized per instance: resolution inputs (path, options,
-        registry entry) are fixed for the table's lifetime, and a
-        deployment factory may construct a real store client — paying
-        that per append (the hot path the claim dir exists to make
-        O(1)) would be wrong."""
-        memo = self.__dict__.get("_seq_store_memo", _UNRESOLVED)
-        if memo is not _UNRESOLVED:
-            return memo
-        store = self._resolve_seq_claim_store()
-        self.__dict__["_seq_store_memo"] = store
-        return store
-
-    def _resolve_seq_claim_store(self) -> SeqClaimStore | None:
-        mode = str(self.options.get("hoodie.seq.allocation", "auto")).lower()
-        m = re.match(r"^([a-z][a-z0-9+.-]*)://(.*)$", self.path)
-        scheme = m.group(1) if m else None
-        claim_uri = f"{self.path.rstrip('/')}__hudi_seqclaim"
-        if scheme is None or scheme == "file":
-            if mode == "claim":
-                return _LocalSeqClaimStore(
-                    f"{self._local_fs_path().rstrip('/')}__hudi_seqclaim"
-                )
-            return None
-        factory = _SEQ_CLAIM_STORES.get(scheme)
-        if factory is not None:
-            return factory(claim_uri)
-        if mode == "claim":
-            raise NotImplementedError(
-                f"hoodie.seq.allocation=claim on scheme '{scheme}://' "
-                "needs a registered SeqClaimStore "
-                "(register_seq_claim_store) — none is registered"
-            )
-        return None
-
-    def _residual_claim_floor(self) -> int:
-        """Allocation floor from a SURVIVING local claim dir while the
-        table runs in auto mode (store unresolved): after a claim->auto
-        flip the claims left behind are allocation ground truth — every
-        claim-mode commit holds a claim >= its log seq, and claims are
-        only removed by ``_drop_seqmax`` (compact/restore), which also
-        drops the sidecar so the log-scan fallback re-derives the floor.
-        Consulting them closes the crash half of the sidecar race: a
-        claimer that died between winning seq N+1 and publishing the
-        sidecar (or whose publish was clobbered by a pre-monotonic
-        build) leaves the sidecar at N, and the sidecar alone would
-        re-issue the live N+1 on the first auto-mode allocation.
-
-        Returns 0 when there is no dir / no claims — one ``isdir`` stat
-        on the pure-auto hot path (the dir never exists unless claim
-        mode ran)."""
-        try:
-            d = f"{self._local_fs_path().rstrip('/')}__hudi_seqclaim"
-        except NotImplementedError:
-            return 0
-        if not os.path.isdir(d):
-            return 0
-        claims = _LocalSeqClaimStore(d).list_claims()
-        return (max(claims) + 1) if claims else 0
-
     def _log_scan_next(self, spark: SparkSession) -> int:
-        """Bootstrap/fallback: the 1-row max agg over the log's seq
-        column (O(log-since-compaction) — the cost the sidecar and the
-        claim dir exist to avoid paying per append)."""
+        """The 1-row max agg over the log's seq column, floored by the
+        seqbase watermark: O(log-since-compaction), one Spark job."""
         row = (
             self._log_read(spark, columns=["__hudi_seq"])
             .agg(F.max("__hudi_seq").alias("m"))
@@ -1520,89 +1410,44 @@ class HudiTable:
         )
         return max(int(row["m"] or 0) + 1, self._seq_base())
 
-    def _next_seq(
-        self, spark: SparkSession, _store: object = _UNRESOLVED
-    ) -> int:
+    def _next_seq(self, spark: SparkSession) -> int:
         """Monotonic commit sequence for log records, floored by the
         post-compaction watermark. READ-ONLY peek — allocation (which
         must be durable and multi-writer-unique) is _alloc_seq.
 
-        O(1) via the ``__hudi_seqmax`` sidecar (the highest seq ever
-        allocated — _alloc_seq persists it before the parquet append,
-        so a crash between the two leaves a harmless seq GAP, never a
-        duplicate), or via one claim-dir LIST where a SeqClaimStore is
-        resolved (non-local schemes / forced claim mode). Without
-        either, this was a full delta-log scan per append —
-        O(log-since-compaction) on the MOR write hot path, measured at
-        1.94 s/commit by commit 120 with compaction off.
-
-        The claim and sidecar floors are COMBINED, not either/or: on a
-        local table whose ``hoodie.seq.allocation`` flipped between
-        writes, one mechanism can be stale-low (auto→claim leaves the
-        sidecar behind; claim→auto→claim leaves old claims behind), and
-        trusting the stale one alone would re-issue a live seq — two
-        commits sharing a seq merge as one. _alloc_seq keeps the
-        sidecar coherent on every claim allocation for the same
-        reason, and the combination runs in BOTH directions: claim mode
-        folds the sidecar into its candidate floor here, auto mode
-        folds surviving claims in via ``_residual_claim_floor`` (the
-        crash half of the sidecar-publish race — see _write_seqmax)."""
-        store = (
-            self._seq_claim_store() if _store is _UNRESOLVED else _store
-        )
-        cached = self._read_seqmax()
-        floor = self._seq_base() if cached is None else max(
-            cached + 1, self._seq_base()
-        )
-        if store is None:
-            # auto mode on a table that previously ran claim mode: the
-            # surviving claims outrank a stale-low sidecar (crash inside
-            # the _write_seqmax race window) — see _residual_claim_floor
-            floor = max(floor, self._residual_claim_floor())
-        if store is not None:
-            # claims are allocation ground truth — consulted BEFORE the
-            # log probe (on schemes Spark can't read directly, the probe
-            # is a guaranteed miss, and after the crash-gap case a claim
-            # can legitimately outrun the log)
-            claims = store.list_claims()
-            if claims:
-                # max(), not claims[-1]: the abstract list_claims
-                # contract does not require sorted order, and a
-                # deployment store returning listing order would
-                # otherwise re-allocate a crash-gap seq below the max
-                return max(max(claims) + 1, floor)
-        if not self._has_log(spark):
-            return floor
-        if store is not None:
-            # claim dir empty but a log exists (pre-claim table, or
-            # post-restore truncation): bootstrap from the surviving log
-            return max(self._log_scan_next(spark), floor)
-        if cached is not None:
-            return floor
-        return max(self._log_scan_next(spark), floor)
+        Every allocated seq holds a claim until compact/restore truncates
+        the claims, so with claims present the answer is one LIST: past
+        the highest claim, which is at or above the highest logged seq
+        (above it after a crash gap — claimed, never logged). With no
+        claims, a surviving log is scanned once: a table written before
+        the claim store, or one whose claims restore just truncated; the
+        next allocation re-establishes the claims. On a non-local scheme
+        with no registered store every call takes the scan."""
+        store = self._seq_claim_store
+        claims = store.list_claims() if store is not None else []
+        if claims:
+            # max(), not claims[-1]: the abstract list_claims contract
+            # does not require sorted order
+            return max(max(claims) + 1, self._seq_base())
+        if self._has_log(spark):
+            return self._log_scan_next(spark)
+        return self._seq_base()
 
     def _alloc_seq(self, spark: SparkSession, n: int = 1) -> int:
         """Durably allocate ``n`` consecutive commit seqs BEFORE the log
         append; returns the first.
 
-        Claim path (store resolved): one LIST for the candidate (via
-        the _next_seq peek — same floors, computed once), one
-        conditional PUT per seq, bump-and-retry on contention — O(1)
-        RPCs, multi-writer-unique with no lock. A lost claim restarts
-        the run just past it, so a run is always contiguous; seqs this
-        writer already won below it become gaps. Sidecar path:
-        read-modify-replace under the table lock. Either way a crash
-        after allocation wastes seqs (gaps — the read merge and cursors
-        don't care) instead of re-issuing one (two commits sharing a
-        seq would merge as one).
-
-        The sidecar is (re)written on BOTH paths — on claim allocations
-        it is redundant for the claim protocol itself but keeps the
-        sidecar coherent, so flipping ``hoodie.seq.allocation`` back to
-        auto on a local table continues the timeline instead of
-        re-issuing seqs (no-op on schemes with no local sidecar)."""
-        store = self._seq_claim_store()
-        seq = self._next_seq(spark, _store=store)
+        One LIST for the candidate (the _next_seq peek), one conditional
+        PUT per seq, bump-and-retry on contention — O(1) RPCs,
+        multi-writer-unique with no lock. A lost claim restarts the run
+        just past it, so a run is always contiguous; seqs this writer
+        already won below it become gaps. A crash after allocation
+        wastes seqs (gaps — the read merge and cursors don't care)
+        instead of re-issuing one (two commits sharing a seq would merge
+        as one). Without a store (non-local scheme, nothing registered)
+        the seq is the log scan's, unique only under the table lock."""
+        seq = self._next_seq(spark)
+        store = self._seq_claim_store
         if store is not None:
             won = 0
             while won < n:
@@ -1610,7 +1455,6 @@ class HudiTable:
                     won += 1
                 else:
                     seq, won = seq + won + 1, 0
-        self._write_seqmax(seq + n - 1)
         return seq
 
     def _delete_markers(self, keys_df: DataFrame) -> DataFrame:
@@ -1650,7 +1494,7 @@ class HudiTable:
         since the last compaction to the threshold: base, log and the
         new entry are folded in one base rewrite (compact() with the
         entry pending), and the entry is never written to the log or
-        read back from it. The base files, seqbase, seqmax and catalog
+        read back from it. The base files, seqbase, seq claims and catalog
         end state are those of appending and then calling compact(). A
         two-seq commit compacts as a whole."""
         n = 1 if markers is None else 2
@@ -1742,10 +1586,9 @@ class HudiTable:
             shutil.rmtree(log_local)
         with open(f"{self._local_fs_path().rstrip('/')}__hudi_seqbase", "w") as fh:
             fh.write(str(next_seq))
-        # the log is gone: invalidate the allocation sidecar so the
-        # seqbase watermark is the single source of truth until the
-        # next append re-establishes it
-        self._drop_seqmax()
+        # the log is gone: the seqbase watermark is the allocation floor
+        # until the next append claims past it
+        self._truncate_claims()
         # base == snapshot again: re-sync so the snapshot name returns
         self._maybe_sync_catalog(spark)
 
@@ -1876,7 +1719,7 @@ class HudiTable:
         kept = self._log_read(spark).filter(F.col("__hudi_seq") <= to_seq)
         if kept.limit(1).count() == 0:
             shutil.rmtree(log_local)
-            self._drop_seqmax()
+            self._truncate_claims()
             self._maybe_sync_catalog(spark)
             return
         # materialize the surviving log BEFORE dropping the source dir
@@ -1884,10 +1727,10 @@ class HudiTable:
         self._writer(kept, "overwrite").parquet(tmp)
         shutil.rmtree(log_local)
         os.rename(tmp, log_local)
-        # the sidecar tracks seqs that restore just discarded — drop it
+        # the claims cover seqs that restore just discarded — drop them
         # so the next _next_seq rescans the SURVIVING log and the
         # timeline continues from the savepoint, not past the gap
-        self._drop_seqmax()
+        self._truncate_claims()
         self._maybe_sync_catalog(spark)
 
     @_locked

@@ -1094,13 +1094,13 @@ def build_ivf_index(
         "centroids": [[cid, cvec] for cid, cvec in cents],
     }
     _os.makedirs(path, exist_ok=True)
-    # Publish the sidecar ATOMICALLY (tmp + os.replace, the lake.py
-    # seqmax-sidecar pattern), and only now — after the parquet data
-    # write above succeeded. A crash mid-dump must leave either no
-    # sidecar (index clearly absent, rebuild starts clean) or a
-    # complete one; an in-place json.dump could strand a TRUNCATED
-    # file that fails every later ivf_index_topk with an opaque JSON
-    # decode error and poisons rebuilds over the same path.
+    # Publish the sidecar ATOMICALLY (tmp + os.replace), and only
+    # now — after the parquet data write above succeeded. A crash
+    # mid-dump must leave either no sidecar (index clearly absent,
+    # rebuild starts clean) or a complete one; an in-place json.dump
+    # could strand a TRUNCATED file that fails every later
+    # ivf_index_topk with an opaque JSON decode error and poisons
+    # rebuilds over the same path.
     final = f"{path.rstrip('/')}/_centroids.json"
     tmp = f"{final}.tmp.{_os.getpid()}"
     with open(tmp, "w") as fh:

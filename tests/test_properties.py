@@ -450,11 +450,6 @@ _hudi_ops = st.lists(
         # staging + directory swap — the oldest partitioned path, now
         # also driven through the random sequences incl. `overwrite`
         ("COPY_ON_WRITE", None, True),
-        # r14: MOR with claim-dir seq allocation forced — the
-        # conditional-put allocator (hoodie.seq.allocation=claim) under
-        # the same random sequences, incl. interleaved compaction's
-        # claim truncation + seqbase floor re-derivation
-        ("MERGE_ON_READ", "claim", False),
     ],
 )
 def test_hudi_table_matches_dict_replay(
@@ -477,11 +472,7 @@ def test_hudi_table_matches_dict_replay(
             if inline
             else {}
         )
-        if commit_mode == "claim":
-            # not a commit mode: the claim-dir seq ALLOCATOR forced on
-            # a plain MOR table (see the parametrize comment)
-            opts["hoodie.seq.allocation"] = "claim"
-        elif commit_mode:
+        if commit_mode:
             opts["hoodie.commit.mode"] = commit_mode
         t = HudiTable(
             path=f"{tmp}/t",
@@ -567,19 +558,14 @@ def test_hudi_table_matches_dict_replay(
                     model[k] = (s, v)
                 t.insert_overwrite(batch, spark)
             elif kind == "crash_gap":
-                # the sidecar allocation-crash window: a commit seq was
-                # pre-written to __hudi_seqmax but its parquet append
-                # never landed. Later commits must skip the gap (never
-                # re-issue a seq) and every read/merge/compaction path
-                # must be unaffected — the model ignores it entirely.
-                import os as _os
-
-                side = t.path + "__hudi_seqmax"
-                if _os.path.exists(side):
-                    with open(side) as fh:
-                        cur = int(fh.read().strip() or "0")
-                    with open(side, "w") as fh:
-                        fh.write(str(cur + 1))
+                # the allocation-crash window: a commit seq was claimed
+                # but its parquet append never landed. Later commits
+                # must skip the gap (never re-issue a seq) and every
+                # read/merge/compaction path must be unaffected — the
+                # model ignores it entirely.
+                claims = t._seq_claim_store.list_claims()
+                if claims:
+                    t._seq_claim_store.claim(max(claims) + 1)
             else:  # del_mixed — stale valued + NULL marker, same keys
                 t.delete(
                     spark.createDataFrame(

@@ -518,7 +518,7 @@ def test_single_append_cdc_apply_matches_two_commits(spark, tmp_path, caplog):
             for t in twins:
                 assert t._seq_base() == 4, t.table_name
                 assert not os.path.exists(t._log_path), t.table_name
-                assert t._read_seqmax() is None, t.table_name
+                assert t._seq_claim_store.list_claims() == [], t.table_name
                 assert catalog(t) == [True, True, True], t.table_name
             same_timeline()
         else:

@@ -2391,9 +2391,8 @@ def test_materialize_gates_reliable_checkpoint_on_cleaner_conf(
 
 
 # ---------------------------------------------------------------------------
-# MOR seq-allocation sidecar (__hudi_seqmax) — O(1) _next_seq on the
-# write hot path (r10 probe: the log-scan form cost 1.94 s/commit by
-# commit 120 with compaction off)
+# MOR commit seqs: claimed through the table's SeqClaimStore before the
+# log append, truncated with the log on compact/restore
 # ---------------------------------------------------------------------------
 
 
@@ -2407,40 +2406,19 @@ def _mor(tmp_path, name="sx", **options):
     )
 
 
-def test_seqmax_sidecar_tracks_allocation_and_matches_log_scan(spark, tmp_path):
-    """Each MOR append pre-writes the allocation sidecar; the O(1) answer
-    must equal the log-scan fallback's at every step."""
-    t = _mor(tmp_path)
-    t.bulk_insert(spark.createDataFrame([(1, 1, "a")], "id int, ver int, v string"))
-    side = t.path + "__hudi_seqmax"
-    assert not os.path.exists(side), "genesis load must not allocate a log seq"
-    for i in range(4):
-        t.upsert(
-            spark.createDataFrame([(1, 2 + i, f"v{i}")], "id int, ver int, v string")
-        )
-        with open(side) as fh:
-            assert int(fh.read()) == i
-        fast = t.latest_commit_seq(spark)
-        os.remove(side)  # force the log-scan fallback
-        assert t.latest_commit_seq(spark) == fast == i
-        # fallback path must not resurrect the sidecar (read-only)
-        assert not os.path.exists(side)
-    # pre-sidecar table: next append re-establishes it past the scan max
-    t.upsert(spark.createDataFrame([(9, 1, "z")], "id int, ver int, v string"))
-    with open(side) as fh:
-        assert int(fh.read()) == 4
+def _claims(t):
+    return t._seq_claim_store.list_claims()
 
 
 def test_seqmax_crash_gap_never_duplicates_a_seq(spark, tmp_path):
-    """Allocate-before-append: a crash after the sidecar write but
-    before the parquet append must leave a GAP, not re-issue the seq
-    (two commits sharing a seq would merge as one)."""
+    """Allocate-before-append: a crash after the seq claim but before
+    the parquet append must leave a GAP, not re-issue the seq (two
+    commits sharing a seq would merge as one)."""
     t = _mor(tmp_path)
     t.bulk_insert(spark.createDataFrame([(1, 1, "a")], "id int, ver int, v string"))
     t.upsert(spark.createDataFrame([(1, 2, "b")], "id int, ver int, v string"))
-    # simulate the crash window: seq 1 allocated, append never landed
-    with open(t.path + "__hudi_seqmax", "w") as fh:
-        fh.write("1")
+    # simulate the crash window: seq 1 claimed, append never landed
+    assert t._seq_claim_store.claim(1)
     t.upsert(spark.createDataFrame([(1, 3, "c")], "id int, ver int, v string"))
     seqs = sorted(
         r["__hudi_seq"]
@@ -2455,12 +2433,11 @@ def test_seqmax_crash_gap_never_duplicates_a_seq(spark, tmp_path):
 
 
 def test_seqmax_dropped_on_compact_and_restore(spark, tmp_path):
-    """compact()/restore() remove log entries, so both must invalidate
-    the sidecar: after compaction the seqbase watermark rules; after
+    """compact()/restore() remove log entries, so both must truncate
+    the seq claims: after compaction the seqbase watermark rules; after
     restore the timeline continues from the SAVEPOINT, not past the
     discarded seqs."""
     t = _mor(tmp_path)
-    side = t.path + "__hudi_seqmax"
     t.bulk_insert(spark.createDataFrame([(1, 1, "a")], "id int, ver int, v string"))
     for i in range(3):
         t.upsert(
@@ -2469,19 +2446,96 @@ def test_seqmax_dropped_on_compact_and_restore(spark, tmp_path):
     sp = t.savepoint(spark)  # seq 2
     assert sp == 2
     t.upsert(spark.createDataFrame([(1, 9, "doomed")], "id int, ver int, v string"))
+    assert _claims(t) == [0, 1, 2, 3]
     t.restore(spark, to_seq=sp)
-    assert not os.path.exists(side), "restore left a stale allocation sidecar"
+    assert _claims(t) == [], "restore left stale seq claims"
     assert t.latest_commit_seq(spark) == sp
     assert {r["v"] for r in t.read(spark).collect()} == {"v2"}
     # timeline continues from the savepoint: next commit takes seq 3
     t.upsert(spark.createDataFrame([(1, 10, "new")], "id int, ver int, v string"))
     assert t.latest_commit_seq(spark) == 3
     t.compact(spark)
-    assert not os.path.exists(side), "compact left a stale allocation sidecar"
+    assert _claims(t) == [], "compact left stale seq claims"
     assert t.latest_commit_seq(spark) == 3  # watermark continues the timeline
     t.upsert(spark.createDataFrame([(1, 11, "post")], "id int, ver int, v string"))
     assert t.latest_commit_seq(spark) == 4
     assert {r["v"] for r in t.read(spark).collect()} == {"post"}
+
+
+@pytest.mark.parametrize("stale_seqmax", [2, 9])
+def test_seq_claim_bootstraps_from_log_of_sidecar_layout(
+    spark, tmp_path, stale_seqmax
+):
+    """A table written by a build that kept the next seq in a
+    ``__hudi_seqmax`` sidecar has log seqs but no claim dir. Its next
+    commit bootstraps from the log (seq 3 after log seqs 0..2) and
+    ignores the sidecar, even one left above the logged max by a crash
+    gap; time travel and incremental reads stay exact."""
+    import shutil
+
+    t = _mor(tmp_path)
+    row = lambda ver: spark.createDataFrame(  # noqa: E731
+        [(ver % 3, ver, f"v{ver}")], "id int, ver int, v string"
+    )
+    t.bulk_insert(row(0))
+    for ver in (1, 2, 3):
+        t.upsert(row(ver))  # seqs 0, 1, 2
+    shutil.rmtree(t.path + "__hudi_seqclaim", ignore_errors=True)
+    with open(t.path + "__hudi_seqmax", "w") as fh:
+        fh.write(str(stale_seqmax))
+    t = _mor(tmp_path)  # a fresh instance, as after an upgrade
+    t.upsert(row(4))
+    assert t.latest_commit_seq(spark) == 3
+    assert _claims(t) == [3]
+    log = spark.read.parquet(t.path + "__hudi_log")
+    seqs = sorted(r["__hudi_seq"] for r in log.select("__hudi_seq").collect())
+    assert seqs == [0, 1, 2, 3], seqs
+    state = lambda df: {r["id"]: r["v"] for r in df.collect()}  # noqa: E731
+    assert state(t.read(spark)) == {0: "v3", 1: "v4", 2: "v2"}
+    assert state(t.read(spark, as_of_seq=2)) == {0: "v3", 1: "v1", 2: "v2"}
+    assert state(t.read(spark, as_of_seq=0)) == {0: "v0", 1: "v1"}
+    assert state(t.read_incremental(spark, since_seq=2)) == {1: "v4"}
+    assert state(t.read_incremental(spark, since_seq=0)) == {
+        0: "v3", 1: "v4", 2: "v2",
+    }
+
+
+def test_mor_partition_values_of_mixed_inferred_types(spark, tmp_path):
+    """Base partition dirs p=1, p=2 infer INT and a log dir p=x infers
+    STRING: the merge reads them as STRING instead of failing the
+    union's cast of 'x' to a number, compaction returns the same
+    snapshot, and an all-numeric table keeps its INT partition type."""
+    from pyspark.sql.types import IntegerType, StringType
+
+    sch = "id int, ver int, p string, v string"
+
+    def table(name):
+        return HudiTable(
+            path=str(tmp_path / name),
+            record_key="id",
+            precombine="ver",
+            partition_field="p",
+            table_type="MERGE_ON_READ",
+        )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("id", "p", "v").collect())
+
+    t = table("mixed")
+    t.bulk_insert(spark.createDataFrame([(1, 1, "1", "a"), (2, 1, "2", "b")], sch))
+    t.upsert(spark.createDataFrame([(3, 1, "x", "c")], sch))
+    snap = t.read(spark)
+    assert snap.schema["p"].dataType == StringType()
+    want = [(1, "1", "a"), (2, "2", "b"), (3, "x", "c")]
+    assert rows(snap) == want
+    t.compact(spark)
+    assert rows(t.read(spark)) == want
+    n = table("numeric")
+    n.bulk_insert(spark.createDataFrame([(1, 1, "1", "a"), (2, 1, "2", "b")], sch))
+    n.upsert(spark.createDataFrame([(3, 1, "3", "c")], sch))
+    snap = n.read(spark)
+    assert snap.schema["p"].dataType == IntegerType()
+    assert rows(snap) == [(1, 1, "a"), (2, 2, "b"), (3, 3, "c")]
 
 
 def test_read_cdc_delta_pruned_plan(spark, tmp_path):
@@ -3542,7 +3596,7 @@ def test_lock_serializes_overwrite_vs_upsert_on_partitioned_manifest(
     assert not os.path.exists(t.path + "__hudi_lock"), "lock leaked"
 
 
-# -- seq claim dir (r14: O(1) non-local MOR seq allocation) -------------
+# -- seq claim stores: O(1) MOR seq allocation on any scheme -----------
 
 
 class _MemClaimStore:
@@ -3582,8 +3636,8 @@ class _MemClaimStore:
 def test_seq_claim_nonlocal_allocation_is_o1(spark):
     """On a non-local scheme with a registered SeqClaimStore, MOR seq
     allocation is O(1) conditional-put RPCs — one LIST + one PUT per
-    allocation, never the per-append Spark log scan (the O(log) cost
-    the 120-commit probe condemned). The log-scan fallback is
+    allocation, never the per-append Spark log scan (O(log) since the
+    last compaction). The log-scan fallback is
     monkeypatch-poisoned to prove it is never consulted once claims
     exist."""
     from hudi_spark_utilities_plus_spark import lake as L
@@ -3631,18 +3685,23 @@ def test_seq_claim_nonlocal_allocation_is_o1(spark):
         assert t._next_seq(spark) == 6
         assert store.rpc["list"] - base["list"] == 1
         assert store.rpc["put"] == base["put"]
-        # truncation (what _drop_seqmax does on compact/restore)
-        t._drop_seqmax()
+        # truncation (what compact/restore do with the log)
+        t._truncate_claims()
         assert store.claims == set()
     finally:
         L.unregister_seq_claim_store("mem-s3")
+    # no store registered: no claims, allocation scans the log
+    assert HudiTable(
+        path="mem-s3://bucket/tbl", record_key="id", precombine="ver",
+        table_type="MERGE_ON_READ",
+    )._seq_claim_store is None
 
 
 def test_seq_claim_concurrent_allocators_unique_dense(spark):
     """Claims are natively multi-writer-unique WITHOUT the table lock:
     concurrent allocators against one store produce distinct, dense
-    seqs (the /tmp prototype measured 320/320 distinct dense across 8
-    OS processes; threads exercise the same code path here)."""
+    seqs (threads here; the multiprocess test below covers OS
+    processes)."""
     import threading as th
 
     from hudi_spark_utilities_plus_spark import lake as L
@@ -3687,18 +3746,16 @@ def test_seq_claim_concurrent_allocators_unique_dense(spark):
 
 
 def test_seq_claim_mode_forced_local_full_lifecycle(spark, tmp_path):
-    """hoodie.seq.allocation=claim on a local table routes allocation
-    through the hard-link claim dir (the object-store protocol,
-    measurable on this filesystem): full MOR lifecycle — writes, merge
-    reads, compaction (claims truncated, seqbase advances, cursors
-    stay valid), incremental read — stays exact, and the claim files
-    mirror the allocated seqs."""
+    """A local MOR table with default options allocates through the
+    hard-link claim dir: full MOR lifecycle — writes, merge reads,
+    compaction (claims truncated, seqbase advances, cursors stay
+    valid), incremental read — stays exact, and the claim files mirror
+    the allocated seqs."""
     t = HudiTable(
         path=str(tmp_path / "claimt"),
         record_key="id",
         precombine="ver",
         table_type="MERGE_ON_READ",
-        options={"hoodie.seq.allocation": "claim"},
     )
     t.bulk_insert(
         spark.createDataFrame(
@@ -3715,6 +3772,8 @@ def test_seq_claim_mode_forced_local_full_lifecycle(spark, tmp_path):
         int(f[4:16]) for f in os.listdir(claim_dir) if f.endswith(".claim")
     )
     assert claimed == [0, 1], claimed  # upsert=0, delete=1
+    # the one-LIST answer agrees with a scan of the log
+    assert t._next_seq(spark) == t._log_scan_next(spark) == 2
     assert {r["id"]: r["v"] for r in t.read(spark).collect()} == {1: "a2", 3: "c"}
     cursor = t.latest_commit_seq(spark)
     t.compact(spark)
@@ -3737,21 +3796,6 @@ def test_seq_claim_mode_forced_local_full_lifecycle(spark, tmp_path):
     }
 
 
-def test_seq_claim_mode_nonlocal_without_store_raises():
-    """hoodie.seq.allocation=claim is an explicit promise of O(1)
-    allocation: on a scheme with no registered store it must refuse
-    loudly, not silently degrade to the per-append log scan."""
-    t = HudiTable(
-        path="s3://bucket/tbl",
-        record_key="id",
-        precombine="ver",
-        table_type="MERGE_ON_READ",
-        options={"hoodie.seq.allocation": "claim"},
-    )
-    with pytest.raises(NotImplementedError, match="SeqClaimStore"):
-        t._seq_claim_store()
-
-
 def test_seq_claim_local_store_conditional_put(tmp_path):
     """The built-in local claim store: put-if-absent wins exactly once
     per seq across racing writers (hard-link conditional put), listing
@@ -3770,204 +3814,66 @@ def test_seq_claim_local_store_conditional_put(tmp_path):
     assert os.path.exists(tmp_path / "claims" / "garbage.txt")
 
 
-def test_seq_claim_mode_flip_stays_monotonic(spark, tmp_path):
-    """Flipping hoodie.seq.allocation between auto and claim on an
-    existing local MOR table must never re-issue a live seq (two
-    commits sharing a seq merge as one): the claim path keeps the
-    sidecar coherent on every allocation, and the peek combines the
-    claim and sidecar floors — found by the r14 review, pinned here in
-    both flip directions."""
-    from hudi_spark_utilities_plus_spark.lake import HudiTable
-
-    path = str(tmp_path / "flip")
-
-    def tbl(mode):
-        return HudiTable(
-            path=path,
-            record_key="id",
-            precombine="ver",
-            table_type="MERGE_ON_READ",
-            options={"hoodie.seq.allocation": mode} if mode else {},
-        )
-
-    rows = lambda k, ver: spark.createDataFrame(  # noqa: E731
-        [(k, ver, f"v{ver}")], "id int, ver int, v string"
-    )
-    # auto: seqs 0, 1 via the sidecar
-    t = tbl(None)
-    t.bulk_insert(rows(1, 1))
-    t.upsert(rows(1, 2))
-    t.upsert(rows(1, 3))
-    assert t.latest_commit_seq(spark) == 1
-    # flip to claim: must continue at 2 (log bootstrap), and keep the
-    # sidecar coherent for the flip back
-    t = tbl("claim")
-    t.upsert(rows(1, 4))
-    assert t.latest_commit_seq(spark) == 2
-    # flip back to auto: the stale pre-flip sidecar (1) must NOT win —
-    # seq 3, not a duplicate of the claim-allocated 2
-    t = tbl(None)
-    t.upsert(rows(1, 5))
-    assert t.latest_commit_seq(spark) == 3
-    # flip to claim again: stale-low claims ({2}) must not win either —
-    # the sidecar floor lifts the candidate past the auto-allocated 3
-    t = tbl("claim")
-    t.upsert(rows(1, 6))
-    assert t.latest_commit_seq(spark) == 4
-    # two CONCURRENT claimers interleaving their sidecar publishes (the
-    # ADVICE r14 race, fixed r16): A wins claim 5, B wins claim 6; B
-    # publishes the sidecar first, A's LOWER publish lands last. The
-    # monotonic max-merge must keep 6 — a blind replace stranded the
-    # sidecar at 5, and the flip back to auto then re-issued the live
-    # seq 6 (two commits sharing a seq merge as one).
-    store = t._seq_claim_store()
-    assert store.claim(5) is True  # claimer A
-    assert store.claim(6) is True  # claimer B
-    t._write_seqmax(6)  # B publishes first
-    t._write_seqmax(5)  # A's stale-low publish interleaves LAST
-    assert t._read_seqmax() == 6
-    # flip back to auto: allocation continues past both live claims
-    # (seqs 5/6 are crash-gaps — claimed, never logged — and gaps are
-    # harmless; re-ISSUING one would not be)
-    t = tbl(None)
-    t.upsert(rows(1, 7))
-    assert t.latest_commit_seq(spark) == 7
-    # every commit distinct: 6 log entries at 6 distinct seqs, newest wins
-    log = spark.read.parquet(path + "__hudi_log")
-    seqs = sorted(r["__hudi_seq"] for r in log.select("__hudi_seq").collect())
-    assert seqs == [0, 1, 2, 3, 4, 7], seqs
-    assert [r["v"] for r in t.read(spark).collect()] == ["v7"]
-
-
-def test_seq_claim_crash_stranded_sidecar_floors_on_claims(spark, tmp_path):
-    """The CRASH half of the sidecar-publish race: a claimer that dies
-    inside the publish window (or a pre-monotonic build whose blind
-    replace lost) strands the sidecar BELOW a live, logged seq. The
-    first auto-mode allocation after the claim->auto flip must floor on
-    the SURVIVING claims (allocation ground truth — they are only ever
-    removed together with the sidecar), not trust the stale sidecar and
-    re-issue the live seq."""
-    from hudi_spark_utilities_plus_spark.lake import HudiTable
-
-    path = str(tmp_path / "strand")
-
-    def tbl(mode):
-        return HudiTable(
-            path=path,
-            record_key="id",
-            precombine="ver",
-            table_type="MERGE_ON_READ",
-            options={"hoodie.seq.allocation": mode} if mode else {},
-        )
-
-    rows = lambda k, ver: spark.createDataFrame(  # noqa: E731
-        [(k, ver, f"v{ver}")], "id int, ver int, v string"
-    )
-    t = tbl("claim")
-    t.bulk_insert(rows(1, 1))  # base write — allocates no seq
-    t.upsert(rows(1, 2))
-    t.upsert(rows(1, 3))  # seqs 0,1 claimed AND logged
-    assert t.latest_commit_seq(spark) == 1
-    # strand the sidecar low, bypassing the monotonic merge — exactly
-    # what a crash between claim-win and publish leaves behind
-    with open(path + "__hudi_seqmax", "w") as fh:
-        fh.write("0")
-    t = tbl(None)
-    t.upsert(rows(1, 4))  # must allocate 2, NOT re-issue the live 1
-    assert t.latest_commit_seq(spark) == 2
-    log = spark.read.parquet(path + "__hudi_log")
-    seqs = sorted(r["__hudi_seq"] for r in log.select("__hudi_seq").collect())
-    assert seqs == [0, 1, 2], seqs
-    assert [r["v"] for r in t.read(spark).collect()] == ["v4"]
-
-
-def test_seqmax_publish_monotonic_and_debris_free(tmp_path):
-    """The monotonic publish in isolation: interleaved stale-low
-    publishes never regress the sidecar (every adversarial order of a
-    seeded shuffle reads back as the running max), and the tmp+replace
-    leaves no debris. Note the LOCK-FREE guarantee is deliberately
-    best-effort — a replace delayed past another writer's final verify
-    read can still strand the value low (so can a crash), which is why
-    allocation SAFETY never rests on the sidecar alone: claims are
-    ground truth in claim mode and the residual-claim floor covers the
-    auto flip (pinned end-to-end in the two tests above and the thread
-    race below)."""
-    import os
-    import random
-
-    from hudi_spark_utilities_plus_spark.lake import HudiTable
-
-    t = HudiTable(
-        path=str(tmp_path / "pub"), record_key="id", precombine="ver"
-    )
-    seqs = list(range(100))
-    random.Random(16).shuffle(seqs)
-    hi = -1
-    for s in seqs:
-        t._write_seqmax(s)
-        hi = max(hi, s)
-        assert t._read_seqmax() == hi, (s, hi)
-    assert t._read_seqmax() == 99
-    debris = [f for f in os.listdir(tmp_path) if ".tmp." in f]
-    assert debris == [], debris
-
-
 def test_seq_claim_threaded_allocators_unique_and_no_reissue(spark, tmp_path):
-    """Two CONCURRENT lock-free claim-mode allocators (own table
-    instances, same path, no lock provider — the exact topology of the
-    ADVICE r14 race): every allocated seq is distinct, and after the
-    flip to auto the next allocation exceeds ALL of them even though
-    the racing sidecar publishes may have interleaved arbitrarily —
-    the surviving-claims floor, not sidecar luck, carries the
-    guarantee."""
+    """Concurrent allocators on their own table instances of one local
+    MOR path, default options, no lock provider, more threads than
+    cores: every allocated seq is distinct and the set is dense (the
+    conditional put arbitrates), and the next commit lands past all of
+    them."""
+    import sys
     import threading
-
-    from hudi_spark_utilities_plus_spark.lake import HudiTable
 
     path = str(tmp_path / "race")
 
-    def tbl(mode):
+    def tbl():
         return HudiTable(
             path=path,
             record_key="id",
             precombine="ver",
             table_type="MERGE_ON_READ",
-            options={"hoodie.seq.allocation": mode} if mode else {},
         )
 
-    t0 = tbl("claim")
+    t0 = tbl()
     t0.bulk_insert(
         spark.createDataFrame([(1, 1, "a")], "id int, ver int, v string")
     )
     t0.upsert(
         spark.createDataFrame([(1, 2, "b")], "id int, ver int, v string")
     )  # seq 0 claimed+logged: the racing peeks below never need the log
-    got: dict[int, list[int]] = {0: [], 1: []}
-    barrier = threading.Barrier(2)
+    workers, per_worker = 8, 50
+    got: dict[int, list[int]] = {w: [] for w in range(workers)}
+    barrier = threading.Barrier(workers)
 
     def alloc(worker: int) -> None:
-        t = tbl("claim")
+        t = tbl()
         barrier.wait()
-        for _ in range(20):
+        for _ in range(per_worker):
             got[worker].append(t._alloc_seq(spark))
 
-    threads = [threading.Thread(target=alloc, args=(w,)) for w in (0, 1)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    allocated = got[0] + got[1]
-    assert len(set(allocated)) == 40, sorted(allocated)
-    assert min(allocated) == 1 and max(allocated) == 40
-    # flip to auto mid-race-debris: allocation must continue PAST every
-    # claimed seq regardless of where the interleaved publishes left
-    # the sidecar
-    t = tbl(None)
-    assert t._next_seq(spark) == 41
+    threads = [
+        threading.Thread(target=alloc, args=(w,)) for w in range(workers)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads), "allocator hung"
+    allocated = sorted(s for seqs in got.values() for s in seqs)
+    n = workers * per_worker
+    assert len(set(allocated)) == n, f"{len(set(allocated))}/{n} distinct"
+    assert allocated == list(range(1, n + 1)), "seqs not dense"
+    t = tbl()
+    assert t._next_seq(spark) == n + 1
     t.upsert(
         spark.createDataFrame([(1, 3, "c")], "id int, ver int, v string")
     )
-    assert t.latest_commit_seq(spark) == 41
+    assert t.latest_commit_seq(spark) == n + 1
+    assert [r["v"] for r in t.read(spark).collect()] == ["c"]
 
 
 def _claim_worker(args):
@@ -3992,9 +3898,8 @@ def test_seq_claim_local_store_multiprocess_unique_dense(tmp_path):
     """The hard-link conditional put is atomic ACROSS OS PROCESSES, not
     just threads (the GIL serializes the thread test's os calls far
     more than real multi-writer deployments): 8 processes × 25 greedy
-    claims against one directory must produce 200 distinct, dense seqs
-    — the SURVEY §14.14 prototype's 320/320 result, now pinned in the
-    suite at CI scale."""
+    claims against one directory must produce 200 distinct, dense
+    seqs."""
     from multiprocessing import Pool
 
     d = str(tmp_path / "mpclaims")

@@ -1,8 +1,13 @@
-"""120-commit MOR upsert probe (r10 regression probe, VERDICT item 6):
-5-row batches, compaction OFF vs ON; per-20-commit bucket medians +
-read-after cost."""
+"""120-commit MOR upsert probe: 5-row batches with inline compaction OFF
+vs ON; prints the per-20-commit bucket medians of the upsert wall and
+the cost of one read after. With compaction off, 120 seq claims pile up
+in the claim dir, so flat bucket medians show that allocation (one
+claim LIST + one conditional put per commit) adds no per-commit drift.
+
+    python tools/probes/timeline_probe.py
+"""
 import sys, time, statistics, shutil, os
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".."))
 from pyspark.sql import SparkSession
 from hudi_spark_utilities_plus_spark.lake import HudiTable
 
@@ -19,9 +24,8 @@ def run(tag, options):
     p = f"/tmp/probe/t_{tag}"
     for d in (p, p + "__hudi_log", p + "__hudi_seqclaim"):
         shutil.rmtree(d, ignore_errors=True)
-    for f in (p + "__hudi_seqbase", p + "__hudi_seqmax"):
-        if os.path.exists(f):
-            os.remove(f)
+    if os.path.exists(p + "__hudi_seqbase"):
+        os.remove(p + "__hudi_seqbase")
     t = HudiTable(path=p, record_key="id", precombine="ver",
                   table_type="MERGE_ON_READ", options=options)
     t.bulk_insert(spark.range(1000).selectExpr("id", "0 as ver", "uuid() as v"))
@@ -39,9 +43,4 @@ def run(tag, options):
 
 run("compaction_off", {})
 run("compaction_on", {"hoodie.compact.inline": "true"})
-# r14: seq allocation through the claim-dir conditional put (the
-# object-store protocol, forced on this local path) — must stay FLAT
-# like the sidecar, vs the log-scan fallback's per-append drift the
-# r13 /tmp prototype measured at [0.52..0.65] s
-run("claim_alloc", {"hoodie.seq.allocation": "claim"})
 spark.stop()
