@@ -13,13 +13,18 @@
   ‖c₁-c₂‖ ≤ r₁ + r₂ + √(2-2τ)). Candidates are the members of surviving
   cluster pairs — an equi-join on the cluster key — then exact cosine
   verifies. Unlike hyperplane banding, recall is 100% by construction at
-  ANY τ (the round-2 design needed ~83 4-bit bands at τ=0.45 and its
-  candidate set degenerated to all-pairs); pruning power now tracks data
-  clusteredness, which is the realistic shape of embedding corpora.
+  ANY τ (banding needs ~83 4-bit bands at τ=0.45, and its candidate set
+  degenerates to all-pairs); pruning power tracks data clusteredness,
+  which is the realistic shape of embedding corpora.
 - **LSH-bucketed ANN** — the top-k scale path: random-hyperplane
   signatures (deterministic seeded projections) bucket both sides; only
   same-bucket (plus multiprobe-adjacent) pairs are scored.
 - **IVF ANN** — inverted-file top-k via the same k-means machinery.
+
+The top-k engines share one core: `_queries` / `_corpus` project the two
+sides, `_rank_topk` scores and ranks the candidates, and the IVF engines
+share `_ivf_train` / `_ivf_probes` / `_ivf_search`. Each engine keeps
+only its own candidate generation.
 
 All math is double-precision with a fixed left-fold order so results are
 bit-identical to the DuckDB oracle's list_transform/list_sum pipeline.
@@ -91,55 +96,151 @@ def _valid_vecs(df: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def _check_query_dim(queries: DataFrame, vec_col: str, dim: int) -> None:
-    """Query-side width guard (same silent-collapse failure _check_dim
-    exists for, on the other input): a mismatched query vector null-pads
-    every zip_with projection, packs all-zero band keys, and returns
-    garbage top-k with no error. Empty query frames pass — the result is
-    simply empty. The probe looks at the first VALID vector — a leading
-    NULL/empty row must not crash the guard (F.size(NULL) is NULL under
-    ANSI and int(None) raises), since _valid_vecs drops such rows from
-    the computation anyway."""
-    row = (
-        _valid_vecs(queries, vec_col)
-        .select(F.size(F.col(vec_col)).alias("d"))
-        .first()
-    )
-    if row is not None and row["d"] is not None and int(row["d"]) != dim:
-        raise ValueError(
-            f"query vector width {int(row['d'])} does not match the "
-            f"corpus width {dim} for column {vec_col!r}"
-        )
-
-
-def _check_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
-    """Resolve/validate the vector width. A wrong ``dim`` used to fail
-    SILENTLY: zip_with pads with nulls, every hyperplane dot goes null,
-    all sign bits collapse to one bucket and the candidate equi-join
-    degenerates to all-pairs. Fail loudly instead — but an EMPTY corpus
-    with an explicit ``dim`` is fine (the result is simply empty; a
-    filtered-out partition must not crash the caller). Probes the first
-    VALID vector: a leading NULL/empty row is _valid_vecs-dropped later,
-    so it must not crash the inference here either."""
+def _first_width(df: DataFrame, vec_col: str) -> int | None:
+    """Width of the first VALID vector, or None when there is none. A
+    leading NULL/empty row must not decide (or crash) the probe:
+    _valid_vecs drops such rows from the computation anyway."""
     row = (
         _valid_vecs(df, vec_col)
         .select(F.size(F.col(vec_col)).alias("d"))
         .first()
     )
-    if row is None or row["d"] is None:
+    return None if row is None else int(row["d"])
+
+
+def _check_width(
+    df: DataFrame,
+    vec_col: str,
+    dim: int,
+    side: str = "query",
+    ref: str = "corpus",
+) -> None:
+    """Width guard for the side that must match a known width (the query
+    batch against the corpus, or a corpus against a codebook): a
+    mismatched vector null-pads every zip_with projection, packs
+    all-zero band keys, and returns garbage top-k with no error. Empty
+    frames pass — the result is simply empty. Probes the caller's own
+    frame and column, so the message names the column the caller
+    passed."""
+    width = _first_width(df, vec_col)
+    if width is not None and width != dim:
+        raise ValueError(
+            f"{side} vector width {width} does not match the {ref} width "
+            f"{dim} for column {vec_col!r}"
+        )
+
+
+def _check_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
+    """Resolve/validate the vector width. A wrong ``dim`` would fail
+    SILENTLY: zip_with pads with nulls, every hyperplane dot goes null,
+    all sign bits collapse to one bucket and the candidate equi-join
+    degenerates to all-pairs. Fail loudly instead — but an EMPTY corpus
+    with an explicit ``dim`` is fine (the result is simply empty; a
+    filtered-out partition must not crash the caller)."""
+    actual = _first_width(df, vec_col)
+    if actual is None:
         if dim is not None:
             return dim
         raise ValueError(
             f"cannot infer dim: no rows with a valid vector in column "
             f"{vec_col!r}"
         )
-    actual = int(row["d"])
     if dim is not None and dim != actual:
         raise ValueError(
             f"dim={dim} does not match the width of {vec_col!r} "
             f"(first row has {actual} elements)"
         )
     return actual
+
+
+def _check_against_corpus(
+    embeddings: DataFrame, queries: DataFrame, vec_col: str
+) -> None:
+    """Query width guard against the corpus's own width; an empty corpus
+    has no width to compare, and its top-k is simply empty."""
+    dim = _first_width(embeddings, vec_col)
+    if dim is not None:
+        _check_width(queries, vec_col, dim)
+
+
+# ---------------------------------------------------------------------------
+# shared top-k core: one projection per side, one cosine rank tail
+# ---------------------------------------------------------------------------
+
+
+def _queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Query side of every top-k engine: (query_id, q_vec, q_norm) over
+    the valid query vectors, q_vec widened to double."""
+    return (
+        _valid_vecs(queries, vec_col)
+        .select(
+            F.col(id_col).alias("query_id"),
+            as_double(F.col(vec_col)).alias("q_vec"),
+        )
+        .withColumn("q_norm", l2_norm(F.col("q_vec")))
+    )
+
+
+def _corpus(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Corpus side of every top-k engine: (neighbor_id, v, d_norm) over
+    the valid corpus vectors, scattered so a single-file corpus does not
+    pin every dot product to one core."""
+    return (
+        _scatter(_valid_vecs(embeddings, vec_col))
+        .select(
+            F.col(id_col).alias("neighbor_id"),
+            as_double(F.col(vec_col)).alias("v"),
+        )
+        .withColumn("d_norm", l2_norm(F.col("v")))
+    )
+
+
+def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Exact cosine over (query, neighbor) candidates carrying both
+    projections, then the per-query top-k. try_divide: a zero-norm
+    vector has no direction, so its cosine is NULL (plain `/` throws
+    DIVIDE_BY_ZERO under Spark 4's default ANSI mode). Ranking ties
+    break on neighbor id, so the order is deterministic."""
+    scored = cand.withColumn(
+        "cos_sim",
+        F.try_divide(
+            dot(F.col("q_vec"), F.col("v")),
+            F.col("q_norm") * F.col("d_norm"),
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "cos_sim", "rnk")
+    )
+
+
+def _empty_topk(spark, query_id_type, neighbor_id_type) -> DataFrame:
+    """Empty top-k result with the schema the non-empty path yields:
+    query_id typed like the caller's id column and neighbor_id like the
+    corpus's. A hardcoded long would type-skew unions and writers on
+    exactly the empty-input edge."""
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
+
+    return spark.createDataFrame(
+        [],
+        StructType(
+            [
+                StructField("query_id", query_id_type),
+                StructField("neighbor_id", neighbor_id_type),
+                StructField("cos_sim", DoubleType()),
+                StructField("rnk", IntegerType()),
+            ]
+        ),
+    )
 
 
 def cosine_topk_bruteforce(
@@ -157,44 +258,12 @@ def cosine_topk_bruteforce(
     work is one dot product (identical float result: sqrt(dot(v,v)) is
     the same value whether computed before or inside the join).
     """
-    corpus_row = (
-        _valid_vecs(embeddings, vec_col)
-        .select(F.size(F.col(vec_col)).alias("d"))
-        .first()
-    )
-    if corpus_row is not None and corpus_row["d"] is not None:
-        _check_query_dim(queries, vec_col, int(corpus_row["d"]))
-    docs = (
-        _scatter(_valid_vecs(embeddings, vec_col))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("d_vec"),
-        )
-        .withColumn("d_norm", l2_norm(F.col("d_vec")))
-    )
-    qs = (
-        _valid_vecs(queries, vec_col).select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("q_vec")
-        )
-        .withColumn("q_norm", l2_norm(F.col("q_vec")))
-    )
-    scored = docs.join(
+    _check_against_corpus(embeddings, queries, vec_col)
+    qs = _queries(queries, id_col, vec_col)
+    cand = _corpus(embeddings, id_col, vec_col).join(
         F.broadcast(qs), F.col("neighbor_id") != F.col("query_id")
-    ).withColumn(
-        "cos_sim",
-        F.try_divide(
-            dot(F.col("q_vec"), F.col("d_vec")),
-            F.col("q_norm") * F.col("d_norm"),
-        ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _rank_topk(cand, k)
 
 
 # ---------------------------------------------------------------------------
@@ -204,12 +273,10 @@ def cosine_topk_bruteforce(
 
 def _centroid_means_rows(assigned: DataFrame, vec_field: str) -> list:
     """Per-(cluster, position) element means as k × dim COLLECTED rows —
-    metadata-scale (k clusters × vector dim). The ordered-array rebuild
-    the r16 form ran as a second, cluster-keyed Spark aggregation
-    (posexplode → (cluster, pos) means → collect_list/array_sort) is
-    driver-side assembly in ``_kmeans`` instead: one Spark stage per
-    Lloyd round, not two, with the SAME per-(cluster, pos) ``avg``
-    aggregate — centroid values are bit-identical (r17)."""
+    metadata-scale (k clusters × vector dim). ``_kmeans`` assembles the
+    ordered centroid arrays driver-side from these rows, so each Lloyd
+    round is one Spark aggregation, not a second cluster-keyed
+    collect_list/array_sort pass."""
     return (
         assigned.select("cluster", F.posexplode(vec_field).alias("pos", "val"))
         .groupBy("cluster", "pos")
@@ -240,8 +307,8 @@ def _assign_nearest(
     per-centroid literal fold subtrees are linear but still dominate
     wall time at small scale.)
 
-    Both projected columns are wrapped in ``opaque()`` (guide §4.4, the
-    r16 pushdown barrier): the k×dim argmin tree must never become a
+    Both projected columns are wrapped in ``opaque()`` (the pushdown
+    barrier): the k×dim argmin tree must never become a
     Catalyst CONSTRAINT. Constraint propagation turns the alias into
     ``cluster = <argmin tree>``, localCheckpoint preserves it through
     the lineage cut (Spark keeps origin constraints on LogicalRDD), and
@@ -250,11 +317,10 @@ def _assign_nearest(
     over the (ca, cb) pair list that references ``nv`` from the OTHER
     side, which fails task-side binding with
     INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the first (cold) execution
-    (r17 fix; reproduced on Spark 4.1.2 — cold run of
-    embedding_similar_pairs failed, warm rerun passed, which the
-    bench's exception-swallowing warmup had been masking). The
-    nondeterministic guard suppresses the constraint; values are
-    bit-identical (the guard is always true)."""
+    (reproduced on Spark 4.1.2: a cold run of embedding_similar_pairs
+    fails while a warm rerun passes). The nondeterministic guard
+    suppresses the constraint; values are bit-identical (the guard is
+    always true)."""
     import json as _json
 
     from .dedup import opaque
@@ -311,13 +377,10 @@ def _kmeans(
     for i in range(rounds):
         # driver-side array assembly over the k × dim mean rows
         # (_centroid_means_rows). Ordering note: cents order is the
-        # tie-break order of _assign_nearest's argmin; sorted cluster
-        # ids make it deterministic across partition layouts (the r16
-        # collect order was the final agg's hash-partition order —
-        # core-count dependent). Distinct centroids tie only on exact
-        # double distance equality; equivalence over the registered
-        # corpora is pinned by the r17 old-vs-new output diff + oracle
-        # sweeps (OPTIMIZATION_r17.md §D).
+        # tie-break order of _assign_nearest's argmin; sorting by
+        # cluster id makes it deterministic across partition layouts
+        # (the collect order is the final aggregate's hash-partition
+        # order, which depends on the core count).
         by_c: dict[int, dict[int, float]] = {}
         for r in _centroid_means_rows(assigned, vec_field):
             by_c.setdefault(r["cluster"], {})[r["pos"]] = r["m"]
@@ -335,14 +398,14 @@ def _kmeans(
 # ---------------------------------------------------------------------------
 
 
-# Auto-fallback gate for ball-cover degeneration (r6 scale probe: on
-# UNIFORM high-dim corpora the covering radii approach the full spread,
-# the triangle bound prunes ~nothing, and the exact candidate set
-# degenerates toward all-pairs — 800 M candidates at 40k vectors). When
-# the driver-side pruning probe shows the surviving candidate volume is
-# most of n²/2 AND τ is high enough for hyperplane banding to have
-# selective bands (low τ needs so many bands that random pairs collide
-# anyway — the round-2 failure mode at τ=0.45), candidate generation
+# Auto-fallback gate for ball-cover degeneration (measured by a scale
+# probe: on UNIFORM high-dim corpora the covering radii approach the
+# full spread, the triangle bound prunes ~nothing, and the exact
+# candidate set degenerates toward all-pairs — 800 M candidates at 40k
+# vectors). When the driver-side pruning probe shows the surviving
+# candidate volume is most of n²/2 AND τ is high enough for hyperplane
+# banding to have selective bands (low τ, such as 0.45, needs so many
+# bands that random pairs collide anyway), candidate generation
 # switches to banded LSH: recall becomes probabilistic (~98% at the τ
 # boundary by band-count choice) but candidate volume drops from O(n²)
 # to near the true-pair volume, which is the only viable shape at scale.
@@ -389,41 +452,16 @@ def _lsh_candidate_pairs(
     assigned: DataFrame, dim: int, n_bands: int, band_bits: int
 ) -> DataFrame:
     """Banded-LSH candidate pairs over the normalized vectors: explode
-    per-band sign-packed keys, self-equi-join on (band, key), distinct.
-    Pure equi-join — shuffles on the band key, no cartesian; candidate
-    volume tracks true-pair volume plus a 1/2^band_bits random-collision
-    floor per band.
-
-    The projections run as ONE numpy/BLAS matmul per Arrow batch
-    (vectors × [dim, n_bands·band_bits] plane matrix), not as Column
-    folds: at the band counts a 98%-recall τ=0.8 target needs (~60×12
-    planes over 64 dims), the fold form is a ~46k-literal codegen
-    expression whose compilation alone dominates the query — the
-    measured cost of the expression path was ~2.5 min at sf0.001 vs
-    seconds for the matmul. Same deterministic `_hyperplane` planes, so
-    keys are reproducible on any executor."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    planes = np.asarray(
-        [
-            _hyperplane(dim, 10007 + p + 1)
-            for p in range(n_bands * band_bits)
-        ],
-        dtype=np.float64,
-    ).T  # [dim, n_bands*band_bits]
-    pows = (2 ** np.arange(band_bits - 1, -1, -1, dtype=np.int64))
-
-    @pandas_udf("array<long>")
-    def _keys_np(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        M = np.asarray(list(vecs), dtype=np.float64)  # [n, dim]
-        bits = (M @ planes > 0).astype(np.int64)  # [n, bands*bits]
-        packed = bits.reshape(len(M), n_bands, band_bits) @ pows  # [n, bands]
-        return pd.Series(list(packed))
-
+    per-band sign-packed keys (`_band_keys`, one numpy matmul per Arrow
+    batch), self-equi-join on (band, key), distinct. Pure equi-join —
+    shuffles on the band key, no cartesian; candidate volume tracks
+    true-pair volume plus a 1/2^band_bits random-collision floor per
+    band."""
     keys = assigned.select(
-        "id", F.posexplode(_keys_np(F.col("nv"))).alias("band", "key")
+        "id",
+        F.posexplode(_band_keys(F.col("nv"), dim, n_bands, band_bits)).alias(
+            "band", "key"
+        ),
     )
     return (
         keys.alias("a")
@@ -459,9 +497,9 @@ def similar_pairs(
     forces ‖cent₁-cent₂‖ ≤ r₁ + r₂ + d_max, so pruning the k² cluster
     pairs against that bound DRIVER-SIDE (metadata-scale) loses nothing:
     **recall is 100% by construction at any τ**, including the low-τ
-    regime where hyperplane banding needs so many bands that random
-    pairs collide anyway (the round-2 failure mode at τ=0.45). Exact
-    cosine then verifies each candidate.
+    regime (such as τ=0.45) where hyperplane banding needs so many
+    bands that random pairs collide anyway. Exact cosine then verifies
+    each candidate.
 
     Plan shape: candidate generation is a broadcast equi-join of the
     (id, cluster) table against the surviving (ca, cb) pair list, then a
@@ -522,8 +560,8 @@ def similar_pairs(
     # references assigned, so an in-function persist could never be
     # released (operators/materialize.py). LAZY form: the radii
     # aggregate below is a full-partition scan, so IT is the
-    # materializing action — one job where the eager form paid a
-    # dedicated materialization pass plus the radii scan (r16).
+    # materializing action — one job where an eager form would pay a
+    # dedicated materialization pass plus the radii scan.
     assigned = materialize(assigned, eager=False)
 
     # covering radii from the _cdist the argmin already produced — a
@@ -726,14 +764,14 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
 def _band_keys_spec(
     vec: Column, dim: int, n_bands: int, band_bits: int, seed: int = 1
 ) -> Column:
-    """Column-fold EXECUTABLE SPEC of the band-key computation — the
-    r11-r13 production form, kept ONLY as the differential-test anchor
+    """Column-fold EXECUTABLE SPEC of the band-key computation, kept
+    ONLY as the differential-test anchor
     for the vectorized `_band_keys` (the two must pack identical keys;
     tests/test_llm_ops.py pins equality per row per band). Do NOT route
     hot paths through this: Catalyst higher-order functions are
     CodegenFallback (never compiled), and this shape nests
     ``n_bands * band_bits`` folds per row against a per-row literal
-    plane matrix — the r13 ANN scale probe measured ~520 µs/vector
+    plane matrix — the ANN scale probe measured ~520 µs/vector
     (267.6 s for the signature stage alone at 512k vectors), which made
     LSH ~30× SLOWER than brute force at the scale it exists to beat."""
     planes = F.array(
@@ -772,9 +810,8 @@ def _band_keys(
 
     The projections run as ONE numpy/BLAS matmul per Arrow batch —
     ``(N, dim) @ (dim, n_bands·band_bits)`` → sign bits → packed longs —
-    the same shape `_lsh_candidate_pairs` has used since r11, because
-    the Column-fold form (`_band_keys_spec`) is interpreted per plane
-    per row: the r13 ANN scale probe clocked it at ~520 µs/vector
+    because the Column-fold form (`_band_keys_spec`) is interpreted per
+    plane per row: the ANN scale probe clocked it at ~520 µs/vector
     (267.6 s signature stage at 512k vectors) vs 2.8 s for this matmul,
     a 96× gap that made `ann_topk_lsh` unusable at corpus scale despite
     recall 1.000. Same deterministic `_hyperplane` planes, so keys are
@@ -782,8 +819,8 @@ def _band_keys(
     and the spec's left-fold sum is pinned by a per-row differential
     test (a flip would need a projection within rounding error of 0).
 
-    Caller contract unchanged: ``vec`` must be a non-null array<double>
-    of width ``dim`` (`_valid_vecs` + `_check_dim`/`_check_query_dim`
+    Caller contract: ``vec`` must be a non-null array<double>
+    of width ``dim`` (`_valid_vecs` + `_check_dim`/`_check_width`
     enforce this on every call path; a ragged batch raises here rather
     than packing garbage keys)."""
     from pyspark.sql.pandas.functions import pandas_udf
@@ -853,7 +890,7 @@ def ann_topk_lsh(
     (clustered real-world embeddings do far better at the same cost).
 
     ``dim`` defaults to the corpus vector width; an explicit mismatch
-    raises (a silent mismatch used to null every projection and collapse
+    raises (a silent mismatch would null every projection and collapse
     all buckets into one — all-pairs in disguise).
 
     ``band_bits=None`` (the default) SCALES WITH THE CORPUS:
@@ -862,37 +899,24 @@ def ann_topk_lsh(
     true-neighbor volume instead of the corpus. A static band width is
     the quiet 100 TB failure mode: 6-bit keys (keyspace 64) that prune
     fine at the 2k bench corpus collide on essentially EVERY pair at
-    512k vectors — the r14 re-measure clocked defaults-at-512k at
+    512k vectors — a re-measure clocked defaults-at-512k at
     95.6 s (≈ brute force with extra steps) vs 2.5 s with width keyed
     to the corpus, recall 1.000 both. Costs one corpus count() when
     left to auto; pass an explicit width to skip it (e.g. when the
     caller amortizes signatures across query batches)."""
     dim = _check_dim(embeddings, vec_col, dim)
-    # the query side gets the same width guard — a mismatched query
-    # null-pads every projection and packs all-zero band keys (garbage
-    # candidates ranked by NULL cosine, no error)
-    _check_query_dim(queries, vec_col, dim)
+    _check_width(queries, vec_col, dim)
     if band_bits is None:
         n = _valid_vecs(embeddings, vec_col).count()
         band_bits = min(20, max(6, math.ceil(math.log2(max(n, 2) / 16))))
-    docs = (
-        _scatter(_valid_vecs(embeddings, vec_col))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("d_vec"),
-        )
-        .withColumn("d_norm", l2_norm(F.col("d_vec")))
-        .withColumn("bk", _band_keys(F.col("d_vec"), dim, n_bands, band_bits))
+    docs = _corpus(embeddings, id_col, vec_col).withColumn(
+        "bk", _band_keys(F.col("v"), dim, n_bands, band_bits)
     )
     dbands = docs.select(
-        "neighbor_id", "d_vec", "d_norm", F.posexplode("bk").alias("band", "bkey")
+        "neighbor_id", "v", "d_norm", F.posexplode("bk").alias("band", "bkey")
     )
-    qs = (
-        _valid_vecs(queries, vec_col).select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("q_vec")
-        )
-        .withColumn("q_norm", l2_norm(F.col("q_vec")))
-        .withColumn("bk", _band_keys(F.col("q_vec"), dim, n_bands, band_bits))
+    qs = _queries(queries, id_col, vec_col).withColumn(
+        "bk", _band_keys(F.col("q_vec"), dim, n_bands, band_bits)
     )
     # enumerate multiprobe keys: the key itself + every key within
     # ``multiprobe_bits`` bit flips (deterministic, query-side only) —
@@ -922,29 +946,65 @@ def ann_topk_lsh(
             & (dbands["bkey"] == qbands["bkey"])
             & (F.col("neighbor_id") != F.col("query_id")),
         )
-        .select("query_id", "q_vec", "q_norm", "neighbor_id", "d_vec", "d_norm")
+        .select("query_id", "q_vec", "q_norm", "neighbor_id", "v", "d_norm")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn(
-        "cos_sim",
-        F.try_divide(
-            dot(F.col("q_vec"), F.col("d_vec")),
-            F.col("q_norm") * F.col("d_norm"),
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _rank_topk(cand, k)
 
 
 # ---------------------------------------------------------------------------
 # IVF-bucketed ANN (inverted-file index, the other scale path)
 # ---------------------------------------------------------------------------
+
+
+def _ivf_train(
+    embeddings: DataFrame,
+    n_clusters: int,
+    kmeans_iters: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame, list[tuple[int, list[float]]]]:
+    """Train an IVF index in-session: the materialized corpus projection,
+    then deterministic k-means over it. Returns (corpus, corpus +
+    ``cluster``, centroids). materialize, not persist: the k-means loop
+    scans the corpus several times AND the caller's result reads it, so
+    an in-function persist could never be released — one cached corpus
+    per call (operators/materialize.py)."""
+    docs = materialize(_corpus(embeddings, id_col, vec_col))
+    assigned, cents = _kmeans(docs, "v", "neighbor_id", n_clusters, kmeans_iters)
+    return docs, assigned, cents
+
+
+def _ivf_probes(qs: DataFrame, cents: list, n_probe: int) -> DataFrame:
+    """Each query's n_probe nearest centroids by squared distance, ties
+    on the lower cluster id: a broadcast centroid crossjoin plus a
+    per-query window. ``cents`` is [(cluster, centroid)] — driver
+    metadata, k rows."""
+    cent_df = qs.sparkSession.createDataFrame(
+        [(int(cid), [float(x) for x in cvec]) for cid, cvec in cents],
+        "cluster INT, centroid ARRAY<DOUBLE>",
+    )
+    qd = qs.crossJoin(F.broadcast(cent_df)).withColumn(
+        "dist", _sq_dist(F.col("q_vec"), F.col("centroid"))
+    )
+    wq = Window.partitionBy("query_id").orderBy("dist", "cluster")
+    return (
+        qd.withColumn("prnk", F.row_number().over(wq))
+        .filter(F.col("prnk") <= n_probe)
+        .select("query_id", "q_vec", "q_norm", "cluster")
+    )
+
+
+def _ivf_search(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Score only the probed clusters' members: ``assigned`` (neighbor_id,
+    v, d_norm, cluster) joins the broadcast probe list on the cluster
+    key, then the shared rank tail."""
+    cand = assigned.join(
+        F.broadcast(probes),
+        (assigned["cluster"] == probes["cluster"])
+        & (F.col("neighbor_id") != F.col("query_id")),
+    )
+    return _rank_topk(cand, k)
 
 
 def ivf_topk(
@@ -963,70 +1023,16 @@ def ivf_topk(
     vectors (see _kmeans) + a few Lloyd iterations, all as DataFrame
     aggregations — only the k centroid vectors (metadata) ever reach
     the driver. Search: each query probes its n_probe nearest clusters;
-    only those clusters' vectors are scored. At corpus scale the
-    cluster column becomes the lake partition key, so probing is
-    partition pruning.
+    only those clusters' vectors are scored. This is the one-shot form
+    of `build_ivf_index` + `ivf_index_topk`: the same training, kept
+    in-session instead of persisted, and the same search half.
     """
-    corpus_row = (
-        _valid_vecs(embeddings, vec_col)
-        .select(F.size(F.col(vec_col)).alias("d"))
-        .first()
+    _check_against_corpus(embeddings, queries, vec_col)
+    _, assigned, cents = _ivf_train(
+        embeddings, n_clusters, kmeans_iters, id_col, vec_col
     )
-    if corpus_row is not None and corpus_row["d"] is not None:
-        _check_query_dim(queries, vec_col, int(corpus_row["d"]))
-    docs = (
-        _scatter(_valid_vecs(embeddings, vec_col))
-        .select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("v")
-        )
-        .withColumn("d_norm", l2_norm(F.col("v")))
-    )
-    # materialize, not persist: the k-means loop scans docs several
-    # times AND the returned frame's candidate join reads it, so an
-    # in-function persist could never be released — one cached corpus
-    # per call (operators/materialize.py). The materialization pass
-    # replaces the first k-means job's cache-fill compute; every scan
-    # after it reads blocks either way.
-    docs = materialize(docs)
-
-    assigned, cents = _kmeans(docs, "v", "neighbor_id", n_clusters, kmeans_iters)
-
-    qs = _valid_vecs(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("q_vec")
-    ).withColumn("q_norm", l2_norm(F.col("q_vec")))
-    # per-query probe list: n_probe nearest centroids by squared distance
-    cent_df = qs.sparkSession.createDataFrame(
-        [(cid, cvec) for cid, cvec in cents], "cluster INT, centroid ARRAY<DOUBLE>"
-    )
-    qd = qs.crossJoin(F.broadcast(cent_df)).withColumn(
-        "dist", _sq_dist(F.col("q_vec"), F.col("centroid"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist", "cluster")
-    probes = (
-        qd.withColumn("prnk", F.row_number().over(wq))
-        .filter(F.col("prnk") <= n_probe)
-        .select("query_id", "q_vec", "q_norm", "cluster")
-    )
-    cand = assigned.join(
-        F.broadcast(probes),
-        (assigned["cluster"] == probes["cluster"])
-        & (F.col("neighbor_id") != F.col("query_id")),
-    )
-    scored = cand.withColumn(
-        "cos_sim",
-        F.try_divide(
-            dot(F.col("q_vec"), F.col("v")),
-            F.col("q_norm") * F.col("d_norm"),
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    probes = _ivf_probes(_queries(queries, id_col, vec_col), cents, n_probe)
+    return _ivf_search(assigned, probes, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1043,13 +1049,13 @@ def build_ivf_index(
     vec_col: str = "embedding",
 ) -> dict:
     """Train and PERSIST an IVF index at ``path``: deterministic k-means
-    over the corpus (same `_kmeans` machinery as `ivf_topk`), then the
+    over the corpus (the same `_ivf_train` as `ivf_topk`), then the
     assigned corpus — id, double vector, precomputed norm — written as
     parquet **hive-partitioned by cluster**, with the k centroids in a
     ``_centroids.json`` sidecar (k·dim floats — driver metadata).
 
     This is the amortization path the one-shot `ivf_topk` cannot offer:
-    the r13 ANN scale probe measured k-means training DOMINATING its
+    the ANN scale probe measured k-means training DOMINATING its
     512k-vector wall (29.6 s vs 17.8 s brute) — a cost that is pure
     waste when the same corpus serves many query batches. Here training
     is paid once at build; every `ivf_index_topk` afterwards probes
@@ -1064,22 +1070,13 @@ def build_ivf_index(
     import json
     import os as _os
 
-    docs = (
-        _scatter(_valid_vecs(embeddings, vec_col))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("v"),
-        )
-        .withColumn("d_norm", l2_norm(F.col("v")))
+    docs, assigned, cents = _ivf_train(
+        embeddings, n_clusters, kmeans_iters, id_col, vec_col
     )
-    docs = materialize(docs)
     first = docs.select(F.size("v").alias("d")).first()
-    if first is None or first["d"] is None:
+    if first is None:
         raise ValueError("cannot build an IVF index over an empty corpus")
     dim = int(first["d"])
-    assigned, cents = _kmeans(
-        docs, "v", "neighbor_id", n_clusters, kmeans_iters
-    )
     (
         assigned.select("neighbor_id", "v", "d_norm", "cluster")
         .write.mode("overwrite")
@@ -1122,12 +1119,11 @@ def ivf_index_topk(
 ) -> DataFrame:
     """Approximate top-k against a PERSISTED IVF index (`build_ivf_index`).
 
-    The k centroids load driver-side from the sidecar (metadata); each
-    query's n_probe nearest clusters come from a broadcast centroid
-    crossjoin + per-query window — identical math to `ivf_topk`'s
-    search half. The union of probed clusters across the query batch is
-    collected (≤ n_clusters ints) and applied as a STATIC ``cluster IN
-    (...)`` filter on the hive-partitioned index read, so Spark's
+    The k centroids load driver-side from the sidecar (metadata); the
+    probe selection and the search are `ivf_topk`'s own (`_ivf_probes`,
+    `_ivf_search`). The union of probed clusters across the query batch
+    is collected (≤ n_clusters ints) and applied as a STATIC ``cluster
+    IN (...)`` filter on the hive-partitioned index read, so Spark's
     partition pruning opens only the probed clusters' files — no
     training job, no full-corpus scan. Scoring and ranking match
     `ivf_topk` exactly (same tie order), so recall characteristics are
@@ -1136,82 +1132,22 @@ def ivf_index_topk(
 
     with open(f"{path.rstrip('/')}/_centroids.json") as fh:
         meta = json.load(fh)
-    dim = int(meta["dim"])
-    _check_query_dim(queries, vec_col, dim)
-    qs = (
-        _valid_vecs(queries, vec_col)
-        .select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("q_vec"),
-        )
-        .withColumn("q_norm", l2_norm(F.col("q_vec")))
+    _check_width(queries, vec_col, int(meta["dim"]))
+    probes = materialize(
+        _ivf_probes(_queries(queries, id_col, vec_col), meta["centroids"], n_probe)
     )
-    cent_df = spark.createDataFrame(
-        [(int(cid), [float(x) for x in cvec]) for cid, cvec in meta["centroids"]],
-        "cluster INT, centroid ARRAY<DOUBLE>",
-    )
-    qd = qs.crossJoin(F.broadcast(cent_df)).withColumn(
-        "dist", _sq_dist(F.col("q_vec"), F.col("centroid"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist", "cluster")
-    probes = (
-        qd.withColumn("prnk", F.row_number().over(wq))
-        .filter(F.col("prnk") <= n_probe)
-        .select("query_id", "q_vec", "q_norm", "cluster")
-    )
-    probes = materialize(probes)
     probed = sorted(
         r["cluster"] for r in probes.select("cluster").distinct().collect()
     )  # ≤ n_clusters ints — metadata
+    data = f"{path.rstrip('/')}/data"
     if not probed:
-        # empty result with the SAME schema the non-empty path yields:
-        # query_id typed like the caller's id column, neighbor_id like
-        # the persisted index's — a hardcoded long here would
-        # type-skew unions/writers on exactly the empty-input edge
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        from pyspark.sql.types import DoubleType
-
-        qid_t = queries.schema[id_col].dataType
-        nid_t = (
-            spark.read.parquet(f"{path.rstrip('/')}/data")
-            .schema["neighbor_id"]
-            .dataType
+        return _empty_topk(
+            spark,
+            queries.schema[id_col].dataType,
+            spark.read.parquet(data).schema["neighbor_id"].dataType,
         )
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("query_id", qid_t),
-                    StructField("neighbor_id", nid_t),
-                    StructField("cos_sim", DoubleType()),
-                    StructField("rnk", IntegerType()),
-                ]
-            ),
-        )
-    idx = spark.read.parquet(f"{path.rstrip('/')}/data").filter(
-        F.col("cluster").isin(probed)
-    )
-    cand = idx.join(
-        F.broadcast(probes),
-        (idx["cluster"] == probes["cluster"])
-        & (F.col("neighbor_id") != F.col("query_id")),
-    )
-    scored = cand.withColumn(
-        "cos_sim",
-        F.try_divide(
-            dot(F.col("q_vec"), F.col("v")),
-            F.col("q_norm") * F.col("d_norm"),
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    idx = spark.read.parquet(data).filter(F.col("cluster").isin(probed))
+    return _ivf_search(idx, probes, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1303,15 +1239,11 @@ def pq_encode(
             out[:, i] = np.argmin(d2, axis=1)
         return pd.Series(list(out))
 
-    docs = _scatter(_valid_vecs(embeddings, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("_v"),
+    _check_width(
+        embeddings, vec_col, codebook["dim"], side="corpus", ref="codebook"
     )
-    _check_query_dim(docs, "_v", codebook["dim"])
-    return docs.select(
-        "neighbor_id",
-        _codes_np(F.col("_v")).alias("codes"),
-        l2_norm(F.col("_v")).alias("d_norm"),
+    return _corpus(embeddings, id_col, vec_col).select(
+        "neighbor_id", _codes_np(F.col("v")).alias("codes"), "d_norm"
     )
 
 
@@ -1409,7 +1341,7 @@ def _pq_shortlist_blocked(
     corpus rows score -inf (ranked last — the driver path's NULL-last
     ordering) rather than dividing by zero.
 
-    Engine-parity scope (ADVICE r15): ADC here is a tiled gemm
+    Engine-parity scope: ADC here is a tiled gemm
     (Qt @ cents[i].T) where the driver engine runs per-query gemv —
     BLAS builds may differ in the last ulp, so driver/blocked equality
     is exact wherever per-cell shortlists COVER the global one
@@ -1562,9 +1494,9 @@ def pq_topk(
     contract). The per-cell self-exclusion budgets exactly one self row
     per query; duplicate corpus ids sharing a query's id would shave
     that cell's candidate margin relative to the driver engine's global
-    window (ADVICE r15 — documented rather than widened: every caller
-    feeds unique ids, and widening the take per cell for a contract
-    violation would tax the universal case).
+    window (documented rather than widened: every caller feeds unique
+    ids, and widening the take per cell for a contract violation would
+    tax the universal case).
 
     ``driver_query_limit`` picks the shortlist engine. At or below it
     (a query BATCH, not a second corpus — the ceiling is the one knob
@@ -1588,30 +1520,22 @@ def pq_topk(
         )
     if encoded is None:
         encoded = pq_encode(embeddings, codebook, id_col, vec_col)
-    qs = (
-        _valid_vecs(queries, vec_col)
-        .select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("q_vec"),
-        )
-        .withColumn("q_norm", l2_norm(F.col("q_vec")))
-    )
-    _check_query_dim(qs, "q_vec", codebook["dim"])
+    qs = _queries(queries, id_col, vec_col)
+    _check_width(queries, vec_col, codebook["dim"])
     qrows = None
     if driver_query_limit > 0:
-        # Size probe as a limited COUNT, not a collect (r16, ADVICE r15):
-        # the old limit(N+1).collect() shipped up to N+1 full query
-        # VECTORS to the driver only to discard them whenever the batch
-        # turned out bulk — at high dim that is a ~100 MB driver pull
-        # thrown away before the blocked engine re-executes the same
-        # plan anyway. The count ships one long; only a CONFIRMED-small
-        # batch (≤ N rows, metadata-scale by definition) is collected —
-        # and that collect is itself LIMIT-bounded (ADVICE r16): if qs
-        # is unstable between the two evaluations the pull still cannot
-        # exceed N+1 rows, and an over-limit re-evaluation falls through
-        # to the blocked engine instead of trusting the stale count.
-        # Deliberate trade (r16): the small path pays 2 jobs
-        # (count + collect) where pre-r16 paid 1, so the bulk path
+        # Size probe as a limited COUNT, not a collect: a
+        # limit(N+1).collect() would ship up to N+1 full query VECTORS
+        # to the driver only to discard them whenever the batch turns
+        # out bulk — at high dim a ~100 MB driver pull thrown away
+        # before the blocked engine re-executes the same plan anyway.
+        # The count ships one long; only a CONFIRMED-small batch (≤ N
+        # rows, metadata-scale by definition) is collected — and that
+        # collect is itself LIMIT-bounded: if qs is unstable between the
+        # two evaluations the pull still cannot exceed N+1 rows, and an
+        # over-limit re-evaluation falls through to the blocked engine
+        # instead of trusting the stale count. Deliberate trade: the
+        # small path pays 2 jobs (count + collect), so the bulk path
         # never ships vectors it will discard.
         probe_n = qs.limit(driver_query_limit + 1).count()
         if probe_n <= driver_query_limit:
@@ -1623,57 +1547,19 @@ def pq_topk(
             if len(qrows) > driver_query_limit:
                 qrows = None  # unstable probe — use the blocked engine
     if qrows is not None and not qrows:
-        # empty result typed from the INPUTS: query_id like the caller's
-        # id column, neighbor_id like the encoded corpus id — a
-        # hardcoded long here would type-skew unions/writers on exactly
-        # the empty-input edge (the hazard ivf_index_topk's empty-probes
-        # branch guards against)
-        from pyspark.sql.types import (
-            DoubleType,
-            IntegerType,
-            StructField,
-            StructType,
-        )
-
-        return qs.sparkSession.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("query_id", queries.schema[id_col].dataType),
-                    StructField(
-                        "neighbor_id", encoded.schema["neighbor_id"].dataType
-                    ),
-                    StructField("cos_sim", DoubleType()),
-                    StructField("rnk", IntegerType()),
-                ]
-            ),
+        return _empty_topk(
+            qs.sparkSession,
+            queries.schema[id_col].dataType,
+            encoded.schema["neighbor_id"].dataType,
         )
     if qrows is not None:
         short = _pq_shortlist_driver(encoded, qrows, codebook, shortlist)
     else:
         short = _pq_shortlist_blocked(encoded, qs, codebook, shortlist)
     # exact rerank: fetch true vectors for shortlist rows only
-    docs = _scatter(_valid_vecs(embeddings, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("d_norm", l2_norm(F.col("v")))
-    fetched = short.join(docs, "neighbor_id")
+    fetched = short.join(_corpus(embeddings, id_col, vec_col), "neighbor_id")
     # the query side is broadcast only when it IS the small side — on
     # the bulk path a forced broadcast of a corpus-sized query set
     # would be the driver ceiling all over again; AQE picks the join
     q_side = F.broadcast(qs) if qrows is not None else qs
-    exact = fetched.join(q_side, "query_id").withColumn(
-        "cos_sim",
-        F.try_divide(
-            dot(F.col("q_vec"), F.col("v")),
-            F.col("q_norm") * F.col("d_norm"),
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _rank_topk(fetched.join(q_side, "query_id"), k)

@@ -631,6 +631,33 @@ def embedding_similar_pairs_lsh(spark, sf_dir):
     ).select("id_a", "id_b", F.lit(True).alias("found"))
 
 
+def _topk_hits(e, qs, ann):
+    """(query_id, h) for every query in ``qs``: how many of ``ann``'s
+    neighbors are in the exact brute-force top-5 (0 when none are).
+    Each approximate top-k id applies its own recall threshold to h."""
+    bf = S.cosine_topk_bruteforce(e, qs, k=5).select("query_id", "neighbor_id")
+    hits = (
+        ann.select("query_id", "neighbor_id")
+        .join(bf, ["query_id", "neighbor_id"])
+        .groupBy("query_id")
+        .agg(F.count("*").alias("h"))
+    )
+    return (
+        qs.select(F.col("vec_id").alias("query_id"))
+        .join(hits, "query_id", "left")
+        .select("query_id", F.coalesce(F.col("h"), F.lit(0)).alias("h"))
+    )
+
+
+def _mean_recall_ok(hits, min_recall: float):
+    """One row: the query count and whether mean recall@5 reaches
+    ``min_recall``."""
+    return hits.agg(
+        F.count("*").alias("n_queries"),
+        (F.avg(F.col("h") / F.lit(5.0)) >= F.lit(min_recall)).alias("recall_ok"),
+    )
+
+
 @query(
     "ann_topk",
     oracle=f"""
@@ -670,20 +697,9 @@ def ann_topk_lsh(spark, sf_dir):
     S.ann_topk_lsh."""
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
     qs = e.filter(F.col("vec_id") % 50 == 0)
-    ann = S.ann_topk_lsh(e, qs, dim=64, k=5).select("query_id", "neighbor_id")
-    bf = S.cosine_topk_bruteforce(e, qs, k=5).select("query_id", "neighbor_id")
-    hits = (
-        ann.join(bf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("h"))
-    )
-    return (
-        qs.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce(F.col("h"), F.lit(0)) >= F.lit(3)).alias("recall_ok"),
-        )
+    ann = S.ann_topk_lsh(e, qs, dim=64, k=5)
+    return _topk_hits(e, qs, ann).select(
+        "query_id", (F.col("h") >= F.lit(3)).alias("recall_ok")
     )
 
 
@@ -770,24 +786,8 @@ def ann_topk_ivf(spark, sf_dir):
     neighbor-returning operator API is S.ivf_topk."""
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
     qs = e.filter(F.col("vec_id") % 50 == 0)
-    ann = S.ivf_topk(e, qs, k=5, n_clusters=8, n_probe=3).select(
-        "query_id", "neighbor_id"
-    )
-    bf = S.cosine_topk_bruteforce(e, qs, k=5).select("query_id", "neighbor_id")
-    hits = (
-        ann.join(bf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("h"))
-    )
-    per_q = qs.select(F.col("vec_id").alias("query_id")).join(
-        hits, "query_id", "left"
-    )
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg(F.coalesce(F.col("h"), F.lit(0)) / F.lit(5.0)) >= F.lit(0.35)).alias(
-            "recall_ok"
-        ),
-    )
+    ann = S.ivf_topk(e, qs, k=5, n_clusters=8, n_probe=3)
+    return _mean_recall_ok(_topk_hits(e, qs, ann), 0.35)
 
 
 @query(
@@ -802,8 +802,8 @@ def ann_topk_ivf_index(spark, sf_dir):
     """Persisted-IVF ANN: S.build_ivf_index trains the deterministic
     k-means ONCE and writes the assigned corpus hive-partitioned by
     cluster; S.ivf_index_topk then answers with NO training job and a
-    partition-pruned read (the amortization path the r13 ANN probe
-    asked for — k-means dominated one-shot IVF's 512k wall). Flag-form
+    partition-pruned read (the amortization path: k-means dominated
+    one-shot IVF's 512k-vector wall in the ANN scale probe). Flag-form
     contract at corpus granularity, the ann_topk_ivf model:
       ``n_queries`` — oracle-exact query count;
       ``recall_ok`` — mean recall vs brute-force top-5 >= 0.35
@@ -904,24 +904,8 @@ def ann_topk_ivf_index(spark, sf_dir):
         and n_files_probed < n_files_total
     )
 
-    bf = S.cosine_topk_bruteforce(e, qs, k=5).select("query_id", "neighbor_id")
-    hits = (
-        ann.select("query_id", "neighbor_id")
-        .join(bf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("h"))
-    )
-    per_q = qs.select(F.col("vec_id").alias("query_id")).join(
-        hits, "query_id", "left"
-    )
     return (
-        per_q.agg(
-            F.count("*").alias("n_queries"),
-            (
-                F.avg(F.coalesce(F.col("h"), F.lit(0)) / F.lit(5.0))
-                >= F.lit(0.35)
-            ).alias("recall_ok"),
-        )
+        _mean_recall_ok(_topk_hits(e, qs, ann), 0.35)
         .withColumn("match_ok", F.lit(bool(match_ok)))
         .withColumn("prune_ok", F.lit(bool(prune_ok)))
     )
@@ -1461,21 +1445,5 @@ def ann_topk_pq(spark, sf_dir):
     ~ 0.01). The neighbor-returning operator API is S.pq_topk."""
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
     qs = e.filter(F.col("vec_id") % 50 == 0)
-    ann = S.pq_topk(e, qs, k=5, m=8, bits=4, shortlist=100).select(
-        "query_id", "neighbor_id"
-    )
-    bf = S.cosine_topk_bruteforce(e, qs, k=5).select("query_id", "neighbor_id")
-    hits = (
-        ann.join(bf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("h"))
-    )
-    per_q = qs.select(F.col("vec_id").alias("query_id")).join(
-        hits, "query_id", "left"
-    )
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (
-            F.avg(F.coalesce(F.col("h"), F.lit(0)) / F.lit(5.0)) >= F.lit(0.5)
-        ).alias("recall_ok"),
-    )
+    ann = S.pq_topk(e, qs, k=5, m=8, bits=4, shortlist=100)
+    return _mean_recall_ok(_topk_hits(e, qs, ann), 0.5)

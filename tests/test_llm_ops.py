@@ -1661,7 +1661,8 @@ def test_pq_codebook_encode_and_topk(spark, sf_dir):
 
 
 def test_pq_guards_and_planted_duplicate(spark):
-    """dim % m != 0 and an empty corpus refuse loudly; a query whose
+    """dim % m != 0 and an empty corpus refuse loudly; a width mismatch
+    on either side names the caller's vector column; a query whose
     exact duplicate lives in the corpus retrieves it at rank 1 with
     cos_sim 1.0 (the shortlist covers the corpus, rerank is exact)."""
     import pytest as _pytest
@@ -1675,6 +1676,16 @@ def test_pq_guards_and_planted_duplicate(spark):
         S.build_pq_codebook(df, m=3, bits=2)
     with _pytest.raises(ValueError, match="empty corpus"):
         S.build_pq_codebook(df.filter(F.lit(False)), m=4, bits=2)
+
+    # a width mismatch names the caller's column, not an internal one
+    cb = S.build_pq_codebook(df, m=4, bits=2)
+    narrow = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0, 4.0])], "vec_id long, embedding array<double>"
+    )
+    with _pytest.raises(ValueError, match="query vector width 4.*'embedding'"):
+        S.pq_topk(df, narrow, k=3, codebook=cb, encoded=S.pq_encode(df, cb))
+    with _pytest.raises(ValueError, match="corpus vector width 4.*'embedding'"):
+        S.pq_encode(narrow, cb)
 
     dup_of_7 = [(999, rows[7][1])]
     q = spark.createDataFrame(dup_of_7, "vec_id long, embedding array<double>")

@@ -14,8 +14,8 @@ For each named query this prints
     (BatchEvalPython / ArrowEvalPython / MapInPandas / MapInArrow /
     FlatMapGroupsInPandas[WithState] / FlatMapCoGroupsInPandas) in the
     pre-execution formatted plan;
-  - min-of-N isolated walls (build_s / action_s split like
-    profile_query.py);
+  - min-of-N isolated walls, split into build_s (the query function
+    building its DataFrame) and action_s (the noop write);
   - generated classes compiled per rep (the delta of Spark's
     CodegenMetrics compilation count): after the first rep, a non-zero
     count means the codegen cache did not hold the query's classes.
@@ -134,13 +134,14 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
+    warmup_failed: dict[str, str] = {}
     for name in names:
         try:
             QUERIES[name](spark, warm_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-        except Exception:
-            pass
+        except Exception as exc:  # noqa: BLE001
+            warmup_failed[name] = f"{type(exc).__name__}: {exc}"[:500]
     spark.catalog.clearCache()
 
     results = {}
@@ -193,6 +194,8 @@ def main() -> None:
         for j in ledger["jobs"]:
             print(f"   job {j['job']:>4} {j['phase']:<6} stages={j['stages']} "
                   f"tasks={j['tasks']:>4} {j['name']}", flush=True)
+    if warmup_failed:
+        results["warmup_failed"] = warmup_failed
     print("LEDGER " + json.dumps(results))
 
 
