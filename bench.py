@@ -1,19 +1,33 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line
+sf0.1); prints ONE JSON line
 {"metric", "value" (total sec), "unit", "queries" {name: sec}, "sf"}.
 
 Queries execute to completion via a noop sink (no driver collect of big
 results, no column pruning of the measured projection).
+
+The measurement tools (``tools/job_ledger.py``, ``tools/explain_dump.py``
+and ``tools/probes``) share this file's ``TOOL_CONF``, ``warmup`` and
+``settle``, so every figure is taken on the session ``bench.py`` runs on.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+# The conf every measurement tool passes to ``build_spark_session``, on
+# top of its DEFAULT_CONF; the master is that function's own default,
+# local[$SPARK_GRAFT_CPUS], else local[*].
+TOOL_CONF = {
+    "spark.ui.enabled": "false",
+    "spark.log.level": "ERROR",
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+}
 
 # Headline set: scan+agg, joins, windows, upsert-merge, top-k, and the
 # LLM-pipeline ops (exact/near dedup, similarity, text analysis).
@@ -66,29 +80,60 @@ HEADLINE = [
     "scd2_build",
     "outlier_zscore",
     "tfidf_topterms",
-    # round-7 second batch: the Arrow python-boundary path (audio
-    # windowed energy over mapInPandas) and the containment variant of
-    # the prefix-filtered near-dup join
+    # the Arrow Python-boundary path (audio windowed energy over
+    # mapInPandas)
     "mm_audio_energy",
     "dedup_containment",
-    # round-14: dynamic partition overwrite on the manifest commit path
-    # (drop/carry/rewrite classification; files carried by reference) —
-    # VERDICT r13 ask 3; first recording establishes its baseline
+    # dynamic partition overwrite on the manifest commit path: partitions
+    # dropped, carried by reference or rewritten
     "hudi_partition_overwrite",
-    # round-14 late batch: exact substring dedup (grid-shingle island
-    # merge, operators/spans.py); first recording establishes its
-    # baseline (isolated warm walls 1.5 s at sf0.1)
+    # exact substring dedup (grid-shingle island merge, operators/spans.py)
+    # and the boundary refinement over its islands
     "dedup_substring_spans",
-    # round-15: boundary refinement over the substring islands (flank
-    # groups + sorted-neighbor LCP); first recording establishes its
-    # baseline
     "dedup_substring_refine",
 ]
 
 
+def noop(df) -> None:
+    """Run ``df`` to completion into the noop sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warmup(spark, queries: dict, sf_dir: str) -> dict[str, str]:
+    """Run each ``{name: fn}`` query once at the smallest scale factor
+    (the sf0.001 fixtures next to ``sf_dir``, else ``sf_dir`` itself), so
+    codegen compilation and the broadcast machinery are warm and measured
+    runs reflect steady-state throughput (what a long-lived cluster
+    session delivers). A failure does not stop the warmup; it is returned
+    as ``{name: "Type: message"}``, because a query that fails only on
+    its first run in a fresh JVM passes every measured pass."""
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir
+    failed: dict[str, str] = {}
+    for name, fn in queries.items():
+        try:
+            noop(fn(spark, warm_dir))
+        except Exception as exc:  # noqa: BLE001
+            failed[name] = f"{type(exc).__name__}: {exc}"[:500]
+    spark.catalog.clearCache()
+    return failed
+
+
+def settle(spark) -> None:
+    """Drop the last query's persisted intermediates, so later queries
+    are not taxed by its cache residency, and collect garbage on both
+    sides: the ContextCleaner reclaims unreferenced broadcast and shuffle
+    state only on a driver GC, so the explicit JVM GC makes each query
+    run against a steady-state JVM rather than its predecessors'
+    accumulated garbage."""
+    spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Isolation mode: SPARK_GRAFT_ONLY=q1,q2 restricts the suite to the
     # named queries — for re-measuring one query without 40 neighbors'
@@ -132,70 +177,30 @@ def main() -> None:
         "join_bucketed_join": _bucketed_join_phase,
     }
 
-    spark = build_spark_session(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        conf={
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark_session(app_name="bench", conf=TOOL_CONF)
+    fns = {name: special.get(name, QUERIES.get(name)) for name in headline}
+    warmup_failed = warmup(spark, fns, sf_dir)
 
-    # Warmup: run each headline plan once at the smallest scale factor so
-    # codegen compilation + broadcast machinery are warm; measured runs
-    # then reflect steady-state throughput (what a long-lived cluster
-    # session delivers). A warmup failure does not stop the suite, but it
-    # is recorded: a query that fails only on its first run in a fresh
-    # JVM passes every measured pass.
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    warmup_failed: dict[str, str] = {}
-    for name in headline:
-        try:
-            special.get(name, QUERIES.get(name))(spark, warm_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        except Exception as exc:  # noqa: BLE001
-            warmup_failed[name] = f"{type(exc).__name__}: {exc}"[:500]
-    spark.catalog.clearCache()
-
-    # Best-of-2: two full measured passes, per-query min. Two rounds in a
-    # row a single in-suite number crossed (or grazed) the 2x baseline
-    # gate while its isolated re-measure was fine (ann_topk r5, agg_group
-    # r6: 4.19 s in-suite vs 2.32 s isolated) — per-query in-suite times
-    # on this host carry up to ~2x contamination from neighbors' GC /
-    # shuffle-cleanup pressure. Two passes spaced a full suite apart
-    # de-correlate that transient noise (back-to-back repeats would share
-    # it); min-of-2 is BASELINE.md's own prescribed comparison statistic,
-    # so the emitted artifact is self-adjudicating — no manual re-measure.
+    # Best-of-2: two full measured passes, per-query min. A query's
+    # in-suite time carries up to ~2x noise from its neighbours' GC and
+    # shuffle-cleanup pressure; two passes spaced a full suite apart
+    # de-correlate that transient noise (back-to-back repeats would
+    # share it). Min-of-2 is BASELINE.md's comparison statistic.
     passes: list[dict[str, float]] = []
     failed: dict[str, str] = {}
     for _ in range(2):
         pass_timings: dict[str, float] = {}
-        for name in headline:
-            fn = special.get(name, QUERIES.get(name))
+        for name, fn in fns.items():
             t0 = time.perf_counter()
-            # Per-query guard: one broken query must never erase the
-            # round's perf artifact — record the failure, keep timing.
+            # one broken query must never erase the suite's artifact:
+            # record the failure, keep timing
             try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                noop(fn(spark, sf_dir))
             except Exception as exc:  # noqa: BLE001
                 failed[name] = f"{type(exc).__name__}: {exc}"[:500]
                 continue
             pass_timings[name] = round(time.perf_counter() - t0, 3)
-            # drop per-query persisted intermediates so later queries
-            # aren't taxed by earlier queries' cache residency; the
-            # explicit GC lets the ContextCleaner actually reclaim
-            # unreferenced broadcast / shuffle state now (it only runs on
-            # driver GC), so each query is measured against a steady-state
-            # JVM rather than 40 queries of accumulated garbage
-            spark.catalog.clearCache()
-            import gc
-
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
+            settle(spark)
         passes.append(pass_timings)
 
     timings = {
@@ -204,14 +209,12 @@ def main() -> None:
         if any(name in p for p in passes)
     }
     total = round(sum(timings.values()), 3)
-    # Driver contract: the driver captures only the TAIL of stdout (~2 kB)
-    # and parses the FINAL line as the round's official number. Round 7
-    # lost its artifact by putting the raw two-pass audit on that line
-    # (50-entry "passes" pushed the head of the JSON past the capture
-    # window -> parsed:null). The audit now goes to a side file plus an
-    # earlier stdout line; the final line is the compact summary only,
-    # degraded to 2-decimal timings iff 3 decimals would exceed the
-    # capture window.
+    # The consumer of this output captures only the TAIL of stdout
+    # (~2 kB) and parses the FINAL line. A raw two-pass audit there would
+    # push the head of the JSON past the capture window, so the audit
+    # goes to a side file plus an earlier stdout line; the final line is
+    # the compact summary only, degraded to 2-decimal timings iff 3
+    # decimals would exceed the capture window.
     audit = {"passes": passes}
     if failed:
         audit["failed"] = failed

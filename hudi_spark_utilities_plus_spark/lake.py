@@ -533,7 +533,7 @@ class HudiTable:
         conversion is ever trusted). Any surprise — log-side schema
         evolution, retyping, unreadable footer, non-local scheme,
         partitioned layout (dir-encoded values need Spark's own
-        discovery), or more files than the footerStatsMaxFiles conf
+        discovery), or more than ``_FOOTER_MAX_FILES`` log files
         (object-store posture: k sequential driver RPCs lose to one
         job) — returns None and the caller pays the distributed
         mergeSchema inference exactly as before. Callers' downstream is
@@ -565,15 +565,7 @@ class HudiTable:
             return None
         if not log_files or not base_files:
             return None
-        try:
-            max_files = int(
-                spark.conf.get(
-                    self._FOOTER_MAX_FILES_CONF, str(self._FOOTER_MAX_FILES)
-                )
-            )
-        except Exception:
-            max_files = self._FOOTER_MAX_FILES
-        if len(log_files) > max_files:
+        if len(log_files) > self._FOOTER_MAX_FILES:
             return None
         base_schema = self._base_schema(spark)
         if base_schema is None:
@@ -2675,11 +2667,7 @@ class HudiTable:
     _FOOTER_STAT_TYPES = ("byte", "short", "integer", "long", "string")
     # Above this many files per commit the driver-side footer read (one
     # sequential open per file; one RPC each on an object store) loses
-    # to the one distributed stats job — scale knob, local default
-    # covers every realistic local commit.
-    _FOOTER_MAX_FILES_CONF = (
-        "spark.hudi_spark_utilities_plus.lake.footerStatsMaxFiles"
-    )
+    # to the one distributed stats job.
     _FOOTER_MAX_FILES = 256
 
     @staticmethod
@@ -2779,12 +2767,12 @@ class HudiTable:
         overwrite's drop/carry/rewrite classification. Either is empty
         when its column's dtype doesn't JSON-round-trip with ordering
         intact (dates/decimals), which simply disables that pruning
-        dimension. Cost (r16): ZERO Spark jobs on the common path — the
+        dimension. Cost: ZERO Spark jobs on the common path — the
         envelopes come from the parquet row-group footers the write
         just produced (``_footer_envelopes``; exactness/fallback
         contract there). The distributed stats aggregate remains as the
         exact fallback for non-footer-safe dtypes (float/double),
-        absent stats, commits above the footerStatsMaxFiles conf, and
+        absent stats, commits above ``_FOOTER_MAX_FILES`` files, and
         the ``collect_parts`` form (a distinct SET can't be read off
         min/max); that read reuses the batch's KNOWN schema (write
         preserves it verbatim — no partitionBy directory encoding
@@ -2826,30 +2814,21 @@ class HudiTable:
         want_parts = collect_parts and bool(part and part in df.columns)
         parts_vals: set = set()
         parts_null = False
-        # Fast path (r16): envelopes straight from the parquet footers
+        # Fast path: envelopes straight from the parquet footers
         # the write just produced — zero Spark jobs per commit instead
         # of the distributed stats aggregate. Only when the exact
         # per-file DISTINCT set isn't needed (want_parts requires
         # collect_set — min/max can't reconstruct it), every needed
         # column's dtype has trustworthy footer stats, and the commit is
         # small enough that k sequential driver-side footer opens beat
-        # one distributed job (conf-tunable for object-store scale).
+        # one distributed job.
         if (key_ok or part_ok) and not want_parts and files:
             need = [c for c, ok in ((key, key_ok), (part, part_ok)) if ok]
             types_ok = all(
                 df.schema[c].dataType.typeName() in self._FOOTER_STAT_TYPES
                 for c in need
             )
-            try:
-                max_files = int(
-                    df.sparkSession.conf.get(
-                        self._FOOTER_MAX_FILES_CONF,
-                        str(self._FOOTER_MAX_FILES),
-                    )
-                )
-            except Exception:
-                max_files = self._FOOTER_MAX_FILES
-            if types_ok and len(files) <= max_files:
+            if types_ok and len(files) <= self._FOOTER_MAX_FILES:
                 envs = self._footer_envelopes(files, need)
                 if envs is not None:
                     for p, env in envs.items():

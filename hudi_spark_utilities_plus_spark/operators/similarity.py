@@ -409,32 +409,9 @@ def _kmeans(
 # switches to banded LSH: recall becomes probabilistic (~98% at the τ
 # boundary by band-count choice) but candidate volume drops from O(n²)
 # to near the true-pair volume, which is the only viable shape at scale.
-# All three knobs are session-conf-tunable.
-_LSH_FB_FRACTION_CONF = (
-    "spark.hudi_spark_utilities_plus.similarity.lshFallbackMinPairFraction"
-)
-_LSH_FB_MIN_TAU_CONF = (
-    "spark.hudi_spark_utilities_plus.similarity.lshFallbackMinTau"
-)
-_LSH_FB_BAND_BITS_CONF = (
-    "spark.hudi_spark_utilities_plus.similarity.lshFallbackBandBits"
-)
 _LSH_FB_FRACTION = 0.5  # engage when >50% of all pairs survive pruning
 _LSH_FB_MIN_TAU = 0.7  # below this, banding itself degenerates — stay exact
 _LSH_FB_BAND_BITS = 12  # 1/4096 random-pair collision per band
-
-
-def _conf_float(spark, key: str, default: float) -> float:
-    try:
-        raw = spark.conf.get(key, None)
-    except Exception:
-        raw = None
-    if raw is None:
-        return default
-    try:
-        return float(raw)
-    except ValueError:
-        return default
 
 
 def _lsh_fallback_bands(threshold: float, band_bits: int) -> int:
@@ -520,9 +497,8 @@ def similar_pairs(
     driver-side pruning probe already knows, before launching any
     candidate join, exactly how many of the n·(n−1)/2 pairs survive
     (Σ |c₁|·|c₂| over surviving cluster pairs — cluster sizes rode along
-    with the radii collect). When that fraction exceeds the conf-tunable
-    gate (default 0.5) and τ is high enough for banding to be selective
-    (default ≥ 0.7), candidate generation switches to banded hyperplane
+    with the radii collect). When that fraction exceeds 0.5 and τ is
+    high enough for banding to be selective (≥ 0.7), candidate generation switches to banded hyperplane
     LSH (`_lsh_candidate_pairs`): recall becomes ~98% at the τ boundary
     instead of exact, but candidate volume drops from O(n²) to near the
     true-pair volume — the only viable shape for uniform corpora at
@@ -629,20 +605,16 @@ def similar_pairs(
 
     if lsh_fallback is None:
         lsh_fallback = (
-            threshold >= _conf_float(spark, _LSH_FB_MIN_TAU_CONF, _LSH_FB_MIN_TAU)
-            and surviving_fraction
-            >= _conf_float(spark, _LSH_FB_FRACTION_CONF, _LSH_FB_FRACTION)
+            threshold >= _LSH_FB_MIN_TAU
+            and surviving_fraction >= _LSH_FB_FRACTION
         )
 
     # dim == 0 ⇔ empty corpus: no vectors to band — the ball-cover path
     # below handles it (empty pair list → empty result) even when the
     # caller forced lsh_fallback=True
     if lsh_fallback and dim > 0:
-        band_bits = int(
-            _conf_float(spark, _LSH_FB_BAND_BITS_CONF, _LSH_FB_BAND_BITS)
-        )
-        n_bands = _lsh_fallback_bands(threshold, band_bits)
-        cand = _lsh_candidate_pairs(assigned, dim, n_bands, band_bits)
+        n_bands = _lsh_fallback_bands(threshold, _LSH_FB_BAND_BITS)
+        cand = _lsh_candidate_pairs(assigned, dim, n_bands, _LSH_FB_BAND_BITS)
     else:
         pair_df = F.broadcast(spark.createDataFrame(pairs, "ca INT, cb INT"))
         ids = assigned.select("id", "cluster")

@@ -4498,3 +4498,28 @@ print("OK")
     assert out.returncode == 0 and "OK" in out.stdout, (
         out.stdout[-2000:], out.stderr[-2000:]
     )
+
+
+def test_job_ledger_reports_the_fastest_reps_counts():
+    """A query's ledger record takes its job counts from the fastest
+    rep, lists every rep, and flags reps whose counts disagree; here the
+    last rep whose count differs from its predecessor's (8/4) is not the
+    fastest (7/4)."""
+    from tools.job_ledger import summarize_reps
+
+    reps = [
+        (0.50, 0.40, 7, 4, 31),
+        (0.20, 0.30, 7, 4, 0),
+        (0.60, 0.30, 8, 4, 0),
+        (0.70, 0.30, 7, 5, 0),
+    ]
+    rec = summarize_reps(reps)
+    assert rec["best"] == {
+        "build_s": 0.20, "action_s": 0.30, "build_jobs": 7,
+        "action_jobs": 4, "compiles": 0,
+    }
+    assert rec["reps"] == [list(r) for r in reps]
+    assert rec["counts_vary"] is True
+    steady = summarize_reps([(0.3, 0.2, 2, 4, 5), (0.2, 0.2, 2, 4, 0)])
+    assert steady["best"]["build_s"] == 0.2
+    assert "counts_vary" not in steady

@@ -1,11 +1,11 @@
-"""Dump .explain('formatted') for headline queries to plans/$SPARK_GRAFT_PLANS_DIR (default r17)/.
+"""Dump .explain('formatted') for headline queries to
+plans/$SPARK_GRAFT_PLANS_DIR (default r17)/<name>_<suffix>.txt.
 
 Usage: python tools/explain_dump.py [suffix] [q1,q2,...]
   suffix: 'before' or 'after' (default 'before')
   q list: defaults to the full bench HEADLINE set.
 
-Writes plans/$SPARK_GRAFT_PLANS_DIR (default r17)/<name>_<suffix>.txt. Uses the same session shape as
-bench.py so plan shapes match what the bench executes.
+Runs on bench.py's session, so plan shapes match what the bench executes.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # noqa: E402
+from bench import HEADLINE, TOOL_CONF  # noqa: E402
 
 
 def main() -> None:
@@ -28,17 +28,11 @@ def main() -> None:
         else list(HEADLINE)
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from hudi_spark_utilities_plus_spark.queries import QUERIES
     from hudi_spark_utilities_plus_spark.session import build_spark_session
 
-    spark = build_spark_session(
-        app_name="explain-dump",
-        master=f"local[{cpus}]",
-        conf={"spark.ui.enabled": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark_session(app_name="explain-dump", conf=TOOL_CONF)
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

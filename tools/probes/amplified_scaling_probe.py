@@ -1,14 +1,18 @@
-"""Amplified multi-task scaling corpus (VERDICT r16 item 3).
+"""Amplified multi-task scaling corpus.
 
 Every sf0.1 fixture parquet is a SINGLE file with ONE row group, so
-every scan is one task and the driver's sec@8/sec@32 ratios sit at ~1
-regardless of code quality. This probe materializes a 20x corpus whose
-scans have real parallelism — 32 files per table, ~1 MB parquet row
-groups — then the bench can be pointed at it:
+every scan is one task and walls at different core counts sit at ~1x
+of each other regardless of code quality. This probe materializes a 20x
+corpus whose scans have real parallelism — 32 files per table, ~1 MB
+parquet row groups — then the bench can be pointed at it:
 
     python tools/probes/amplified_scaling_probe.py build [out_dir]
     SPARK_GRAFT_SF_DIR=<out_dir> SPARK_GRAFT_CPUS=32 \
         SPARK_GRAFT_ONLY=q1,q2 python bench.py
+
+bench.py warms up on an sf0.001 directory next to the corpus, else on
+the corpus itself; link the sf0.001 fixtures beside out_dir to keep the
+warmup small.
 
 Amplification is replica-structure-preserving, not copy-paste:
 
@@ -33,8 +37,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import TOOL_CONF
+from hudi_spark_utilities_plus_spark.session import build_spark_session
 
 REPS = int(os.environ.get("AMP_REPS", "20"))
 SRC = os.environ.get("AMP_SRC", "/root/testdata/sf0.1")
@@ -44,17 +50,15 @@ PASSTHROUGH = ["region", "nation", "customer", "supplier", "part",
 
 
 def build(out_dir: str) -> None:
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        # small row groups so even one file splits into many units
-        .config("spark.hadoop.parquet.block.size", str(1 << 20))
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
+    spark = build_spark_session(
+        app_name="amplified-scaling-probe",
+        conf={
+            **TOOL_CONF,
+            # small row groups so even one file splits into many units
+            "spark.hadoop.parquet.block.size": str(1 << 20),
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(out_dir, exist_ok=True)
 
     docs = spark.read.parquet(f"{SRC}/documents.parquet")

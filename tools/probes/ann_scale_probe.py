@@ -1,84 +1,53 @@
-"""ANN scale probe (r13, joins the per-round regression set): inflate
-the sf0.1 embeddings table (2,000 x 64-dim) to ~512k vectors via
-deterministic element-wise jitter, then race the registry's top-k
-paths over the same 32 queries — exact brute force (the baseline),
-IVF, and banded-hyperplane LSH.
+"""ANN scale probe: inflate the sf0.1 embeddings table (2,000 x 64-dim)
+to ~512k vectors via deterministic element-wise jitter, then race the
+top-k engines over the same 32 queries: exact brute force (the
+baseline), one-shot IVF, a persisted IVF index, banded-hyperplane LSH,
+product quantization, and a 100k-query PQ batch.
 
-Regression signals, in order of importance:
+Signals, in order of importance:
   1. recall@10 of the approximate paths vs the exact baseline
-     (candidate-generation soundness — a banding/probing bug shows up
+     (candidate-generation soundness: a banding or probing bug shows up
      here first);
-  2. wall time at 256x the bench corpus (the 100 TB posture:
-     candidate generation must not track the corpus the way brute
-     force does);
-  3. determinism: row counts and recall exact across re-runs (no
-     rand() anywhere — the jitter is sin() over ids).
+  2. wall time at 256x the bench corpus (candidate generation must not
+     track the corpus the way brute force does);
+  3. determinism: row counts and recall exact across re-runs (no rand()
+     anywhere; the jitter is sin() over ids).
 
-r13 first-run figures on this host (the band until the r14 fix):
-  brute 15-23 s (16.4M interpreted HOF dot products — tolerable),
-  IVF (n_clusters=32, n_probe=4) 29.5 s recall@10=1.000 (k-means
-  training dominates; amortizable as a persisted index at scale),
-  LSH at 512k: **585 s (defaults) / 727 s (band_bits=12)**,
-  recall@10=1.000 — CORRECT but ~30x brute force.
+Two choices keep the LSH leg below brute force. `_band_keys` computes
+the hyperplane signatures as one Arrow-vectorized matmul, bit-exact
+against `_band_keys_spec`, because Catalyst higher-order functions are
+interpreted (CodegenFallback, ~520 us per vector against ~1.4 us for
+the same flops in codegen). And `band_bits` scales with the corpus
+(clamp(ceil(log2(n/16)), 6, 20)), because 6-bit band keys (keyspace 64)
+collide on nearly every pair at 512k vectors.
 
-The LSH wall is NOT candidate explosion (recall and candidate math are
-fine at both band widths). Micro-split on the same corpus: l2_norm
-over 512k vectors = 0.7 s; the 96-plane signature stage
-(_band_keys: 16 bands x 6 bits) = 267.6 s, and the executed plan
-prints NO WholeStageCodegen — each plane projection is a nested
-transform(lambdafunction(aggregate(slice(transform([64-float literal
-hyperplane]...))))) higher-order function, and Catalyst HOFs are
-CodegenFallback: always interpreted, ~520 us/vector here vs ~1.4 us
-for the same flops in codegen (norms). At the bench's 2k corpus this
-hides inside session overhead, which is why BENCH never flagged it.
+Band (local[4] through build_spark_session, 32 queries, k=10; every
+leg returns 320 rows at recall@10 = 1.000): brute 64 s; one-shot IVF
+(n_clusters=32, n_probe=4) 299 s, k-means training dominating;
+IVF index build 307 s, warm query batches 9.6-11.8 s; LSH at the full
+512k corpus 18 s; PQ build 1,587 s, encode 6 s, query reps 21-22 s at
+shortlist=1024; PQ bulk (100k queries, shortlist 64) build+encode
+266 s, query 639 s, blocked_path=True. On 32 local cores with a plain
+SparkSession builder the same legs took brute 9.5-18 s, IVF 23-31 s,
+index build 28-30 s and queries 1.9-6 s, LSH 2.5-6 s, PQ build
+60-110 s, encode 8-16 s and queries 4-7 s, PQ bulk 90-100 s, at the
+same rows and recall.
 
-r14 fix LANDED, two parts (operators/similarity.py):
-  1. `_band_keys` signatures now run as one Arrow-vectorized
-     pandas_udf matmul — (N, dim) @ (dim, bands*bits) -> sign bits ->
-     pack band keys — bit-exact vs the retained Column-fold spec
-     (`_band_keys_spec`, pinned by
-     tests/test_llm_ops.py::test_band_keys_matches_fold_spec). That
-     alone took the 512k LSH leg from 585-727 s to 95.6 s recall
-     1.000 (measured this round).
-  2. The residual 95.6 s was CANDIDATE EXPLOSION, the second static-
-     parameter scale trap: 6-bit band keys (keyspace 64) collide on
-     essentially every pair at 512k vectors, so LSH scored the whole
-     corpus. `band_bits` now defaults to corpus-scaled width
-     (clamp(ceil(log2(n/16)), 6, 20) — constant expected bucket
-     occupancy); measured sweep at 512k, recall 1.000 throughout:
-     bb=12 14.3 s, bb=16 2.5 s vs brute 9.5 s.
-Blast-radius correction vs the r13 wording: only ann_topk_lsh ever
-routed through _band_keys; similar_pairs' LSH fallback already used
-the matmul via _lsh_candidate_pairs.
-
-Also r14: a PERSISTED-IVF-index leg (build_ivf_index/ivf_index_topk)
-— the amortization path for the "k-means training dominates" finding
-on the one-shot IVF: training paid once at build (~28-30 s at 512k),
-each query batch then partition-prunes to its probed clusters
-(warm 1.9-6 s, recall 1.000 vs one-shot 23-31 s per call). The LSH leg below runs at the
-FULL 512k corpus (ANN_PROBE_LSH_CORPUS) on the operator's pure-default
-auto path; the band (this host): LSH wall BELOW brute (2.5-6 s vs
-9.5-18 s) at recall >= 0.95. The reduced-corpus brute wall prints
-alongside when a smaller LSH corpus is requested. Sixth leg (r14):
-product quantization — train-once codebook + Arrow-encoded codes, ADC
-shortlist + exact rerank; band in the leg comment (queries ~4-7 s at
-recall 1.000, an order under brute on the same host)."""
+ANN_PROBE_LSH_CORPUS runs the LSH leg on a smaller corpus and prints
+the brute wall at that corpus alongside; ANN_PROBE_BULK_Q=0 skips the
+bulk leg.
+"""
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from pyspark.sql import functions as F
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+from bench import TOOL_CONF
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+
+spark = build_spark_session(app_name="ann-scale-probe", conf=TOOL_CONF)
 from hudi_spark_utilities_plus_spark.operators.similarity import (
     ann_topk_lsh,
     cosine_topk_bruteforce,
@@ -141,10 +110,9 @@ print(
     f"recall@{K}={len(ivf & truth) / len(truth):.3f}"
 )
 
-# r14 leg: PERSISTED IVF index — training paid once at build, each
-# query batch partition-prunes to its probed clusters. Band (this
-# host): build ~28-30 s, warm query batch 1.9-6 s (vs the one-shot
-# ivf_topk's 23-31 s, which retrains per call), recall 1.000.
+# persisted IVF index: training paid once at build, each query batch
+# partition-prunes to its probed clusters (the one-shot ivf_topk
+# retrains per call)
 import shutil as _shutil
 
 from hudi_spark_utilities_plus_spark.operators.similarity import (
@@ -181,8 +149,8 @@ lsh_truth = truth if lsh_corpus is corpus else set(
     .collect()
 )
 if lsh_corpus is not corpus:
-    # ADVICE r13: print the brute wall at the corpus the LSH leg
-    # actually uses, so the LSH-vs-brute ratio below is measurable
+    # the brute wall at the corpus the LSH leg actually uses, so the
+    # LSH-vs-brute ratio below is measurable
     print(f"brute@{lsh_total}: rows={len(lsh_truth)} wall={time.time() - t0:.1f}s")
 t0 = time.time()
 lsh = set(
@@ -196,12 +164,8 @@ print(
     f"recall@{K}={len(lsh & lsh_truth) / len(lsh_truth):.3f}"
 )
 
-# PQ leg (r14): codebook + encode are train-once artifacts; the query
-# is an ADC table-gather shortlist + exact rerank. Band (quiet host
-# readings scale with the brute leg): build ~60-110 s, encode ~8-16 s,
-# query reps ~4-7 s at shortlist=1024, recall 1.000 (loaded-host r14
-# first recording: build 108 s, encode 15.8 s, queries 6.5/5.9 s vs
-# brute 95.7 s on the same host).
+# PQ: codebook + encode are train-once artifacts; the query is an ADC
+# table-gather shortlist + exact rerank
 from hudi_spark_utilities_plus_spark.operators.similarity import (
     build_pq_codebook,
     pq_encode,
@@ -230,17 +194,13 @@ for rep in (1, 2):
         f"recall@{K}={len(pq & truth) / len(truth):.3f}"
     )
 
-# PQ BULK leg (r15, VERDICT r14 ask 4's closure measurement): a
-# 100k-query batch — the corpus queries itself, the self-join shape of
-# corpus-wide near-neighbor mining — driven through pq_topk's blocked
-# cogroup engine (driver_query_limit exceeded), which must (a) never
-# collect the query batch (plan pinned: FlatMapCoGroupsInPandas
-# present) and (b) return brute-truth recall on the 32 sampled probe
-# queries embedded in the batch. ANN_PROBE_BULK_Q=0 skips the leg.
-# Band (quiet host): first recordings 135.9-157.2 s; after the
-# one-DataFrame-per-cell output batching + [tile, n] score orientation
-# + q_block 4096, ~90-100 s at recall 1.000 (ritual re-run: 98.5 s) — ~10^10 scored pairs
-# through the Arrow cells on local[32].
+# PQ bulk: a 100k-query batch — the corpus queries itself, the
+# self-join shape of corpus-wide near-neighbor mining — driven through
+# pq_topk's blocked cogroup engine (driver_query_limit exceeded), which
+# must (a) never collect the query batch (plan pinned:
+# FlatMapCoGroupsInPandas present) and (b) return brute-truth recall on
+# the 32 sampled probe queries embedded in the batch; ~10^10 scored
+# pairs go through the Arrow cells.
 BULK_Q = int(os.environ.get("ANN_PROBE_BULK_Q", "100000"))
 if BULK_Q > 0:
     corpus_bulk = inflate(BULK_Q)

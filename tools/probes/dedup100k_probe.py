@@ -1,20 +1,24 @@
-"""100k-doc near-dedup regression probe (r8/r10 precedent): inflate the
-sf0.1 documents table to 100k docs (mutated copies -> known near-dup
-structure), run ngram_jaccard_pairs, time it, sanity-check pair volume."""
-import sys, time
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from hudi_spark_utilities_plus_spark.operators.dedup import ngram_jaccard_pairs
+"""100k-doc near-dedup probe: inflate the sf0.1 documents table to 100k
+docs (mutated copies, so the near-dup structure is known), run
+ngram_jaccard_pairs at threshold 0.8 twice, and print the pair count
+and wall of each run. The pair count is the regression signal; the
+wall tracks host load.
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+Band (local[4] through build_spark_session): 884,516 pairs in both
+runs, walls 53-55 s.
+"""
+import os
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+from pyspark.sql import functions as F
+
+from bench import TOOL_CONF
+from hudi_spark_utilities_plus_spark.operators.dedup import ngram_jaccard_pairs
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+
+spark = build_spark_session(app_name="dedup100k-probe", conf=TOOL_CONF)
 docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select("doc_id", "text")
 n0 = docs.count()
 reps = 100_000 // n0

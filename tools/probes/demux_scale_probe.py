@@ -1,45 +1,42 @@
-"""Streaming-demux scale probe (r13, joins the per-round regression
-set): one CDC micro-batch routed to MANY per-table MOR lake tables —
-the reference's multi-table ``binlog-hudi`` sink shape
-(HoodieBinlogDeltaStreamerSuite.scala:31-44) at a table count the
-reference's own 2-table fixtures never exercise.
+"""Streaming-demux scale probe: one CDC micro-batch routed to MANY
+per-table MOR lake tables — the reference's multi-table ``binlog-hudi``
+sink shape (HoodieBinlogDeltaStreamerSuite.scala:31-44) at a table
+count the reference's own 2-table fixtures never exercise.
 
-Regression signals:
+Signals:
   1. correctness under fan-out: after an insert batch + an update
      batch, every table serves exactly its keys with the updated
-     payload (spot-checked per table, counted over all);
-  2. the per-table fixed cost: same 256k rows routed to 8 vs 64
+     payload (counted over all tables);
+  2. the per-table fixed cost: the same 256k rows routed to 8 vs 64
      tables — the wall delta is the O(T) driver-side apply overhead
      (job-chain launch + MOR log append per table), the term that
      dominates a 1,000-table deployment;
   3. the driver thread pool's value: 64 tables at
      option.demux.parallelism 8 (default) vs 1 (serial).
 
-r13 first-run figures on this host (the band; use the warm UPDATE
-batch for comparisons — the first insert batch carries JVM/session
-warmup): 64 tables 16.1 s pooled (parallelism 8) vs 37.4 s serial
-(pool = 2.3x); 8 tables 4.2 s for the same 256k rows, so the
-driver-side fixed cost is ~0.21 s/table pooled — wall tracks table
-count, not rows. At 1,000+ tables per query, raise
-option.demux.parallelism and shard tables across queries; rows land
-exactly (256k keys, updates win) in every configuration."""
+Compare the warm UPDATE batch; the first insert batch carries JVM and
+session warmup. Band (local[4] through build_spark_session): 64 tables
+22.6 s pooled (parallelism 8) vs 38.9 s serial (pool = 1.7x); 8 tables
+6.9 s for the same 256k rows, so the driver-side fixed cost is
+~0.28 s/table pooled — wall tracks table count, not rows. Rows land
+exactly (256k keys, updates win) in every configuration. On 32 local cores
+with a plain SparkSession builder the same walls were 16.1 / 37.4 /
+4.2 s. At 1,000+ tables per query, raise option.demux.parallelism and
+shard tables across queries.
+"""
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from pyspark.sql import functions as F
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+from bench import TOOL_CONF
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+
+spark = build_spark_session(app_name="demux-scale-probe", conf=TOOL_CONF)
 from hudi_spark_utilities_plus_spark.streaming.demux import demux_batch
 
 ROWS = 256_000

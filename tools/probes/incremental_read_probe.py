@@ -1,7 +1,7 @@
-"""Incremental-read cost probe (r13, joins the per-round regression
-set): on a LARGE manifest MOR table with a long post-compaction log,
-an incremental pull after a small delta must cost O(delta), not
-O(table) — the lake layer's streaming-consumer contract at 100 TB.
+"""Incremental-read cost probe: on a LARGE manifest MOR table with a
+long post-compaction log, an incremental pull after a small delta must
+cost O(delta), not O(table) — the lake layer's streaming-consumer
+contract at 100 TB.
 
 Setup: 4M-row / 256-file manifest MOR genesis (range-clustered →
 key_unique proven), then 40 small upsert commits (500 rows each, keys
@@ -9,39 +9,34 @@ clustered so file pruning has something to prune). Cursor taken after
 commit 30; the incremental pull covers commits 31-40 (5,000 changed
 keys out of 4M).
 
-Regression signals:
+Signals:
   1. correctness: the pull returns exactly the keys changed after the
      cursor, each at its newest version (checked by value);
   2. cost: base_files_scanned by the incremental pull (inputFiles ∩
      manifest) must track the DELTA's key envelopes, not the table —
      the same files-opened signal probe_pointread pins. Wall is
-     secondary: at 4M rows both paths are fixed-overhead-dominated
-     (~3.6 s each on this host), exactly like pointread's
-     1/512-files point read that loses on wall at 8M rows;
+     secondary: at 4M rows both paths are dominated by fixed overhead,
+     as is probe_pointread's point read;
   3. the cursor-horizon contract: a cursor predating compaction
      raises with the resync recipe (pinned by a unit test elsewhere;
      probed here only as the happy path).
 
-r13 first-run figures on this host (the band): 2/256 base files
-opened by the 5k-key incremental pull, keys exact, versions newest;
-snapshot 3.6 s / incremental 3.7 s wall (overhead parity at this
-size)."""
+Band (local[4] through build_spark_session): 2/256 base files opened
+by the 5k-key incremental pull, keys exact, versions newest; snapshot
+16.0 s / incremental 14.5 s wall (3.6 / 3.7 s on 8 local cores with a plain
+SparkSession builder).
+"""
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+from bench import TOOL_CONF
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+
+spark = build_spark_session(app_name="incremental-read-probe", conf=TOOL_CONF)
 from hudi_spark_utilities_plus_spark.lake import HudiTable
 
 ROWS, FILES, COMMITS, BATCH = 4_000_000, 256, 40, 500

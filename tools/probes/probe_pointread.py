@@ -1,17 +1,23 @@
-"""Gate-figure probe: point-read file pruning on a many-file manifest
-table — files opened + latency, point read vs full read, COW and MOR."""
-import sys, time, tempfile, os
+"""Point-read file-pruning probe on a 512-file, 8M-row manifest table,
+COW and MOR (MOR with a live delta log): files opened and latency of a
+one-key read(keys=), against a full read + filter of the same key.
 
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession, functions as F
+Band (local[4] through build_spark_session): base_files_scanned=1 of
+512 for COW and for MOR; point read 4.9 s (COW) / 3.4 s (MOR) against
+5.1 / 5.0 s for the full read + filter.
+"""
+import os
+import sys
+import tempfile
+import time
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("pointread-probe")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "8")
-    .getOrCreate()
-)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+from pyspark.sql import functions as F
+
+from bench import TOOL_CONF
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+
+spark = build_spark_session(app_name="pointread-probe", conf=TOOL_CONF)
 from hudi_spark_utilities_plus_spark.lake import HudiTable
 
 N_FILES = 512

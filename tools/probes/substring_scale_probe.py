@@ -1,11 +1,11 @@
-"""Substring-dedup regression probe (dedup100k precedent): inflate the
-sf0.1 documents to SUBSTRING_PROBE_DOCS docs (default 100k) with KNOWN
-duplicated-span structure — every 3rd base doc's copies share the full
-original body (tail-mutated copies), so the grid detector must find
-large cross-copy regions — run duplicated_spans (L=64, s=32), time it,
-and pin determinism: span count and duplicated-char total must be
-EXACT across back-to-back runs (the wall tracks host load; the counts
-are the regression signal).
+"""Substring-dedup probe: inflate the sf0.1 documents to
+SUBSTRING_PROBE_DOCS docs (default 100k) with KNOWN duplicated-span
+structure — every 3rd base doc's copies share the full original body
+(tail-mutated copies), so the grid detector must find large cross-copy
+regions — run duplicated_spans (L=64, s=32), time it, and pin
+determinism: span count and duplicated-char total must be EXACT across
+back-to-back runs (the wall tracks host load; the counts are the
+regression signal).
 
 Second leg, HOT-KEY SKEW: plant one 64-char block at position 0 of
 EVERY document — a single shingle key owned by the whole corpus, the
@@ -13,44 +13,43 @@ boilerplate-header shape 100 TB corpora actually have. The two-stage
 distinct-doc aggregation must stay partial-aggregable (no single-
 reducer funnel), and every doc must report a span starting at 0.
 
-Bands (r14, quiet host):
-  default leg @100k — exactly 93,142 spans / 26,437,664 dup chars
-  (~900k grid shingles), walls ~2.5-7 s per run;
-  skew leg @100k — exactly 100,000 docs with a span at 0 (149,246
-  spans), wall ~3 s — the hot key must NOT blow the wall up;
-  1M-doc measurement (SUBSTRING_PROBE_DOCS=1000000, recorded r14):
-  exactly 959,158 spans / 272,702,496 dup chars both runs (slightly
-  super-10× the 100k counts — more copies per base doc match each
-  other), walls 38.8/20.1 s (~8× on 10× docs, near-linear); skew leg
-  1,000,000/1,000,000 docs at 7.9 s.
+Third leg, REFINE: refine_span_bounds over the same corpus — island
+count must EQUAL the detect leg's, refined bounds must contain the grid
+bounds with extensions < stride, and counts must be exact across runs.
 
-Third leg (r15), REFINE: refine_span_bounds over the same corpus —
-island count must EQUAL the detect leg's, refined bounds must contain
-the grid bounds with extensions < stride, and counts must be exact
-across runs. Bands (quiet host): @100k 93,142 islands, exact_chars
-29,224,470 (= grid + 10.5% recovered boundary chars), walls 7.8-8.8 s
-(tracks the detect leg, does not multiply it); @1M 959,158 islands,
-exact_chars 301,641,888 (+10.6%), walls 35.8-42.1 s — near-linear on
-10x docs, violations 0 at both scales.
+Bands (local[4] through build_spark_session):
+  default leg @100k — exactly 93,142 spans / 26,437,664 dup chars
+  (~900k grid shingles), walls 7.5-13.6 s per run;
+  skew leg @100k — exactly 100,000 docs with a span at 0 (149,246
+  spans), wall 7.6 s — the hot key must NOT blow the wall up;
+  refine leg @100k — 93,142 islands, exact_chars 29,224,470 (= grid +
+  10.5% recovered boundary chars), violations 0, walls 12.6-20.8 s.
+The counts are the same as on 32 local cores with a plain SparkSession
+builder, where the walls were 2.5-7 s (default), ~3 s (skew) and
+7.8-8.8 s (refine). 1M-doc measurement on that session
+(SUBSTRING_PROBE_DOCS=1000000): exactly 959,158 spans / 272,702,496
+dup chars both runs (slightly super-10× the 100k counts — more copies
+per base doc match each other), walls 38.8/20.1 s (~8× on 10× docs,
+near-linear); skew leg 1,000,000/1,000,000 docs at 7.9 s; refine
+959,158 islands, exact_chars 301,641,888 (+10.6%), walls 35.8-42.1 s,
+violations 0.
 """
-import os, sys, time
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
+import os
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from pyspark.sql import functions as F
+
+from bench import TOOL_CONF
 from hudi_spark_utilities_plus_spark.operators.spans import duplicated_spans
+from hudi_spark_utilities_plus_spark.session import build_spark_session
 
 TARGET = int(os.environ.get("SUBSTRING_PROBE_DOCS", "100000"))
 HOT = "#" * 40 + "COMMON-LICENSE-HEADER-BLOCK#... "[:24]  # 64 chars
 assert len(HOT) == 64, len(HOT)
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+spark = build_spark_session(app_name="substring-scale-probe", conf=TOOL_CONF)
 docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
     "doc_id", "text"
 )
@@ -112,7 +111,7 @@ if at_zero != total:
     print(f"SKEW MISS: {at_zero} != {total}")
     sys.exit(1)
 
-# refine leg (r15): boundary refinement at probe scale — determinism
+# refine leg: boundary refinement at probe scale — determinism
 # of the refined bounds, the grid-containment invariant
 # (exact_start <= span_start, span_end <= exact_end, extensions
 # < stride), and the wall band. The flank-group pass touches only

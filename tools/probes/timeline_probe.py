@@ -5,20 +5,26 @@ in the claim dir, so flat bucket medians show that allocation (one
 claim LIST + one conditional put per commit) adds no per-commit drift.
 
     python tools/probes/timeline_probe.py
-"""
-import sys, time, statistics, shutil, os
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".."))
-from pyspark.sql import SparkSession
-from hudi_spark_utilities_plus_spark.lake import HudiTable
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.driver.memory", "8g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+Band (local[4] through build_spark_session): rows=1000 after both
+runs; bucket medians 0.20-0.33 s with compaction off and 0.17-0.24 s
+with it on, flat after the first bucket; the read after 120
+uncompacted commits takes 2.9 s, after compaction 0.13 s.
+"""
+import os
+import shutil
+import statistics
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+
+from bench import TOOL_CONF
+from hudi_spark_utilities_plus_spark.lake import HudiTable
+from hudi_spark_utilities_plus_spark.session import build_spark_session
+
+spark = build_spark_session(app_name="timeline-probe", conf=TOOL_CONF)
+
 
 def run(tag, options):
     p = f"/tmp/probe/t_{tag}"
