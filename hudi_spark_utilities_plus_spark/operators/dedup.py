@@ -185,98 +185,73 @@ def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# Broadcast the verify-side shingle sets only while they plausibly fit in
-# executor memory: ~1 KB/doc of hashed shingles → ~500 MB at this cap.
-# Above it the verify join falls back to a shuffled (sort-merge/shuffled-
-# hash) join on doc id, which ships each array exactly once.
+# Broadcast the verify side only while it plausibly fits in executor
+# memory: ~1 KB/doc of hashed shingles → ~500 MB at this cap. Above it
+# the verify join falls back to a shuffled (sort-merge/shuffled-hash)
+# join on the item id, which ships each side row exactly once.
 _BROADCAST_VERIFY_MAX_DOCS = 500_000
 
-# Session-conf override so a deployment can retune the verify-join
-# strategy for its executor memory without code edits (e.g. small
-# executors → lower; 64 GB executors and fat docs → raise).
-_VERIFY_CAP_CONF = "spark.hudi_spark_utilities_plus.verify.broadcastMaxDocs"
 
+def _pair_sides(
+    cand: DataFrame,
+    side: DataFrame,
+    key: str,
+    cols: tuple[str, ...],
+    n_items: int,
+    broadcast_verify: bool | None,
+) -> DataFrame:
+    """The verify join of every pair operator: join the per-item ``side``
+    table to the candidate pairs twice, on ``<key>_a`` and ``<key>_b``,
+    carrying each of ``cols`` as ``<col>_a`` / ``<col>_b``. The caller
+    adds only its own score and filter.
 
-def verify_broadcast_cap(spark) -> int:
-    """Doc-count cap for broadcasting the verify side of near-dup joins.
-
-    Reads ``spark.hudi_spark_utilities_plus.verify.broadcastMaxDocs`` from
-    the session conf, falling back to ``_BROADCAST_VERIFY_MAX_DOCS``
-    (500k ≈ 500 MB of hashed shingle sets). Shared by the Jaccard /
-    MinHash / SimHash verify joins and ``similarity.similar_pairs``."""
-    try:
-        raw = spark.conf.get(_VERIFY_CAP_CONF, None)
-    except Exception:
-        raw = None
-    if raw is None:
-        return _BROADCAST_VERIFY_MAX_DOCS
-    try:
-        return int(raw)
-    except ValueError:
-        return _BROADCAST_VERIFY_MAX_DOCS
+    Join strategy: candidates can outnumber items 50:1, and shipping
+    KB-sized arrays through a shuffle per candidate dwarfs a map-side
+    hash join, so ``side`` is broadcast while ``n_items`` ≤
+    ``_BROADCAST_VERIFY_MAX_DOCS`` (read at call time). Above that cap
+    the join shuffles on the key instead, each side row crossing the
+    wire once: correct at any corpus size, never an executor OOM.
+    ``broadcast_verify`` overrides the gate in either direction."""
+    if broadcast_verify is None:
+        broadcast_verify = n_items <= _BROADCAST_VERIFY_MAX_DOCS
+    side = side.select(key, *cols)
+    if broadcast_verify:
+        side = F.broadcast(side)
+    for s in ("a", "b"):
+        cand = cand.join(
+            side.select(*[F.col(c).alias(f"{c}_{s}") for c in (key, *cols)]),
+            f"{key}_{s}",
+        )
+    return cand
 
 
 def _verify_jaccard(
     cand: DataFrame,
     sets: DataFrame,
     threshold: float,
-    *,
-    n_docs: int | None = None,
-    broadcast_verify: bool | None = None,
+    n_docs: int,
+    broadcast_verify: bool | None,
 ) -> DataFrame:
-    """Join candidate (doc_a, doc_b) pairs back to their shingle sets and
-    keep pairs with exact Jaccard ≥ threshold.
+    """Keep the candidate (doc_a, doc_b) pairs whose shingle sets have
+    exact Jaccard ≥ threshold.
 
     ``sets`` must carry (doc, shh: array<long> of distinct 64-bit shingle
     hashes, n_sh). Intersections run on 8-byte hashes instead of shingle
     strings — ~3× smaller broadcast and cheaper set ops; a 64-bit
     collision folding two shingles is ~5e-15 per doc, far below the
-    driver-oracle's noise floor.
-
-    Join strategy: candidates can outnumber docs 50:1, and shipping
-    KB-sized shingle arrays through a shuffle per candidate dwarfs a
-    map-side hash join — so the sets side is broadcast when it fits
-    (``n_docs`` ≤ ``verify_broadcast_cap(spark)``, default 500k,
-    conf-tunable via
-    ``spark.hudi_spark_utilities_plus.verify.broadcastMaxDocs``). Above
-    that cap (or with
-    ``broadcast_verify=False``) the hint is dropped and the join shuffles
-    on doc id instead, each shingle array crossing the wire once —
-    correct at any corpus size, never an executor OOM. ``broadcast_verify``
-    overrides the size gate in either direction."""
-    if broadcast_verify is None:
-        broadcast_verify = (
-            n_docs is not None
-            and n_docs <= verify_broadcast_cap(cand.sparkSession)
-        )
-    if broadcast_verify:
-        sets = F.broadcast(sets)
-    verified = (
-        cand.join(
-            sets.select(
-                F.col("doc").alias("doc_a"),
-                F.col("shh").alias("sh_a"),
-                F.col("n_sh").alias("n_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets.select(
-                F.col("doc").alias("doc_b"),
-                F.col("shh").alias("sh_b"),
-                F.col("n_sh").alias("n_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
+    driver-oracle's noise floor. Join strategy: ``_pair_sides``."""
+    n_common = F.col("n_common")
+    return (
+        _pair_sides(cand, sets, "doc", ("shh", "n_sh"), n_docs, broadcast_verify)
+        .withColumn("n_common", F.size(F.array_intersect("shh_a", "shh_b")))
         .withColumn(
             "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+            n_common.cast("double")
+            / (F.col("n_sh_a") + F.col("n_sh_b") - n_common),
         )
         .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
     )
-    return verified.select("doc_a", "doc_b", "jaccard")
 
 
 def _lossless_prefix_len(size_col, num: int, den: int):
@@ -317,6 +292,91 @@ def _rationalize_threshold(threshold: float) -> tuple[int, int]:
     return fr.numerator, fr.denominator
 
 
+def _jaccard_window(t_num: int, t_den: int) -> Column:
+    """PPJoin length filter of a Jaccard threshold ``t_num/t_den`` over
+    the ``x``/``y`` sides of a candidate self-join, lossless: J(a,b) ≥ τ
+    forces τ·n_a ≤ n_b ≤ n_a/τ (the intersection alone is
+    ≥ τ·max(n_a, n_b)), so size-mismatched collisions never reach the
+    verify join. Integer-exact: the float form
+    (n_sh * 0.8000000000000000444 > 8) rejected exact-boundary pairs."""
+    nx = F.col("x.n_sh").cast("long")
+    ny = F.col("y.n_sh").cast("long")
+    return (ny * t_den >= nx * t_num) & (ny * t_num <= nx * t_den)
+
+
+def _hashed_sets(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> tuple[DataFrame, int]:
+    """(sets, n_docs) for the prefix-filtered pair operators: each doc's
+    sorted distinct shingle hashes ``shh`` with ``n_sh`` and their
+    frequency-ordered ``shp``/``shc`` (``_freq_ordered``), materialized,
+    plus the doc count that gates the verify broadcast."""
+    base = (
+        _shingled(df, text_col, id_col, n)
+        .withColumn(
+            "shh", F.array_sort(F.transform("sh", lambda x: F.xxhash64(x)))
+        )
+        # the raw shingle strings are only needed to compute shh; drop
+        # them before persist so the cache holds 8-byte hash arrays, not
+        # the ~3x-larger string arrays
+        .drop("sh")
+        .persist()
+    )
+    # The candidate join and the verify join both read the ordered
+    # result: persist base so the ordering pass computes shingling once,
+    # then MATERIALIZE (not persist) the shared frame — the returned
+    # DataFrame still references it, so an in-function persist could
+    # never be released and leaked one full shingle table per call (see
+    # operators/materialize.py). The count is the materializing action:
+    # one job.
+    sets, n_docs = materialize_counted(_freq_ordered(base))
+    base.unpersist()
+    return sets, n_docs
+
+
+def _prefix_candidates(
+    s: DataFrame,
+    t_num: int,
+    t_den: int,
+    prefix_den: int,
+    window: Column,
+    target,
+) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) of an overlap join with
+    threshold ``t_num/t_den``: the self-join of the docs' prefix postings
+    (``_prefix_posts``) on the shingle, filtered losslessly.
+
+    - Prefix: each doc posts its first ``n - ceil(t_num·n/prefix_den) + 1``
+      shingles (``_lossless_prefix_len``), in frequency-ascending order
+      (``shp``) when ``s`` carries it, else hash order (``shh``).
+    - ``window``: the size-window predicate over ``x.n_sh``/``y.n_sh``.
+    - Positional filter (PPJoin), integer-exact: both prefixes follow
+      the same global token order, so a collision at 0-based positions
+      (px, py) bounds the whole intersection by
+      1 + min(n_x-px-1, n_y-py-1), which must reach
+      ``t_num/t_den · target(n_x, n_y)`` (``target`` is ``F.greatest``
+      or ``F.least``: the side the overlap is measured against). The
+      FIRST common token
+      (smallest positions → largest bound) always passes, so filtering
+      each collision by its own bound never drops a true pair."""
+    pref = "shp" if "shp" in s.columns else "shh"
+    posts = _prefix_posts(s, _lossless_prefix_len(F.size(pref), t_num, prefix_den))
+    nx, ny = F.col("x.n_sh"), F.col("y.n_sh")
+    ubound = F.lit(1) + F.least(nx - F.col("x.pos") - 1, ny - F.col("y.pos") - 1)
+    return (
+        posts.alias("x")
+        .join(posts.alias("y"), "shingle")
+        .filter(F.col("x.doc") < F.col("y.doc"))
+        .filter(window)
+        .filter(
+            ubound.cast("long") * F.lit(t_den)
+            >= target(nx, ny).cast("long") * F.lit(t_num)
+        )
+        .select(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
+        .distinct()
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -338,76 +398,17 @@ def ngram_jaccard_pairs(
     Scale: postings are 8-byte hashes; the only wide stages are the
     prefix join and the verify join — both shuffle-bounded, no O(n²).
     """
-    base = (
-        _shingled(df, text_col, id_col, n)
-        .withColumn(
-            "shh", F.array_sort(F.transform("sh", lambda x: F.xxhash64(x)))
-        )
-        # the raw shingle strings are only needed to compute shh; drop
-        # them before persist so the cache holds 8-byte hash arrays, not
-        # the ~3x-larger string arrays
-        .drop("sh")
-        .persist()
-    )
-    # The prefix join and the verify join both read the ordered result:
-    # persist base so the ordering pass computes shingling once, then
-    # MATERIALIZE (not persist) the shared frame — the returned
-    # DataFrame still references it, so an in-function persist could
-    # never be released and leaked one full shingle table per call (see
-    # operators/materialize.py).
-    # one fused job: lazy-checkpoint + count (the count IS the
-    # materializing action — operators/materialize.py)
-    s, n_docs = materialize_counted(_freq_ordered(base))
-    base.unpersist()
+    s, n_docs = _hashed_sets(df, text_col, id_col, n)
     t_num, t_den = _rationalize_threshold(threshold)
     # Prefixes in frequency-ascending order (_freq_ordered): on the
     # 6x-amplified fixture this makes the filter EXACT — 8,508
-    # candidates for 8,508 true pairs, vs 38,460 under hash order —
-    # so the verify join does zero wasted intersections.
-    prefix_len = _lossless_prefix_len(F.size("shp"), t_num, t_den)
-    posts = _prefix_posts(s, prefix_len)
-    # PPJoin positional filter, lossless: both prefixes follow the same
-    # global token order, so a collision at (0-based) positions px, py
-    # bounds the whole intersection by 1 + min(n_x-px-1, n_y-py-1). A
-    # pair with J ≥ τ has inter ≥ τ·union ≥ τ·max(n_a, n_b), and its
-    # FIRST common token (smallest positions → largest bound) always
-    # passes, so filtering each collision by its own bound never drops a
-    # true pair. The decision is integer-exact (inter·den ≥ num·n_max)
-    # — no float boundary error in either direction.
-    ubound = F.lit(1) + F.least(
-        F.col("x.n_sh") - F.col("x.pos") - 1,
-        F.col("y.n_sh") - F.col("y.pos") - 1,
+    # candidates for 8,508 true pairs, vs 38,460 under hash order — so
+    # the verify join does zero wasted intersections. Positional target:
+    # J ≥ τ needs inter ≥ τ·union ≥ τ·max(n_a, n_b).
+    cand = _prefix_candidates(
+        s, t_num, t_den, t_den, _jaccard_window(t_num, t_den), F.greatest
     )
-    cand = (
-        posts.alias("x")
-        .join(posts.alias("y"), "shingle")
-        .filter(F.col("x.doc") < F.col("y.doc"))
-        # PPJoin length filter, lossless: J(a,b) ≥ τ forces
-        # τ·n_a ≤ n_b ≤ n_a/τ (the intersection alone is ≥ τ·max(n_a,n_b)),
-        # so size-mismatched collisions on hot prefix shingles never reach
-        # the (more expensive) verify join. Integer-exact: the float form
-        # (n_sh * 0.8000000000000000444 > 8) rejected exact-boundary
-        # pairs.
-        .filter(
-            (F.col("y.n_sh").cast("long") * t_den
-             >= F.col("x.n_sh").cast("long") * t_num)
-            & (F.col("y.n_sh").cast("long") * t_num
-               <= F.col("x.n_sh").cast("long") * t_den)
-        )
-        .filter(
-            ubound.cast("long") * F.lit(t_den)
-            >= F.greatest("x.n_sh", "y.n_sh").cast("long") * F.lit(t_num)
-        )
-        .select(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
-        .distinct()
-    )
-    return _verify_jaccard(
-        cand,
-        s.select("doc", "shh", "n_sh"),
-        threshold,
-        n_docs=n_docs,
-        broadcast_verify=broadcast_verify,
-    )
+    return _verify_jaccard(cand, s, threshold, n_docs, broadcast_verify)
 
 
 # ---------------------------------------------------------------------------
@@ -474,6 +475,40 @@ def minhash_signatures(
     return hashed.withColumn("sig", _minhash_signature(F.col("sh_hashed")))
 
 
+def _band_pairs(
+    bands: DataFrame,
+    key: str,
+    on: Column | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Distinct candidate pairs (``<key>_a`` < ``<key>_b``) of the banded
+    LSH operators: the self-equi-join of ``bands`` (one row per item and
+    band: ``key``, ``band``, ``bkey``) on (band, bkey), further restricted
+    by ``on`` (a predicate over the ``x``/``y`` sides). Each column of
+    ``carry`` rides along as ``<col>_a`` / ``<col>_b``. Pure equi-join:
+    it shuffles on the band key, and the candidate volume tracks the
+    bucket collisions, not n²."""
+    cond = (
+        (F.col("x.band") == F.col("y.band"))
+        & (F.col("x.bkey") == F.col("y.bkey"))
+        & (F.col(f"x.{key}") < F.col(f"y.{key}"))
+    )
+    if on is not None:
+        cond = cond & on
+    return (
+        bands.alias("x")
+        .join(bands.alias("y"), cond)
+        .select(
+            *[
+                F.col(f"{s}.{c}").alias(f"{c}_{t}")
+                for c in (key, *carry)
+                for s, t in (("x", "a"), ("y", "b"))
+            ]
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -495,12 +530,12 @@ def minhash_lsh_pairs(
     # the verify join — persist to compute shingles+signatures once.
     # Only doc/n_sh/shh/sig survive the select: the raw shingle-string
     # array and the mod-P intermediate would otherwise ~triple the
-    # cached row (same drop-before-persist as ngram_jaccard_pairs).
+    # cached row (same drop-before-persist as _hashed_sets).
     sigs, n_docs = materialize_counted(
         minhash_signatures(df, text_col, id_col, n)
         .select("doc", "n_sh", "shh", "sig")
-    )  # materialize (not persist — see ngram_jaccard_pairs), fused
-    # with the broadcast-gate count: one job
+    )  # materialize (not persist — see _hashed_sets), fused with the
+    # broadcast-gate count: one job
     t_num, t_den = _rationalize_threshold(threshold)
     bands = sigs.select(
         "doc",
@@ -519,32 +554,9 @@ def minhash_lsh_pairs(
             )
         ).alias("band", "bkey"),
     )
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.doc") < F.col("y.doc"))
-            # lossless length filter (see ngram_jaccard_pairs): band
-            # collisions between size-mismatched docs can't reach τ.
-            # Integer-exact like the other candidate filters — the float
-            # form rejected exact-boundary pairs (n * 0.8000...444 > k)
-            & (F.col("y.n_sh").cast("long") * t_den
-               >= F.col("x.n_sh").cast("long") * t_num)
-            & (F.col("y.n_sh").cast("long") * t_num
-               <= F.col("x.n_sh").cast("long") * t_den),
-        )
-        .select(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
-        .distinct()
-    )
-    return _verify_jaccard(
-        cand,
-        sigs.select("doc", "shh", "n_sh"),
-        threshold,
-        n_docs=n_docs,
-        broadcast_verify=broadcast_verify,
-    )
+    # band collisions between size-mismatched docs can't reach τ
+    cand = _band_pairs(bands, "doc", _jaccard_window(t_num, t_den))
+    return _verify_jaccard(cand, sigs, threshold, n_docs, broadcast_verify)
 
 
 # ---------------------------------------------------------------------------
@@ -605,7 +617,7 @@ def simhash_pairs(
     sigs = scatter(df).select(
         F.col(id_col).alias("doc"), simhash(F.col(text_col)).alias("sim")
     )
-    sigs = materialize(sigs)  # not persist — see ngram_jaccard_pairs
+    sigs = materialize(sigs)  # not persist — see _hashed_sets
     bands = sigs.select(
         "doc",
         "sim",
@@ -618,22 +630,7 @@ def simhash_pairs(
             )
         ).alias("band", "bkey"),
     )
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
-        .select(
-            F.col("x.doc").alias("doc_a"),
-            F.col("y.doc").alias("doc_b"),
-            F.col("x.sim").alias("sim_a"),
-            F.col("y.sim").alias("sim_b"),
-        )
-        .distinct()
-    )
+    cand = _band_pairs(bands, "doc", carry=("sim",))
     dist = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
         cand.withColumn("hamming", dist)
@@ -698,10 +695,10 @@ def benchmark_overlap(
 
 def _prefix_posts(s: DataFrame, prefix_len) -> DataFrame:
     """Exploded prefix postings (doc, n_sh, pos, shingle) for the
-    candidate self-joins, with the SINGLETON PRUNE (r17, guide §3.2):
-    when ``s`` carries the aligned doc-frequency array ``shc``
-    (_freq_ordered), postings whose shingle occurs in exactly one
-    document are dropped BEFORE the self-join exchange. Lossless for
+    candidate self-joins, with the SINGLETON PRUNE: when ``s`` carries
+    the aligned doc-frequency array ``shc`` (_freq_ordered), postings
+    whose shingle occurs in exactly one document are dropped BEFORE the
+    self-join exchange. Lossless for
     every prefix-collision candidate scheme: a candidate (a, b) exists
     only through a shingle BOTH docs contain, which forces its global
     doc-frequency ≥ 2 — a dfreq-1 posting can only ever join itself
@@ -785,9 +782,9 @@ def _freq_ordered(s: DataFrame) -> DataFrame:
             # prune postings whose shingle no OTHER doc contains
             # (dfreq == 1 ⇒ no partner can hold the shingle, in prefix
             # or anywhere) BEFORE the self-join exchange — the
-            # zero-extra-join form of a bloom/semi-join pre-filter
-            # (guide §3.2); on natural corpora the frequency-ascending
-            # prefix is dominated by exactly these singletons
+            # zero-extra-join form of a bloom/semi-join pre-filter; on
+            # natural corpora the frequency-ascending prefix is
+            # dominated by exactly these singletons
             F.transform("_p", lambda p: p["dfreq"]).alias("shc"),
         )
         .withColumn("shh", F.array_sort("shp"))
@@ -810,34 +807,11 @@ def _containment_candidates(
     # floor(n*(1 - t/(d*r))) + 1 loses 1 whenever the product rounds
     # down across an integer (e.g. t=9/10, r=2, n=20: 20*0.5499999...
     # -> floor 10, but losslessness needs 20 - ceil(9) + 1 = 12).
-    pref = "shp" if "shp" in s.columns else "shh"
-    prefix_len = _lossless_prefix_len(
-        F.size(pref), t_num, t_den * size_ratio
-    )
-    posts = _prefix_posts(s, prefix_len)
-    # Positional filter (integer-exact): a collision at 0-based (px, py)
-    # bounds the intersection by 1 + min(n_x-px-1, n_y-py-1); containment
-    # ≥ t_num/t_den needs inter·t_den ≥ t_num·n_min. The first common
-    # token gives the largest bound, so per-collision filtering is
-    # lossless (same argument as the Jaccard positional filter above).
-    ubound = F.lit(1) + F.least(
-        F.col("x.n_sh") - F.col("x.pos") - 1,
-        F.col("y.n_sh") - F.col("y.pos") - 1,
-    )
-    return (
-        posts.alias("x")
-        .join(posts.alias("y"), "shingle")
-        .filter(F.col("x.doc") < F.col("y.doc"))
-        .filter(
-            (F.col("x.n_sh") <= F.lit(size_ratio) * F.col("y.n_sh"))
-            & (F.col("y.n_sh") <= F.lit(size_ratio) * F.col("x.n_sh"))
-        )
-        .filter(
-            ubound.cast("long") * F.lit(t_den)
-            >= F.lit(t_num) * F.least("x.n_sh", "y.n_sh").cast("long")
-        )
-        .select(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
-        .distinct()
+    # Positional target: containment needs inter·t_den ≥ t_num·n_min.
+    nx, ny = F.col("x.n_sh"), F.col("y.n_sh")
+    window = (nx <= F.lit(size_ratio) * ny) & (ny <= F.lit(size_ratio) * nx)
+    return _prefix_candidates(
+        s, t_num, t_den, t_den * size_ratio, window, F.least
     )
 
 
@@ -871,45 +845,12 @@ def containment_pairs(
 
     Scale: same shape as ngram_jaccard_pairs — 8-byte hashed postings,
     prefix join + verify join, both shuffle-bounded, no O(n²)."""
-    base = (
-        _shingled(df, text_col, id_col, n)
-        .withColumn(
-            "shh", F.array_sort(F.transform("sh", lambda x: F.xxhash64(x)))
-        )
-        .drop("sh")
-        .persist()
-    )
-    # materialize, not persist: the returned frame references s, so an
-    # in-function persist leaks (see ngram_jaccard_pairs); fused with
-    # the broadcast-gate count — one job
-    s, n_docs = materialize_counted(_freq_ordered(base))
-    base.unpersist()
+    s, n_docs = _hashed_sets(df, text_col, id_col, n)
     cand = _containment_candidates(s, t_num, t_den, size_ratio)
-    # Same verify-join strategy gate as _verify_jaccard: candidates can
-    # outnumber docs many-fold, so broadcast the KB-sized shingle sets
-    # while they fit (conf-tunable cap), shuffle on doc id above it.
-    sets = s.select("doc", "shh", "n_sh")
-    if broadcast_verify is None:
-        broadcast_verify = n_docs <= verify_broadcast_cap(df.sparkSession)
-    if broadcast_verify:
-        sets = F.broadcast(sets)
-    a = sets.select(
-        F.col("doc").alias("doc_a"),
-        F.col("shh").alias("shh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = sets.select(
-        F.col("doc").alias("doc_b"),
-        F.col("shh").alias("shh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("shh_a", "shh_b"))
-    n_min = F.least("n_a", "n_b")
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("inter", inter)
-        .withColumn("n_min", n_min)
+        _pair_sides(cand, s, "doc", ("shh", "n_sh"), n_docs, broadcast_verify)
+        .withColumn("inter", F.size(F.array_intersect("shh_a", "shh_b")))
+        .withColumn("n_min", F.least("n_sh_a", "n_sh_b"))
         .filter(F.col("inter") * t_den >= F.lit(t_num) * F.col("n_min"))
         .select("doc_a", "doc_b", "inter", "n_min")
     )

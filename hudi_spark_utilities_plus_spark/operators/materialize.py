@@ -119,43 +119,16 @@ def release(df: DataFrame) -> None:
 def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
     """``materialize`` fused with a row count: ONE job instead of two.
 
-    The eager form runs a dedicated materialization job, after which
-    callers needing the row count (broadcast-strategy gates) pay a second
-    scan of the blocks. Marking the checkpoint LAZY and driving it with
-    ``count()`` materializes every partition (count consumes each
-    partition's full iterator, so the checkpoint stores complete blocks)
-    and returns the count from the same job. Plan-level count pruning
+    The lazy form is driven by ``count()``, which consumes every
+    partition's full iterator, so the checkpoint stores complete blocks
+    and the count comes from the same job. Plan-level count pruning
     cannot bypass the work: the returned frame's plan is already a scan
-    of the to-be-checkpointed RDD, not the logical tree above it.
+    of the to-be-checkpointed RDD, not the logical tree above it. Only
+    for DETERMINISTIC frames (see ``materialize``'s ``eager``).
 
-    Only for DETERMINISTIC frames where the first consumer is this
-    full-partition count — nondeterministic single-evaluation callers
-    (global_windows) must keep the eager form so no partial evaluation
-    can ever precede materialization.
-
-    Reliable-checkpoint caveat: the one-job fusion holds
-    for the localCheckpoint branch (blocks are stored by the count's
-    own tasks). On the RELIABLE branch, ``checkpoint(eager=False)``
-    writes its files in a separate job scheduled after the count — a
-    second full lineage recompute (Spark core's two-pass reliable
-    checkpoint; no persist() is injected here because the frames on
-    this path are deterministic and typically count-once). Callers on
-    the reliable branch that want one compute pass should persist()
-    before calling and unpersist() after — not done by default since
-    the cluster-posture branch is opt-in via the cleaner conf and the
-    common path here is localCheckpoint."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None and _reliable_cleanup_enabled(sc):
-        out = df.checkpoint(eager=False)
-    else:
-        # same downgrade-warning policy as materialize()
-        if sc.getCheckpointDir() is not None:
-            app_id = sc.applicationId
-            if app_id not in _WARNED_APPS:
-                _WARNED_APPS.add(app_id)
-                _LOG.warning(
-                    "materialize_counted(): checkpoint dir set but the "
-                    "cleaner conf is off — using localCheckpoint."
-                )
-        out = df.localCheckpoint(eager=False)
+    On the reliable-checkpoint branch the fusion does not hold:
+    ``checkpoint(eager=False)`` writes its files in a separate job after
+    the count, a second full lineage recompute. Callers there that want
+    one compute pass should persist() before and unpersist() after."""
+    out = materialize(df, eager=False)
     return out, out.count()

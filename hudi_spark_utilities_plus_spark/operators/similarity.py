@@ -41,7 +41,7 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import verify_broadcast_cap
+from .dedup import _band_pairs, _pair_sides
 from .materialize import materialize
 
 
@@ -430,27 +430,16 @@ def _lsh_candidate_pairs(
 ) -> DataFrame:
     """Banded-LSH candidate pairs over the normalized vectors: explode
     per-band sign-packed keys (`_band_keys`, one numpy matmul per Arrow
-    batch), self-equi-join on (band, key), distinct. Pure equi-join —
-    shuffles on the band key, no cartesian; candidate volume tracks
-    true-pair volume plus a 1/2^band_bits random-collision floor per
-    band."""
+    batch) into the band self-join `dedup._band_pairs`. Candidate volume
+    tracks true-pair volume plus a 1/2^band_bits random-collision floor
+    per band."""
     keys = assigned.select(
         "id",
         F.posexplode(_band_keys(F.col("nv"), dim, n_bands, band_bits)).alias(
-            "band", "key"
+            "band", "bkey"
         ),
     )
-    return (
-        keys.alias("a")
-        .join(
-            keys.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return _band_pairs(keys, "id")
 
 
 def similar_pairs(
@@ -632,33 +621,11 @@ def similar_pairs(
         )
     if candidates_only:
         return cand
-    # verify side is broadcast while the corpus fits in executor memory
-    # (row count ≤ dedup.verify_broadcast_cap, default 500k, conf-tunable
-    # via spark.hudi_spark_utilities_plus.verify.broadcastMaxDocs — the
-    # count came free with the radii collect). Above the cap the hint
-    # drops and the verify join shuffles on id instead, each vector
-    # crossing the wire once (same auto-gate contract as
-    # dedup._verify_jaccard); ``broadcast_verify`` overrides the gate in
-    # either direction. Norms ride along from the cached assignment —
-    # one dot product per candidate.
-    if broadcast_verify is None:
-        broadcast_verify = n_docs <= verify_broadcast_cap(spark)
-    hint = F.broadcast if broadcast_verify else (lambda df: df)
-    va = hint(
-        assigned.select(
-            F.col("id").alias("id_a"), F.col("v").alias("v_a"),
-            F.col("norm").alias("n_a"),
-        )
-    )
-    vb = hint(
-        assigned.select(
-            F.col("id").alias("id_b"), F.col("v").alias("v_b"),
-            F.col("norm").alias("n_b"),
-        )
-    )
+    # verify join and its broadcast gate: dedup._pair_sides (the count
+    # came free with the radii collect). Norms ride along from the
+    # cached assignment — one dot product per candidate.
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+        _pair_sides(cand, assigned, "id", ("v", "norm"), n_docs, broadcast_verify)
         .withColumn(
             "cos_sim",
             # try_divide: NULL (→ dropped by the filter) on zero-norm
@@ -667,7 +634,7 @@ def similar_pairs(
             # default ANSI instead
             F.try_divide(
                 dot(F.col("v_a"), F.col("v_b")),
-                F.col("n_a") * F.col("n_b"),
+                F.col("norm_a") * F.col("norm_b"),
             ),
         )
         .filter(F.col("cos_sim") >= threshold)

@@ -55,20 +55,6 @@ def test_minhash_lsh_matches_exact_jaccard(spark, docs):
     assert lsh == exact
 
 
-def test_verify_broadcast_cap_conf_override(spark):
-    """The verify-join broadcast cap must be tunable per deployment via
-    session conf (no code edit), with the 500k default when unset or
-    unparseable."""
-    assert D.verify_broadcast_cap(spark) == D._BROADCAST_VERIFY_MAX_DOCS
-    try:
-        spark.conf.set(D._VERIFY_CAP_CONF, "123")
-        assert D.verify_broadcast_cap(spark) == 123
-        spark.conf.set(D._VERIFY_CAP_CONF, "not-a-number")
-        assert D.verify_broadcast_cap(spark) == D._BROADCAST_VERIFY_MAX_DOCS
-    finally:
-        spark.conf.unset(D._VERIFY_CAP_CONF)
-
-
 def test_verify_jaccard_smj_fallback_matches_broadcast(spark, docs):
     """The shuffled (non-broadcast) verify path is the 100-TB fallback —
     it must yield exactly the broadcast path's pair set, and the auto
@@ -99,6 +85,28 @@ def test_verify_jaccard_smj_fallback_matches_broadcast(spark, docs):
     with mock.patch.object(type(docs), "count", return_value=D._BROADCAST_VERIFY_MAX_DOCS + 1), \
          mock.patch.object(D.F, "broadcast", side_effect=AssertionError("broadcast above cap")):
         D.ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
+
+
+def test_containment_shuffled_verify_matches_broadcast(spark, docs):
+    """containment_pairs' shuffled verify path (the fallback above the
+    broadcast doc cap) must return exactly the broadcast path's rows,
+    and the auto gate must never broadcast above the cap."""
+
+    def rows(**kw):
+        return sorted(
+            tuple(r)
+            for r in D.containment_pairs(
+                docs, "text", "doc_id", t_num=1, t_den=2, **kw
+            ).collect()
+        )
+
+    hinted = rows(broadcast_verify=True)
+    assert hinted and rows(broadcast_verify=False) == hinted
+    import unittest.mock as mock
+
+    with mock.patch.object(type(docs), "count", return_value=D._BROADCAST_VERIFY_MAX_DOCS + 1), \
+         mock.patch.object(D.F, "broadcast", side_effect=AssertionError("broadcast above cap")):
+        assert rows() == hinted
 
 
 def test_ngram_jaccard_equals_bruteforce_random_sweep(spark):
@@ -1922,7 +1930,7 @@ def test_materialize_counted_fuses_count_and_cuts_lineage(spark):
     """materialize_counted must return the exact row count AND a frame
     whose plan is a scan of the materialized blocks (lineage cut), with
     values identical to the input — the single-job fusion of
-    materialize() + count() (r16)."""
+    materialize() + count()."""
     from hudi_spark_utilities_plus_spark.operators.materialize import (
         materialize_counted,
     )
@@ -1956,7 +1964,7 @@ def test_opaque_is_value_identical(spark):
 
 
 def test_freq_ordered_rebuilds_shh_and_nsh_exactly(spark):
-    """_freq_ordered (r16: rebuilds shh/n_sh from the ordered postings
+    """_freq_ordered (rebuilds shh/n_sh from the ordered postings
     instead of joining back to the input — one fewer exchange) must
     return, per doc: shh == the input's shh, n_sh == the input's n_sh,
     and shp a permutation of shh ordered by ascending global document
@@ -1996,7 +2004,7 @@ def test_freq_ordered_rebuilds_shh_and_nsh_exactly(spark):
 
 
 def test_prefix_singleton_prune_is_lossless(spark):
-    """r17 (guide §3.2): _prefix_posts drops prefix postings whose
+    """_prefix_posts drops prefix postings whose
     shingle no other document contains (dfreq == 1) before the
     candidate self-join. The candidate set must be IDENTICAL with and
     without the prune (a candidate needs a shingle both docs contain,

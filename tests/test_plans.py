@@ -293,10 +293,12 @@ def test_verify_jaccard_fallback_avoids_broadcast(spark):
 
 def test_similar_pairs_verify_autogate(spark):
     """similar_pairs must auto-drop the verify-side broadcast above the
-    conf-tunable doc cap (mirror of dedup._verify_jaccard): with the cap
+    doc cap (the gate of dedup._pair_sides): with the cap
     forced below the corpus size the plan's BroadcastHashJoin count
     matches the explicit broadcast_verify=False plan — the verify join
     shuffles — and the pair set is identical either way."""
+    import unittest.mock as mock
+
     from hudi_spark_utilities_plus_spark.operators import dedup as D
     from hudi_spark_utilities_plus_spark.operators import similarity as S
 
@@ -321,12 +323,43 @@ def test_similar_pairs_verify_autogate(spark):
         assert hinted_rows and hinted_rows == fb_rows
         # verify-side broadcasts gone; candidate-gen pair_df broadcast stays
         assert fb_bhj < hinted_bhj, (fb_bhj, hinted_bhj)
-        spark.conf.set(D._VERIFY_CAP_CONF, "4")  # corpus of 24 > cap of 4
-        auto_rows, auto_bhj = run()
+        # corpus of 24 > cap of 4
+        with mock.patch.object(D, "_BROADCAST_VERIFY_MAX_DOCS", 4):
+            auto_rows, auto_bhj = run()
         assert auto_rows == fb_rows and auto_bhj == fb_bhj, (auto_bhj, fb_bhj)
     finally:
-        spark.conf.unset(D._VERIFY_CAP_CONF)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+# Plan shape of the pair ids at the test fixture: (exchanges,
+# BroadcastHashJoin, SortMergeJoin) of the pre-execution plan. A change
+# to these plans has to change this table and say why.
+PAIR_PLANS = {
+    "dedup_ngram_jaccard": (4, 3, 0),
+    "dedup_minhash_lsh": (4, 3, 0),
+    "dedup_containment": (4, 3, 0),
+    "embedding_similar_pairs": (4, 4, 0),
+}
+
+
+@pytest.mark.parametrize("qid", sorted(PAIR_PLANS))
+def test_pair_id_plan_shape(spark, sf_dir, qid):
+    from perfbench.sparkstats import plan_census
+
+    df = QUERIES[qid](spark, sf_dir)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    text = df._jdf.queryExecution().explainString(mode.fromString("formatted"))
+    tree = text.split("\n\n", 1)[0]  # the node details repeat every name
+    words = [
+        ln.strip().lstrip("+-:* ").split(" ", 1)[0].split("(", 1)[0]
+        for ln in tree.splitlines()
+    ]
+    got = (
+        plan_census(df)["exchanges"],
+        words.count("BroadcastHashJoin"),
+        words.count("SortMergeJoin"),
+    )
+    assert got == PAIR_PLANS[qid], text
 
 
 def test_nullsafe_join_broadcasts_dim(spark, sf_dir):
