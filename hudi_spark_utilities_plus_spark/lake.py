@@ -35,12 +35,15 @@ a **partition swap**: the merge reads only the partitions the incoming
 batch touches, writes them once to staging and swaps each staged
 partition directory into place (``_rewrite_partitions``); other
 partitions' files are never opened. Unpartitioned tables are rewritten
-whole via a staging dir + backup rename — local-filesystem only, and the
-implementation refuses DFS/object-store schemes rather than pretend the
-rename is atomic there (a real deployment would use format("hudi")'s
-commit protocol via ``write_via_hudi_bundle``, or an Iceberg/Delta-style
-manifest commit). Nothing here collects to the driver except the touched
-partition-value list (metadata-scale).
+whole via a staging dir + backup rename. Both commit layouts run on a
+local filesystem only: the manifest layout (``hoodie.commit.mode=
+manifest``) models the object-store protocol — immutable data files and
+a conditional put of each manifest version — but performs that put as a
+hard link on a local filesystem. Other schemes are refused rather than
+pretend a rename or link is atomic there; a shared-storage deployment
+goes through format("hudi")'s commit protocol via
+``write_via_hudi_bundle``. Nothing here collects to the driver except
+the touched partition-value list (metadata-scale).
 
 Hive sync (``hoodie.datasource.hive_sync.*``,
 ``hudi_mongodb_batch.properties:22-29``): when enabled, every write
@@ -51,7 +54,9 @@ analogue of the reference's Hive-metastore sync.
 
 from __future__ import annotations
 
+import bisect
 import functools
+import json
 import logging
 import os
 import re
@@ -203,41 +208,159 @@ def _key_envelopes_disjoint(ranges: dict[str, list], files: list[str]) -> bool:
         return False
 
 
-def _envelope_groups_disjoint(
-    group_a: list[list], group_b: list[list]
-) -> bool:
-    """True when no record key can appear in BOTH envelope groups: no
-    interval of ``group_a`` overlaps one of ``group_b`` and at most one
-    GROUP carries nulls (within-group overlap is fine — callers pair
-    this with a within-group uniqueness argument). Envelopes are
-    [min, max, has_null] lists; an unknown envelope never reaches here
-    (callers return False first)."""
-    a_null = any(e[2] for e in group_a)
-    b_null = any(e[2] for e in group_b)
-    if a_null and b_null:
-        return False
+def _envelope_hits(index: list[list], probes: list[list]) -> list[bool]:
+    """The key-envelope overlap index: for each probe envelope, whether
+    a record key inside it may also lie inside one of the ``index``
+    envelopes. Envelopes are [min, max, has_null] lists. Null keys meet
+    when a probe and at least one index envelope both carry them; an
+    all-null probe meets nothing else. The index intervals may overlap
+    each other, so they are merged into a sorted disjoint list and each
+    probe is one bisect: O((I+P) log I) over file counts. Incomparable
+    bounds make every probe a hit — never prune on a guess."""
+    index_null = any(e[2] for e in index)
     try:
-        import bisect
-
-        # group_b's intervals may overlap each other; collapse them into
-        # a sorted disjoint list so each group_a probe is one bisect
         merged: list[list] = []
-        for lo, hi in sorted((e[0], e[1]) for e in group_b if e[0] is not None):
+        for lo, hi in sorted((e[0], e[1]) for e in index if e[0] is not None):
             if merged and lo <= merged[-1][1]:
                 if hi > merged[-1][1]:
                     merged[-1][1] = hi
             else:
                 merged.append([lo, hi])
         starts = [iv[0] for iv in merged]
-        for e in group_a:
-            if e[0] is None:
-                continue
-            i = bisect.bisect_right(starts, e[1]) - 1
-            if i >= 0 and merged[i][1] >= e[0]:
-                return False
-        return True
+        hits = []
+        for lo, hi, has_null in probes:
+            if has_null and index_null:
+                hits.append(True)
+            elif lo is None:
+                hits.append(False)
+            else:
+                i = bisect.bisect_right(starts, hi) - 1
+                hits.append(i >= 0 and merged[i][1] >= lo)
+        return hits
     except TypeError:
-        return False
+        return [True] * len(probes)
+
+
+def _envelope_groups_disjoint(
+    group_a: list[list], group_b: list[list]
+) -> bool:
+    """True when no record key can appear in BOTH envelope groups: no
+    interval of ``group_a`` overlaps one of ``group_b`` and at most one
+    GROUP carries nulls (within-group overlap is fine — callers pair
+    this with a within-group uniqueness argument). An unknown envelope
+    never reaches here (callers return False first)."""
+    return not any(_envelope_hits(group_b, group_a))
+
+
+def _base_duplicate_guard(
+    ranges: dict[str, list], part_kept: list[str], pruned: list[str]
+) -> set[str]:
+    """Files in ``pruned`` that cannot be PROVEN record-key-disjoint
+    from every file in ``part_kept`` by the key envelopes in ``ranges``
+    — the base-vs-base half of the partition-scoped MOR read's
+    soundness guard (the log half is the guard_keys path).
+
+    Why it exists: the snapshot merge dedupes duplicate keys ACROSS
+    base files (a genesis bulk_insert appends without index lookup, so
+    key k's winning precombine version can sit in partition-a file F1
+    while a stale duplicate sits in partition-b file F2).
+    read(partitions=['b']) keeps F2; pruning F1 would let F2's stale
+    row win the merge unopposed, while the unpruned read suppresses it
+    — so any pruned file whose key envelope overlaps a kept file's
+    envelope must stay in the merge (its own rows still fail the
+    post-merge partition filter; it participates only as a
+    suppressor). Overlap against the PARTITION-kept files suffices, no
+    transitive closure: a wrong winner can only reach the output
+    through a kept file's key, and that key pins every file whose
+    envelope contains it directly.
+
+    A file without an envelope defeats the proof: an unknown kept file
+    re-admits every pruned file, an unknown pruned file re-admits
+    itself. Skipped entirely when the manifest carries the
+    ``key_unique`` proof (the caller checks), and a no-op on
+    range-clustered layouts whose envelopes are disjoint by
+    construction."""
+    if any(f not in ranges for f in part_kept):
+        return set(pruned)
+    known = [f for f in pruned if f in ranges]
+    hits = _envelope_hits(
+        [ranges[f] for f in part_kept], [ranges[f] for f in known]
+    )
+    return {f for f in pruned if f not in ranges} | {
+        f for f, hit in zip(known, hits) if hit
+    }
+
+
+def _prange_class(env: list | None, values, want_null: bool) -> str:
+    """How a file's partition-value envelope ``env`` ([min, max,
+    has_null], None when unknown) meets a partition set — the non-null
+    ``values`` plus the null partition when ``want_null``:
+    ``"disjoint"`` when the file can hold no row of the set,
+    ``"inside"`` when every row it can hold is in the set, else
+    ``"mixed"``. An unknown envelope or incomparable types (e.g. a
+    retyped partition column) are ``"mixed"``: the classification
+    never prunes on a guess."""
+    if env is None:
+        return "mixed"
+    pmin, pmax, pnull = env
+    try:
+        if not (
+            (pmin is not None and any(pmin <= v <= pmax for v in values))
+            or (pnull and want_null)
+        ):
+            return "disjoint"
+        if (pmin is None or (pmin == pmax and pmin in values)) and (
+            not pnull or want_null
+        ):
+            return "inside"
+    except TypeError:
+        pass
+    return "mixed"
+
+
+def _put_if_absent(target: str, data: str) -> bool:
+    """Conditional put of ``data`` at ``target``; True when this call
+    created it, False when ``target`` already existed. The data goes to
+    a unique tmp file that is hard-linked into place — the link fails
+    atomically on an existing name and never exposes a partial file,
+    the local model of an object store's if-none-match PUT. A
+    filesystem without hard links (exFAT, SMB, some FUSE mounts) falls
+    back to an ``O_EXCL`` exclusive create: a racing loser still fails,
+    but a reader racing the write may see a partial file there. The
+    tmp file is always removed."""
+    tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        fh.write(data)
+    try:
+        try:
+            os.link(tmp, target)
+            return True
+        except FileExistsError:
+            return False
+        except OSError:
+            try:
+                fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            except FileExistsError:
+                return False
+            with os.fdopen(fd, "w") as out:
+                out.write(data)
+            return True
+    finally:
+        os.unlink(tmp)
+
+
+def _numbered_files(dirpath: str, prefix: str, suffix: str) -> list[int]:
+    """Sorted numbers ``n`` of the files ``<prefix><n:012d><suffix>`` in
+    ``dirpath`` (one LIST); [] when the directory does not exist."""
+    if not os.path.isdir(dirpath):
+        return []
+    pattern = re.escape(prefix) + r"(\d{12})" + re.escape(suffix)
+    out = []
+    for f in os.listdir(dirpath):
+        m = re.fullmatch(pattern, f)
+        if m:
+            out.append(int(m.group(1)))
+    return sorted(out)
 
 
 class SeqClaimStore:
@@ -287,55 +410,28 @@ class SeqClaimStore:
 
 class _LocalSeqClaimStore(SeqClaimStore):
     """Claim dir ``<path>__hudi_seqclaim`` of every local or ``file://``
-    MOR table: tmp + hard-link conditional put, the same if-none-match
-    model ``_publish_manifest`` uses (with the identical O_EXCL fallback
-    for linkless filesystems)."""
+    MOR table: each claim is one ``_put_if_absent``, the conditional put
+    ``_publish_manifest`` uses."""
 
     def __init__(self, dirpath: str):
         self.dir = dirpath
 
+    def _claim_path(self, seq: int) -> str:
+        return os.path.join(self.dir, f"seq-{seq:012d}.claim")
+
     def list_claims(self) -> list[int]:
-        if not os.path.isdir(self.dir):
-            return []
-        out = []
-        for f in os.listdir(self.dir):
-            m = re.fullmatch(r"seq-(\d{12})\.claim", f)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return _numbered_files(self.dir, "seq-", ".claim")
 
     def claim(self, seq: int) -> bool:
         os.makedirs(self.dir, exist_ok=True)
-        target = os.path.join(self.dir, f"seq-{seq:012d}.claim")
-        tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(str(seq))
-        try:
-            try:
-                os.link(tmp, target)
-                return True
-            except FileExistsError:
-                return False
-            except OSError:
-                try:
-                    fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                except FileExistsError:
-                    return False
-                with os.fdopen(fd, "w") as out:
-                    out.write(str(seq))
-                return True
-        finally:
-            os.unlink(tmp)
+        return _put_if_absent(self._claim_path(seq), str(seq))
 
     def truncate(self) -> None:
-        if not os.path.isdir(self.dir):
-            return
-        for f in os.listdir(self.dir):
-            if re.fullmatch(r"seq-(\d{12})\.claim", f):
-                try:
-                    os.remove(os.path.join(self.dir, f))
-                except FileNotFoundError:
-                    pass
+        for seq in self.list_claims():
+            try:
+                os.remove(self._claim_path(seq))
+            except FileNotFoundError:
+                pass
 
 
 # scheme -> factory(claim_prefix_uri) -> SeqClaimStore. Deployments
@@ -357,6 +453,22 @@ def unregister_seq_claim_store(scheme: str) -> None:
     _SEQ_CLAIM_STORES.pop(scheme.lower(), None)
 
 
+@dataclass(frozen=True)
+class _Manifest:
+    """One parsed manifest version (``HudiTable._manifest``): the live
+    data files, their record-key and partition-value envelopes
+    (``{path: [min, max, has_null]}``; {} in manifests written before
+    the envelope existed, which disables that pruning) and the
+    ``key_unique`` claim (False in manifests that predate it, which only
+    costs the base-duplicate guard's conservatism)."""
+
+    version: int
+    files: list[str]
+    ranges: dict[str, list]
+    pranges: dict[str, list]
+    key_unique: bool
+
+
 @dataclass
 class HudiTable:
     """A keyed, upsertable, optionally partitioned lake table.
@@ -375,10 +487,11 @@ class HudiTable:
     (``hoodie.write.lock.provider``) needs atomic ``O_CREAT|O_EXCL``
     exclusive create (and rename) — local filesystems and NFSv4+; on
     object stores it raises at lock-path resolution rather than
-    pretending. The manifest commit mode's conditional-put is the
-    object-store-safe concurrency story; the rename-based commit paths
-    carry the same local-only trust boundary and guard via
-    ``_local_fs_path``.
+    pretending. (3) Both commit layouts run on local paths only and
+    guard via ``_local_fs_path``: the rename layout needs atomic
+    directory renames, and the manifest layout, which models the
+    object-store protocol, publishes each version by a hard-link
+    conditional put (``_put_if_absent``).
     """
 
     path: str
@@ -431,13 +544,21 @@ class HudiTable:
     def is_mor(self) -> bool:
         return self.table_type.upper() == "MERGE_ON_READ"
 
+    def _sidecar(self, kind: str, local: bool = True) -> str:
+        """``<path>__hudi_<kind>``: the table's log, seqbase, seqclaim and
+        lock siblings, on the local filesystem path (raising
+        NotImplementedError off it) or, with ``local=False``, on the
+        table URI. Siblings, not children: Spark's file index treats
+        `_`/`.` prefixed dirs as hidden even when passed as the read
+        root, and a non-hidden child dir would corrupt the base read's
+        partition discovery — a sibling keeps base scans of self.path
+        pristine."""
+        root = self._local_fs_path() if local else self.path
+        return f"{root.rstrip('/')}__hudi_{kind}"
+
     @property
     def _log_path(self) -> str:
-        # sibling dir, not a child: Spark's file index treats `_`/`.`
-        # prefixed dirs as hidden even when passed as the read root, and
-        # a non-hidden child dir would corrupt the base read's partition
-        # discovery — a sibling keeps base scans of self.path pristine
-        return f"{self.path.rstrip('/')}__hudi_log"
+        return self._sidecar("log", local=False)
 
     def exists(self, spark: SparkSession) -> bool:
         if self._is_manifest:
@@ -483,7 +604,7 @@ class HudiTable:
                 return True
             except Exception:
                 return False
-        return os.path.isdir(f"{local.rstrip('/')}__hudi_log")
+        return os.path.isdir(self._sidecar("log"))
 
     def _memo_base_schema(self, schema) -> None:
         """Populate the per-instance base-schema memo (unpartitioned
@@ -512,19 +633,20 @@ class HudiTable:
         self._memo_base_schema(df.schema)
         return df
 
-    def _base_schema(self, spark: SparkSession):
+    def _base_schema(self, spark: SparkSession, m: _Manifest | None = None):
         """The base files' Spark schema, driver-side (memoized or a
-        single inference); None when unavailable."""
+        single inference); None when unavailable. Manifest tables read
+        the files of ``m``, by default the head."""
         try:
             if self._is_manifest:
-                return self._manifest_read(spark).schema
+                return self._manifest_read(spark, m or self._manifest()).schema
             return self._base_read(spark).schema
         except Exception:
             return None
 
     def _log_full_schema(self, spark: SparkSession):
-        """EXACT full schema of the delta log, derived DRIVER-SIDE (r17,
-        the timeline analogue of the r16 manifest footer-stats trick):
+        """EXACT full schema of the delta log, derived DRIVER-SIDE from
+        parquet footers, as the manifest envelopes are (_footer_envelopes):
         candidate = base schema + (__hudi_op string, __hudi_seq long),
         verified against every log file's parquet footer via pyarrow —
         column names must be ⊆ the candidate's and each file's arrow
@@ -549,7 +671,7 @@ class HudiTable:
             local = self._local_fs_path()
         except NotImplementedError:
             return None
-        logdir = f"{local.rstrip('/')}__hudi_log"
+        logdir = self._sidecar("log")
         try:
             log_files = [
                 os.path.join(logdir, f)
@@ -810,10 +932,11 @@ class HudiTable:
         # such a file and the stale entry wins the merge unopposed.
         # Guarding with the log's key set keeps every file that could
         # influence a merge outcome; the guard key set is delta-sized.
+        m = self._manifest() if self._is_manifest else None
         guard = None
         if (
             part_spec is not None
-            and self._is_manifest
+            and m is not None
             and mode == "snapshot"
             and self.is_mor
             and self._has_log(spark)
@@ -822,16 +945,16 @@ class HudiTable:
                 self._log_read(
                     spark,
                     columns=[self.record_key],
-                    base_schema=self._base_schema(spark),
+                    base_schema=self._base_schema(spark, m),
                 )
                 .select(self.record_key)
                 .distinct()
             )
         base = (
             self._manifest_read(
-                spark, keys=_keys, part_spec=part_spec, guard_keys=guard
+                spark, m, keys=_keys, part_spec=part_spec, guard_keys=guard
             )
-            if self._is_manifest
+            if m is not None
             else self._base_read(spark)
         )
         semi_keys = _keys
@@ -958,7 +1081,22 @@ class HudiTable:
             )
         if not self._has_log(spark):
             return self.read(spark).limit(0)
-        changed = (
+        # feed the touched-key set through read()'s _keys hook: base and
+        # log are semi-joined to it BEFORE the latest-wins merge (and on
+        # manifest tables the base scan is file-pruned), so the
+        # incremental feed's merge shuffle tracks the DELTA, not the
+        # table — same exactness argument as read_cdc: the merge is
+        # independent per key, and every commit after a valid cursor
+        # still lives in the log (the base-horizon check above raised
+        # otherwise)
+        return self.read(spark, _keys=self._touched_keys(spark, since_seq))
+
+    def _touched_keys(self, spark: SparkSession, since_seq: int) -> DataFrame:
+        """The distinct record keys of every delta commit with seq >
+        ``since_seq``: a key-and-seq projection of the log, so the scan
+        tracks the delta, not the table (callers check the log
+        exists)."""
+        return (
             self._log_read(
                 spark,
                 columns=[self.record_key, "__hudi_seq"],
@@ -968,15 +1106,6 @@ class HudiTable:
             .select(self.record_key)
             .distinct()
         )
-        # feed the touched-key set through read()'s _keys hook: base and
-        # log are semi-joined to it BEFORE the latest-wins merge (and on
-        # manifest tables the base scan is file-pruned), so the
-        # incremental feed's merge shuffle tracks the DELTA, not the
-        # table — same exactness argument as read_cdc: the merge is
-        # independent per key, and every commit after a valid cursor
-        # still lives in the log (the base-horizon check above raised
-        # otherwise)
-        return self.read(spark, _keys=changed)
 
     # -- write ---------------------------------------------------------
     def _writer(self, df: DataFrame, mode: str):
@@ -1181,7 +1310,7 @@ class HudiTable:
             name = re.sub(r"[^A-Za-z0-9_.-]", "_", self.path.rstrip("/"))
             return os.path.join(custom, name + ".lock")
         try:
-            return f"{self._local_fs_path().rstrip('/')}__hudi_lock"
+            return self._sidecar("lock")
         except NotImplementedError:
             raise ValueError(
                 "the filesystem lock provider needs a local table path "
@@ -1354,7 +1483,7 @@ class HudiTable:
         watermark in a sidecar so seqs stay MONOTONIC across compactions
         (a reset would silently break persisted incremental cursors)."""
         try:
-            p = f"{self._local_fs_path().rstrip('/')}__hudi_seqbase"
+            p = self._sidecar("seqbase")
         except NotImplementedError:
             return 0
         if os.path.exists(p):
@@ -1374,13 +1503,11 @@ class HudiTable:
         m = re.match(r"^([a-z][a-z0-9+.-]*)://(.*)$", self.path)
         scheme = m.group(1) if m else None
         if scheme is None or scheme == "file":
-            return _LocalSeqClaimStore(
-                f"{self._local_fs_path().rstrip('/')}__hudi_seqclaim"
-            )
+            return _LocalSeqClaimStore(self._sidecar("seqclaim"))
         factory = _SEQ_CLAIM_STORES.get(scheme)
         if factory is None:
             return None
-        return factory(f"{self.path.rstrip('/')}__hudi_seqclaim")
+        return factory(self._sidecar("seqclaim", local=False))
 
     def _truncate_claims(self) -> None:
         """Delete every seq claim. Called by every path that REMOVES log
@@ -1568,15 +1695,15 @@ class HudiTable:
                 else log.unionByName(entry, allowMissingColumns=True)
             )
         base = (
-            self._manifest_read(spark)
+            self._manifest_read(spark, self._manifest())
             if self._is_manifest
             else self._base_read(spark)
         )
         self._atomic_rewrite(self._merge_log(base, log), spark)
-        log_local = f"{self._local_fs_path().rstrip('/')}__hudi_log"
+        log_local = self._sidecar("log")
         if os.path.exists(log_local):
             shutil.rmtree(log_local)
-        with open(f"{self._local_fs_path().rstrip('/')}__hudi_seqbase", "w") as fh:
+        with open(self._sidecar("seqbase"), "w") as fh:
             fh.write(str(next_seq))
         # the log is gone: the seqbase watermark is the allocation floor
         # until the next append claims past it
@@ -1625,16 +1752,7 @@ class HudiTable:
             )
         key = self.record_key
         if self._has_log(spark):
-            touched = (
-                self._log_read(
-                    spark,
-                    columns=[key, "__hudi_seq"],
-                    base_schema=self._base_schema(spark),
-                )
-                .filter(F.col("__hudi_seq") > since_seq)
-                .select(key)
-                .distinct()
-            )
+            touched = self._touched_keys(spark, since_seq)
         else:
             # freshly compacted: no commit can postdate a reachable
             # cursor — empty key set, PropagateEmptyRelation collapses
@@ -1707,7 +1825,7 @@ class HudiTable:
             return  # already at or before the savepoint
         import shutil
 
-        log_local = f"{self._local_fs_path().rstrip('/')}__hudi_log"
+        log_local = self._sidecar("log")
         kept = self._log_read(spark).filter(F.col("__hudi_seq") <= to_seq)
         if kept.limit(1).count() == 0:
             shutil.rmtree(log_local)
@@ -1829,7 +1947,7 @@ class HudiTable:
             # since each rectify publishes a new manifest while leaving
             # old files on disk (clean() reclaims them), the walk-based
             # count would grow with every pass and never converge
-            sizes = [os.path.getsize(f) for f in self._manifest_files()]
+            sizes = [os.path.getsize(f) for f in self._manifest().files]
         else:
             local = self._local_fs_path()
             sizes = [
@@ -2049,7 +2167,8 @@ class HudiTable:
             # groups, not the table (the manifest analog of Hudi's
             # file-group upsert; after cluster() range-partitions the
             # layout, a hot-key batch touches few files)
-            touched, untouched = self._manifest_split_touched(df, spark)
+            m = self._manifest()
+            touched, untouched = self._manifest_split_touched(df, spark, m)
             if untouched:
                 if touched:
                     existing = spark.read.parquet(*touched).withColumn(
@@ -2078,7 +2197,7 @@ class HudiTable:
                     untouched + new_files,
                     ranges=new_ranges,
                     pranges=new_pranges,
-                    key_unique=self._manifest_key_unique(),
+                    key_unique=m.key_unique,
                 )
                 self._maybe_sync_catalog(spark)
                 return
@@ -2188,8 +2307,9 @@ class HudiTable:
                 # file-group pruning, delete form: only files whose key
                 # envelope may hold a doomed key are opened; the rest
                 # are carried by reference (see the upsert-side note)
+                m = self._manifest()
                 touched, untouched = self._manifest_split_touched(
-                    keys, spark
+                    keys, spark, m
                 )
                 if untouched:
                     new_files: list[str] = []
@@ -2206,7 +2326,7 @@ class HudiTable:
                         untouched + new_files,
                         ranges=new_ranges,
                         pranges=new_pranges,
-                        key_unique=self._manifest_key_unique(),
+                        key_unique=m.key_unique,
                     )
                     self._maybe_sync_catalog(spark)
                     return
@@ -2281,36 +2401,36 @@ class HudiTable:
             raise ValueError(f"unsupported write operation: {operation}")
 
     def _local_fs_path(self) -> str:
-        """The rename-based swap below is only sound on a local
-        filesystem (os.replace is atomic there). On object stores /
-        DFS schemes rename is neither atomic nor cheap — refuse loudly
-        instead of silently risking the table; those deployments go
-        through ``write_via_hudi_bundle`` (real commit protocol) or a
-        manifest-based format."""
+        """The table's local filesystem path. Both commit layouts need
+        one: the rename layout's swaps are atomic only there (os.replace),
+        and the manifest layout publishes by hard link. On object stores
+        / DFS schemes neither rename nor link is atomic (or cheap), so
+        refuse loudly instead of silently risking the table."""
         m = re.match(r"^([a-z][a-z0-9+.-]*)://(.*)$", self.path)
         if m is None:
             return self.path
         if m.group(1) == "file":
             return "/" + m.group(2).lstrip("/")
         raise NotImplementedError(
-            f"atomic rewrite of scheme '{m.group(1)}://' paths is not "
-            "supported by the parquet fallback — use the Hudi bundle "
-            "passthrough (write_via_hudi_bundle) or a manifest-commit "
-            "table format on shared storage"
+            f"tables on scheme '{m.group(1)}://' paths are not supported "
+            "by the parquet fallback: its commits need the atomic rename "
+            "and hard link of a local filesystem — use the Hudi bundle "
+            "passthrough (write_via_hudi_bundle) on shared storage"
         )
 
-    # -- manifest commit protocol (object-store-safe) -------------------
+    # -- manifest commit protocol -----------------------------------------
     @property
     def _is_manifest(self) -> bool:
         """``hoodie.commit.mode=manifest``: commits publish an atomic
         MANIFEST naming the table's live data files instead of renaming
         directories. Readers load exactly the files the newest complete
         manifest lists; data files are immutable once written and stale
-        ones are simply unlisted. This is the Iceberg/Delta-style commit
-        that survives object stores, where directory rename is neither
-        atomic nor cheap — and it gives COW tables version history for
-        free (``read_manifest_version``). Directory-rename mode stays
-        the default for plain local tables."""
+        ones are simply unlisted. This models the Iceberg/Delta-style
+        object-store commit (immutable files plus an if-none-match put
+        of each version), performed here as a hard-link conditional put
+        on a local filesystem — and it gives COW tables version history
+        for free (``read_manifest_version``). Directory-rename mode
+        stays the default."""
         return (
             str(self.options.get("hoodie.commit.mode", "")).lower()
             == "manifest"
@@ -2323,22 +2443,16 @@ class HudiTable:
         return os.path.join(self._local_fs_path(), "_manifests")
 
     def _manifest_versions(self) -> list[int]:
-        d = self._manifest_dir
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for f in os.listdir(d):
-            m = re.fullmatch(r"manifest-(\d{12})\.json", f)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return _numbered_files(self._manifest_dir, "manifest-", ".json")
 
-    def _manifest_files(self, version: int | None = None) -> list[str]:
-        import json
-
+    def _manifest(self, version: int | None = None) -> _Manifest:
+        """Manifest ``version`` (default: the head), parsed once; an empty
+        record with version -1 when the table has none. An operation
+        reads it once and passes it down, so every decision it makes
+        sees one version."""
         versions = self._manifest_versions()
         if not versions:
-            return []
+            return _Manifest(-1, [], {}, {}, False)
         v = versions[-1] if version is None else version
         if v not in versions:
             raise ValueError(
@@ -2347,129 +2461,19 @@ class HudiTable:
         with open(
             os.path.join(self._manifest_dir, f"manifest-{v:012d}.json")
         ) as fh:
-            return json.load(fh)["files"]
-
-    def _manifest_ranges(self, version: int | None = None) -> dict[str, list]:
-        """Per-file record-key envelopes ``{path: [min, max, has_null]}``
-        from the manifest — {} for pre-ranges manifests (pruning then
-        treats every file as potentially touched)."""
-        import json
-
-        versions = self._manifest_versions()
-        if not versions:
-            return {}
-        v = versions[-1] if version is None else version
-        with open(
-            os.path.join(self._manifest_dir, f"manifest-{v:012d}.json")
-        ) as fh:
-            return json.load(fh).get("ranges", {})
-
-    def _manifest_pranges(self, version: int | None = None) -> dict[str, list]:
-        """Per-file PARTITION-value envelopes ``{path: [min, max,
-        has_null]}`` — {} for pre-pranges manifests (dynamic overwrite
-        then treats every file as potentially mixed and rewrites it)."""
-        import json
-
-        versions = self._manifest_versions()
-        if not versions:
-            return {}
-        v = versions[-1] if version is None else version
-        with open(
-            os.path.join(self._manifest_dir, f"manifest-{v:012d}.json")
-        ) as fh:
-            return json.load(fh).get("pranges", {})
-
-    def _manifest_key_unique(self, version: int | None = None) -> bool:
-        """The manifest's ``key_unique`` claim (see _publish_manifest) —
-        False for pre-flag manifests, which only costs those tables the
-        base-duplicate guard's conservatism, never correctness."""
-        import json
-
-        versions = self._manifest_versions()
-        if not versions:
-            return False
-        v = versions[-1] if version is None else version
-        with open(
-            os.path.join(self._manifest_dir, f"manifest-{v:012d}.json")
-        ) as fh:
-            return bool(json.load(fh).get("key_unique", False))
-
-    def _base_duplicate_guard(
-        self, part_kept: list[str], pruned: list[str]
-    ) -> set[str]:
-        """Files in ``pruned`` that cannot be PROVEN record-key-disjoint
-        from every file in ``part_kept``, by key envelope — the
-        base-vs-base half of the partition-scoped MOR read's soundness
-        guard (the log half is the guard_keys path).
-
-        Why it exists: the snapshot merge dedupes duplicate keys ACROSS
-        base files (a genesis bulk_insert appends without index lookup,
-        so key k's winning precombine version can sit in partition-a
-        file F1 while a stale duplicate sits in partition-b file F2).
-        read(partitions=['b']) keeps F2; pruning F1 would let F2's
-        stale row win the merge unopposed, while the unpruned read
-        suppresses it — so any pruned file whose key envelope overlaps
-        a kept file's envelope must stay in the merge (its own rows
-        still fail the post-merge partition filter; it participates
-        only as a suppressor). Overlap against the PARTITION-kept files
-        suffices, no transitive closure: a wrong winner can only reach
-        the output through a kept file's key, and that key pins every
-        file whose envelope contains it directly.
-
-        Driver-side and metadata-scale: kept envelopes collapse into a
-        sorted disjoint interval list, each pruned file is one bisect —
-        O((K+P) log K) over file COUNTS. Skipped entirely when the
-        manifest carries the ``key_unique`` proof (the caller checks),
-        and a no-op on range-clustered layouts whose envelopes are
-        disjoint by construction — the two states every long-lived
-        table converges to (compact/cluster publish the claim)."""
-        import bisect
-
-        ranges = self._manifest_ranges()
-        if any(f not in ranges for f in part_kept):
-            # a kept file with unknown keys could duplicate anything
-            return set(pruned)
-        kept_null = False
-        ivals = []
-        for f in part_kept:
-            kmin, kmax, knull = ranges[f]
-            kept_null = kept_null or bool(knull)
-            if kmin is not None:
-                ivals.append([kmin, kmax])
-        try:
-            ivals.sort()
-            merged: list[list] = []
-            for lo, hi in ivals:
-                if merged and lo <= merged[-1][1]:
-                    if hi > merged[-1][1]:
-                        merged[-1][1] = hi
-                else:
-                    merged.append([lo, hi])
-            starts = [iv[0] for iv in merged]
-            out: set[str] = set()
-            for f in pruned:
-                env = ranges.get(f)
-                if env is None:
-                    out.add(f)
-                    continue
-                kmin, kmax, knull = env
-                if knull and kept_null:
-                    out.add(f)
-                    continue
-                if kmin is None:
-                    continue  # all-null keys; kept side has no nulls
-                i = bisect.bisect_right(starts, kmax) - 1
-                if i >= 0 and merged[i][1] >= kmin:
-                    out.add(f)
-            return out
-        except TypeError:
-            # incomparable envelope dtypes: never prune on a guess
-            return set(pruned)
+            doc = json.load(fh)
+        return _Manifest(
+            v,
+            doc["files"],
+            doc.get("ranges", {}),
+            doc.get("pranges", {}),
+            bool(doc.get("key_unique", False)),
+        )
 
     def _manifest_split_touched(
-        self, keys_df: DataFrame, spark: SparkSession
+        self, keys_df: DataFrame, spark: SparkSession, m: _Manifest
     ) -> tuple[list[str], list[str]]:
-        """Split the live manifest's files into ``(touched, untouched)``
+        """Split manifest ``m``'s files into ``(touched, untouched)``
         against a batch's record keys using the per-file key envelopes —
         the file-group pruning behind partial-rewrite upsert/delete.
 
@@ -2479,44 +2483,50 @@ class HudiTable:
         batch's keys; false positives (range overlap without actual
         membership) only cost an unnecessary rewrite, never
         correctness. Files without an envelope (legacy manifests,
-        unsupported key dtypes) are always touched. The probe is one
-        broadcast range-join of the batch's distinct keys against k
-        envelope rows with a ≤k-row collect — metadata-scale. Any probe
-        failure (e.g. envelope values that overflow a NARROWER batch key
-        dtype — the full-rewrite path would have implicit-casted) falls
-        back to all-touched: pruning may never fail a write it merely
+        unsupported key dtypes) are always touched. The probe is ONE
+        action: a broadcast join of the batch's distinct keys against
+        k envelope rows with a ≤k-row collect — metadata-scale. A key
+        hits a file when it lies in the file's [min, max], and a NULL
+        key hits exactly the files that carry nulls. Any probe failure
+        (e.g. envelope values that overflow a NARROWER batch key dtype
+        — the full-rewrite path would have implicit-casted) falls back
+        to all-touched: pruning may never fail a write it merely
         optimizes."""
-        files = self._manifest_files()
-        ranges = self._manifest_ranges()
+        files, ranges = m.files, m.ranges
         key = self.record_key
         no_env = [f for f in files if f not in ranges]
         env = [(f, *ranges[f]) for f in files if f in ranges]
         if not env or keys_df.schema[key].dataType.typeName() not in self._RANGE_TYPES:
             return files, []
-        from pyspark.sql.types import StringType, StructField, StructType
+        from pyspark.sql.types import (
+            BooleanType,
+            StringType,
+            StructField,
+            StructType,
+        )
 
         try:
-            kdf = keys_df.select(F.col(key).alias("k")).distinct()
-            batch_has_null = (
-                kdf.filter(F.col("k").isNull()).limit(1).count() > 0
-            )
             ktype = keys_df.schema[key].dataType
             rdf = spark.createDataFrame(
-                [(f, kmin, kmax) for f, kmin, kmax, _ in env],
+                [(f, kmin, kmax, bool(knull)) for f, kmin, kmax, knull in env],
                 StructType(
                     [
                         StructField("f", StringType()),
                         StructField("kmin", ktype),
                         StructField("kmax", ktype),
+                        StructField("knull", BooleanType()),
                     ]
                 ),
             )
+            k = F.col("k")
             hit = {
                 r["f"]
-                for r in kdf.join(
+                for r in keys_df.select(F.col(key).alias("k"))
+                .distinct()
+                .join(
                     F.broadcast(rdf),
-                    (F.col("k") >= F.col("kmin"))
-                    & (F.col("k") <= F.col("kmax")),
+                    ((k >= F.col("kmin")) & (k <= F.col("kmax")))
+                    | (k.isNull() & F.col("knull")),
                     "inner",
                 )
                 .select("f")
@@ -2525,8 +2535,6 @@ class HudiTable:
             }
         except Exception:
             return files, []
-        if batch_has_null:
-            hit |= {f for f, _, _, has_null in env if has_null}
         touched = no_env + [f for f, *_ in env if f in hit]
         untouched = [f for f, *_ in env if f not in hit]
         return touched, untouched
@@ -2543,24 +2551,25 @@ class HudiTable:
         are fully written BEFORE this point, so a crash anywhere earlier
         leaves the previous manifest authoritative and the half-written
         commit invisible (debris, reclaimed by listing unreferenced
-        files). Publication is a CONDITIONAL put: the tmp file is
-        hard-linked into place, which atomically FAILS if the version
-        already exists (two committers that list the same head can't
-        clobber each other — the loser just retries with the next
-        number). This models an object store's if-none-match PUT; plain
-        rename would let the second committer silently overwrite the
-        first's published manifest.
+        files). Publication is a CONDITIONAL put (``_put_if_absent``):
+        it atomically FAILS if the version already exists, so two
+        committers that read the same head can't clobber each other —
+        the loser re-reads the head and retries with the next number.
+        Plain rename would let the second committer silently overwrite
+        the first's published manifest.
 
+        Each attempt reads the head once; the version, the merged file
+        list and the carried envelopes all come from that one read.
         ``merge_head=True`` is the APPEND commit form: ``files`` are the
-        new files only, and the head's file list is re-read INSIDE the
-        retry loop so each attempt merges against the version it is
-        actually contending for. Re-listing only before the loop would
+        new files only, merged with the head's list of the attempt, so
+        each attempt merges against the version it is actually
+        contending for. Reading the head only before the loop would
         make a lost race silently publish the STALE head + our files —
         dropping the winning committer's files from the new head (and
         clean() would then delete them as unreferenced). With
         merge_head=False (full-replace commits: overwrite, compaction
-        rewrite) the retry payload is unchanged — last-writer-wins is
-        the intended overwrite semantic.
+        rewrite) the file list is unchanged across retries —
+        last-writer-wins is the intended overwrite semantic.
 
         ``ranges`` carries the NEW files' record-key envelopes
         (_manifest_write_batch). The published manifest stores an
@@ -2582,22 +2591,13 @@ class HudiTable:
         appends against a non-empty head demote the claim: the merged
         payload spans two commits and cross-commit key disjointness is
         unproven."""
-        import json
-
         os.makedirs(self._manifest_dir, exist_ok=True)
-        v = (self._manifest_versions() or [-1])[-1] + 1
         while True:
-            target = os.path.join(
-                self._manifest_dir, f"manifest-{v:012d}.json"
-            )
-            tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
-            # version (and, for appends, the merged head list) is
-            # embedded in the payload, so each retry rewrites the tmp
-            # before attempting the link
+            head = self._manifest()
+            v = head.version + 1
             if merge_head:
-                head = self._manifest_files()
-                payload = sorted(set(head) | set(files))
-                pay_unique = key_unique and not head
+                payload = sorted(set(head.files) | set(files))
+                pay_unique = key_unique and not head.files
             else:
                 payload = sorted(files)
                 pay_unique = key_unique
@@ -2605,51 +2605,26 @@ class HudiTable:
             # with the new commit's, restricted to the payload — same
             # rule for the record-key and partition-value envelopes
             payset = set(payload)
-            pay_ranges = dict(self._manifest_ranges())
-            pay_ranges.update(ranges or {})
-            pay_ranges = {p: r for p, r in pay_ranges.items() if p in payset}
-            pay_pranges = dict(self._manifest_pranges())
-            pay_pranges.update(pranges or {})
-            pay_pranges = {
-                p: r for p, r in pay_pranges.items() if p in payset
+            doc = {
+                "version": v,
+                "files": payload,
+                "ranges": {
+                    p: r
+                    for p, r in {**head.ranges, **(ranges or {})}.items()
+                    if p in payset
+                },
+                "pranges": {
+                    p: r
+                    for p, r in {**head.pranges, **(pranges or {})}.items()
+                    if p in payset
+                },
+                "key_unique": pay_unique,
             }
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {
-                        "version": v,
-                        "files": payload,
-                        "ranges": pay_ranges,
-                        "pranges": pay_pranges,
-                        "key_unique": pay_unique,
-                    },
-                    fh,
-                )
-            try:
-                try:
-                    os.link(tmp, target)
-                    return v
-                except FileExistsError:
-                    v += 1
-                except OSError:
-                    # filesystem without hard links (exFAT/SMB/some FUSE
-                    # mounts): O_EXCL exclusive-create keeps the
-                    # conditional-put (a racing loser still fails and
-                    # retries) at the cost of content atomicity on this
-                    # fallback path only — a reader racing the write may
-                    # glimpse a partial manifest there, which the primary
-                    # link path never exposes
-                    try:
-                        fd = os.open(
-                            target, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                        )
-                    except FileExistsError:
-                        v += 1
-                    else:
-                        with os.fdopen(fd, "w") as out, open(tmp) as src:
-                            out.write(src.read())
-                        return v
-            finally:
-                os.unlink(tmp)
+            target = os.path.join(
+                self._manifest_dir, f"manifest-{v:012d}.json"
+            )
+            if _put_if_absent(target, json.dumps(doc)):
+                return v
 
     # record-key dtypes whose min/max round-trip JSON with ordering
     # intact — the precondition for per-file range pruning
@@ -2676,9 +2651,8 @@ class HudiTable:
     ) -> dict[str, dict[str, list]] | None:
         """Per-file ``{col: [min, max, has_null]}`` read DRIVER-SIDE from
         the parquet row-group footers the writer already populated —
-        zero Spark jobs, replacing the per-commit distributed stats
-        aggregate (guide §1/§5: the cheapest job is the one not
-        launched). Returns ``None`` whenever ANY needed stat is absent
+        zero Spark jobs in place of the per-commit distributed stats
+        aggregate. Returns ``None`` whenever ANY needed stat is absent
         or uncertain (stats dropped for oversized values, unknown null
         counts, unreadable footer) — callers then run the exact
         aggregate; correctness never depends on this path. Empty files
@@ -2690,9 +2664,9 @@ class HudiTable:
         out: dict[str, dict[str, list]] = {}
         for p in files:
             # the WHOLE per-file stats walk sits inside the fallback
-            # try (ADVICE r16): an unexpected pyarrow error on any
-            # stats accessor must demote to the exact distributed
-            # aggregate, never abort the write
+            # try: an unexpected pyarrow error on any stats accessor
+            # demotes to the exact distributed aggregate, never aborts
+            # the write
             try:
                 md = pq.ParquetFile(p).metadata
                 if md.num_rows == 0:
@@ -2705,14 +2679,14 @@ class HudiTable:
                     ci = idx.get(c)
                     if ci is None:
                         return None
-                    # truncation guard (ADVICE r16): where this pyarrow
-                    # exposes exactness flags, byte-array (string)
-                    # columns must assert exact min AND max — a writer
-                    # with statistics truncation enabled would
-                    # otherwise silently yield widened string bounds.
-                    # Absent flags (older pyarrow) keep the empirical
-                    # trust contract probed in r16 (parquet-mr DROPS
-                    # oversized string stats rather than truncating).
+                    # truncation guard: where this pyarrow exposes
+                    # exactness flags, byte-array (string) columns must
+                    # assert exact min AND max — a writer with
+                    # statistics truncation enabled would otherwise
+                    # silently yield widened string bounds. Absent flags
+                    # (older pyarrow) keep the trust contract of
+                    # _FOOTER_STAT_TYPES (parquet-mr DROPS oversized
+                    # string stats rather than truncating).
                     want_exact = (
                         md.schema.column(ci).physical_type == "BYTE_ARRAY"
                     )
@@ -2785,10 +2759,10 @@ class HudiTable:
         aggregate as a per-file ``collect_set`` (partition columns are
         low-cardinality by contract, so the per-file set is small).
         Callers that need the touched-partition list (dynamic
-        overwrite) previously ran a separate ``distinct().collect()``
-        over the batch — a second full evaluation of the batch plan
-        before the write even started; at 100 TB that is an entire
-        extra pass over the commit's data (r16)."""
+        overwrite) take it from here, not from a separate
+        ``distinct().collect()`` over the batch, which would evaluate
+        the batch plan a second time — at 100 TB an entire extra pass
+        over the commit's data."""
         commit_dir = os.path.join(
             self._local_fs_path(), "data", f"commit-{uuid.uuid4().hex[:12]}"
         )
@@ -2885,17 +2859,17 @@ class HudiTable:
     def _manifest_read(
         self,
         spark: SparkSession,
-        version: int | None = None,
+        m: _Manifest,
         keys: DataFrame | None = None,
         part_spec: tuple[list, bool] | None = None,
         guard_keys: DataFrame | None = None,
     ) -> DataFrame:
-        """Scan the manifest's file list (live version only for every
-        pruning form below). With ``keys``, the list is FILE-pruned
-        against the per-file key envelopes — a point lookup opens only
-        the files that may hold a probed key; callers still semi-join
-        rows to the key set, so the pruning is exact on the same
-        envelope argument as the partial-rewrite paths. With
+        """Scan manifest ``m``'s file list (the pruning forms below are
+        passed by read(), always with the head). With ``keys``, the list
+        is FILE-pruned against the per-file key envelopes — a point
+        lookup opens only the files that may hold a probed key; callers
+        still semi-join rows to the key set, so the pruning is exact on
+        the same envelope argument as the partial-rewrite paths. With
         ``part_spec`` = (non-null values, want_null), files whose
         partition-value envelope is disjoint from the requested set are
         pruned — EXCEPT, when the caller will merge (``guard_keys`` is
@@ -2906,29 +2880,17 @@ class HudiTable:
         a kept file's (_base_duplicate_guard). Both prunings intersect;
         each drops only files that cannot contribute to the final
         result."""
-        files = self._manifest_files(version)
+        files = m.files
         if not files:
             raise FileNotFoundError(f"no manifest for table {self.path}")
         scan = list(files)
-        if part_spec is not None and version is None:
+        if part_spec is not None:
             nonnull, want_null = part_spec
-            pr = self._manifest_pranges()
             part_kept: list[str] = []
             pruned: list[str] = []
             for f in scan:
-                env = pr.get(f)
-                if env is None:
-                    part_kept.append(f)
-                    continue
-                pmin, pmax, pnull = env
-                try:
-                    overlap = (
-                        pmin is not None
-                        and any(pmin <= v <= pmax for v in nonnull)
-                    ) or (pnull and want_null)
-                except TypeError:
-                    overlap = True  # incomparable dtypes: never prune
-                (part_kept if overlap else pruned).append(f)
+                cls = _prange_class(m.pranges.get(f), nonnull, want_null)
+                (pruned if cls == "disjoint" else part_kept).append(f)
             keep = set(part_kept)
             pruned_set = set(pruned)
             if guard_keys is not None and pruned:
@@ -2941,7 +2903,7 @@ class HudiTable:
                 keep.update(
                     f
                     for f in self._manifest_split_touched(
-                        guard_keys, spark
+                        guard_keys, spark, m
                     )[0]
                     if f in pruned_set
                 )
@@ -2951,13 +2913,13 @@ class HudiTable:
                 #     index lookup). Skipped when the manifest proves
                 #     base keys unique — the state compact/cluster
                 #     publish and upsert/delete preserve.
-                if not self._manifest_key_unique():
+                if not m.key_unique:
                     keep.update(
-                        self._base_duplicate_guard(part_kept, pruned)
+                        _base_duplicate_guard(m.ranges, part_kept, pruned)
                     )
             scan = [f for f in scan if f in keep]
-        if keys is not None and version is None:
-            touched, untouched = self._manifest_split_touched(keys, spark)
+        if keys is not None:
+            touched, untouched = self._manifest_split_touched(keys, spark, m)
             if untouched:
                 tset = set(touched)
                 scan = [f for f in scan if f in tset]
@@ -2974,7 +2936,7 @@ class HudiTable:
         cleaner trims them)."""
         if not self._is_manifest:
             raise ValueError("read_manifest_version requires manifest commit mode")
-        return self._manifest_read(spark, version)
+        return self._manifest_read(spark, self._manifest(version))
 
     def clean(self, keep_last: int = 1, grace_seconds: float = 0.0) -> dict:
         """Hudi's CLEANER service for manifest-mode tables: retain the
@@ -3009,7 +2971,7 @@ class HudiTable:
         keep = versions[-keep_last:]
         live: set[str] = set()
         for v in keep:
-            live.update(self._manifest_files(v))
+            live.update(self._manifest(v).files)
         for v in drop:
             os.remove(
                 os.path.join(self._manifest_dir, f"manifest-{v:012d}.json")
@@ -3098,8 +3060,8 @@ class HudiTable:
         - DISJOINT (no touched value inside [min, max]; null untouched
           or absent): carried into the new manifest BY REFERENCE —
           never opened.
-        - PURE-TOUCHED (every value the envelope allows is touched:
-          [v, v] with v touched / all-null with null touched): dropped
+        - INSIDE (every value the envelope allows is touched: [v, v]
+          with v touched / all-null with null touched): dropped
           from the manifest. The files STAY on disk — older manifest
           versions still reference them (time travel), clean()
           reclaims them.
@@ -3108,6 +3070,9 @@ class HudiTable:
           error): rewritten retaining only rows OUTSIDE the touched
           partitions.
 
+        The classification is ``_prange_class``, the same envelope test
+        a partition-scoped read prunes with.
+
         Exact: a carried file provably holds no touched-partition row,
         a dropped file provably holds only touched-partition rows, and
         the mixed rewrite filters row-by-row; classification
@@ -3115,48 +3080,25 @@ class HudiTable:
         therefore tracks the touched partitions (plus mixed-file
         rewrites), not the table."""
         # Write the batch FIRST; its touched-partition set comes out of
-        # the post-write stats aggregate (collect_parts) instead of a
-        # separate distinct().collect() — the old order evaluated the
-        # full batch plan twice (once for the distinct, once for the
-        # write). Classification of prior files happens after, against
-        # the batch-derived set; the manifest publish at the end is
-        # still the single atomic commit point, so failure anywhere
-        # before it leaves the table on the old version exactly as
-        # before (the new data dir is unreferenced garbage, same as any
-        # failed commit).
+        # the post-write stats aggregate (collect_parts), so the batch
+        # plan is evaluated once — a separate distinct().collect() would
+        # evaluate it a second time. Classification of prior files
+        # happens after, against the batch-derived set; the manifest
+        # publish at the end is the single atomic commit point, so
+        # failure anywhere before it leaves the table on the old version
+        # (the new data dir is unreferenced garbage, same as any failed
+        # commit).
         new_files, new_ranges, new_pranges, (parts, has_null) = (
             self._manifest_write_batch(df, collect_parts=True)
         )
-        live = self._manifest_files()
-        pranges = self._manifest_pranges()
+        m = self._manifest()
         pset = set(parts)
-        carry: list[str] = []
-        drop: list[str] = []
-        mixed: list[str] = []
-        for f in live:
-            env = pranges.get(f)
-            if env is None:
-                mixed.append(f)
-                continue
-            pmin, pmax, pnull = env
-            try:
-                overlap = (
-                    pmin is not None
-                    and any(pmin <= v <= pmax for v in pset)
-                ) or (pnull and has_null)
-                if not overlap:
-                    carry.append(f)
-                    continue
-                nonnull_subset = pmin is None or (
-                    pmin == pmax and pmin in pset
-                )
-                null_subset = (not pnull) or has_null
-                (drop if nonnull_subset and null_subset else mixed).append(f)
-            except TypeError:
-                # envelope/batch partition dtypes don't compare (e.g. a
-                # schema evolution changed the column type): rewrite —
-                # pruning may never fail an overwrite it merely speeds up
-                mixed.append(f)
+        by_class: dict[str, list[str]] = {
+            "disjoint": [], "inside": [], "mixed": []
+        }
+        for f in m.files:
+            by_class[_prange_class(m.pranges.get(f), pset, has_null)].append(f)
+        carry, mixed = by_class["disjoint"], by_class["mixed"]
         batch_env = list(new_ranges.values())  # batch files only
         # the disjointness proof below needs an envelope for EVERY
         # batch file (an unenveloped file could hold any key)
@@ -3190,10 +3132,9 @@ class HudiTable:
         # envelopes are group-disjoint (replacing partition 'a' while
         # key k keeps an old row in partition 'c' is exactly the
         # duplicate insert_overwrite CAN create under global keys).
-        prior_ranges = self._manifest_ranges()
-        carried_env = [prior_ranges.get(f) for f in carry]
+        carried_env = [m.ranges.get(f) for f in carry]
         unique = (
-            self._manifest_key_unique()
+            m.key_unique
             and batch_env_complete
             and mixed_env_complete
             and all(e is not None for e in carried_env)

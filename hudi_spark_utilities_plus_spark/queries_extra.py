@@ -1977,7 +1977,7 @@ def hudi_rectify_sizes(spark, sf_dir):
             "8-file layout should be fragmented relative to a 512 MiB "
             "target at any test SF"
         )
-    live = t._manifest_files()
+    live = t._manifest().files
     if len(live) != n:
         raise AssertionError(
             f"live manifest lists {len(live)} files, rectify reported {n}"
@@ -2063,7 +2063,7 @@ def hudi_clean_reclaim(spark, sf_dir):
         raise AssertionError(f"clean removed {stats} — expected 2 manifests")
     if stats["files_removed"] < 1:
         raise AssertionError(f"clean reclaimed no files: {stats}")
-    live = set(t._manifest_files())
+    live = set(t._manifest().files)
     on_disk = {
         os.path.join(dirpath, f)
         for dirpath, _, files in os.walk(os.path.join(path, "data"))
@@ -2128,8 +2128,8 @@ def hudi_filegroup_prune(spark, sf_dir):
     # range-clustered genesis: disjoint per-file key envelopes, the
     # layout cluster() would produce — pruning is exact, not heuristic
     t.bulk_insert(o.repartitionByRange(8, "o_orderkey"))
-    ranges = t._manifest_ranges()
-    files = t._manifest_files()
+    m = t._manifest()
+    ranges, files = m.ranges, m.files
     if len(files) < 2 or set(ranges) != set(files):
         raise AssertionError(
             f"expected >=2 enveloped files, got {len(files)} files / "
@@ -2142,7 +2142,7 @@ def hudi_filegroup_prune(spark, sf_dir):
             "o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 1 DAY")
         )
     )
-    touched, untouched = t._manifest_split_touched(batch, spark)
+    touched, untouched = t._manifest_split_touched(batch, spark, m)
     if len(touched) != 1 or len(untouched) != len(files) - 1:
         raise AssertionError(
             f"point-key split touched {len(touched)} of {len(files)} "
@@ -2150,7 +2150,7 @@ def hudi_filegroup_prune(spark, sf_dir):
         )
     mtimes = {f: os.path.getmtime(f) for f in untouched}
     t.upsert(batch, spark)
-    live = set(t._manifest_files())
+    live = set(t._manifest().files)
     if not set(untouched) <= live or {
         f: os.path.getmtime(f) for f in untouched
     } != mtimes:
@@ -2163,7 +2163,9 @@ def hudi_filegroup_prune(spark, sf_dir):
     del_keys = spark.range(7, 8).select(
         F.col("id").cast("bigint").alias("o_orderkey")
     )
-    touched2, untouched2 = t._manifest_split_touched(del_keys, spark)
+    touched2, untouched2 = t._manifest_split_touched(
+        del_keys, spark, t._manifest()
+    )
     if len(touched2) != 1 or len(untouched2) != len(live) - 1:
         raise AssertionError(
             f"delete split touched {len(touched2)} of {len(live)} files "
@@ -2242,7 +2244,7 @@ def hudi_partition_overwrite(spark, sf_dir):
             (st == "P") | ((st == "F") & (F.col("o_orderkey") % 10 == 0))
         ).coalesce(1)
     )
-    pr = t._manifest_pranges()
+    pr = t._manifest().pranges
     by_cls = {"O": [], "F": [], "MIX": []}
     for f, (pmin, pmax, pnull) in pr.items():
         by_cls["MIX" if pmin != pmax else pmin].append(f)
@@ -2268,7 +2270,7 @@ def hudi_partition_overwrite(spark, sf_dir):
         )
     )
     t.insert_overwrite(batch, spark)
-    live = set(t._manifest_files())
+    live = set(t._manifest().files)
     # CARRY: pure-O files by reference — same paths, same mtimes
     if not set(by_cls["O"]) <= live or {
         f: os.path.getmtime(f) for f in by_cls["O"]
@@ -2289,7 +2291,7 @@ def hudi_partition_overwrite(spark, sf_dir):
     ):
         raise AssertionError("pre-overwrite state lost at old version")
     # REWRITE: the mixed file's survivors are exactly the P rows
-    new_pr = t._manifest_pranges()
+    new_pr = t._manifest().pranges
     survivors = [
         f
         for f in live - set(by_cls["O"])
@@ -2355,8 +2357,8 @@ def hudi_point_read(spark, sf_dir):
     # range-clustered genesis: disjoint per-file key envelopes (the
     # layout cluster() would produce) so the prune expectation is exact
     t.bulk_insert(o.repartitionByRange(8, "o_orderkey"))
-    ranges = t._manifest_ranges()
-    base_files = set(t._manifest_files())
+    m = t._manifest()
+    ranges, base_files = m.ranges, set(m.files)
     if len(base_files) < 2 or set(ranges) != base_files:
         raise AssertionError(
             f"expected >=2 enveloped base files, got {len(base_files)} "
@@ -2503,7 +2505,7 @@ def hudi_clean_grace(spark, sf_dir):
         )
     )
     in_files, in_ranges, in_pranges = t._manifest_write_batch(inflight_rows)
-    live_head = set(t._manifest_files())
+    live_head = set(t._manifest().files)
     aged = _time.time() - 7200  # older than the 3600 s grace
     for dirpath, _, files in os.walk(os.path.join(path, "data")):
         for f in files:
@@ -2555,7 +2557,7 @@ def hudi_clean_grace(spark, sf_dir):
     for p_ in in_files:
         if os.path.exists(p_):
             os.utime(p_, (aged, aged))
-    live_final = set(t._manifest_files())
+    live_final = set(t._manifest().files)
     t.clean(keep_last=1, grace_seconds=3600)
     leftover = [p_ for p_ in in_files if os.path.exists(p_) and p_ not in live_final]
     if leftover:

@@ -722,7 +722,7 @@ def test_partition_scoped_read_matches_filtered_full_read(
             # an actual compaction is a merged full rewrite and must
             # publish the claim; with no log it's a no-op and the
             # genesis claim (False under duplicates) rightly stands
-            assert t._manifest_key_unique()
+            assert t._manifest().key_unique
         check(["b", None])
 
 
@@ -1300,7 +1300,7 @@ def test_base_duplicate_guard_matches_bruteforce(kept, pruned, drop_env_idx):
     definition: a pruned file stays pruned only when provably
     key-disjoint from EVERY kept file; any file without an envelope —
     kept or pruned — defeats the proof conservatively."""
-    from hudi_spark_utilities_plus_spark.lake import HudiTable
+    from hudi_spark_utilities_plus_spark.lake import _base_duplicate_guard
 
     ranges = {f"k{i}": e for i, e in enumerate(kept)}
     ranges.update({f"p{i}": e for i, e in enumerate(pruned)})
@@ -1310,9 +1310,7 @@ def test_base_duplicate_guard_matches_bruteforce(kept, pruned, drop_env_idx):
         # a pruned file with no envelope: must always be re-admitted
         del ranges[pruned_files[drop_env_idx % len(pruned_files)]]
 
-    t = HudiTable.__new__(HudiTable)  # no table on disk needed
-    t._manifest_ranges = lambda: ranges  # type: ignore[method-assign]
-    got = t._base_duplicate_guard(kept_files, pruned_files)
+    got = _base_duplicate_guard(ranges, kept_files, pruned_files)
 
     if any(f not in ranges for f in kept_files):
         want = set(pruned_files)
@@ -1324,6 +1322,66 @@ def test_base_duplicate_guard_matches_bruteforce(kept, pruned, drop_env_idx):
             or any(_overlaps(ranges[p], ranges[k]) for k in kept_files)
         }
     assert got == want, (ranges, kept_files, pruned_files, got, want)
+
+
+_penv = st.one_of(
+    st.none(),  # no envelope: legacy manifest or unsupported dtype
+    st.tuples(st.integers(0, 5), st.integers(0, 5), st.booleans()).map(
+        lambda t: [min(t[0], t[1]), max(t[0], t[1]), t[2]]
+    ),
+    st.just([None, None, True]),  # the null partition only
+    # a retyped partition column: string bounds against int values
+    st.tuples(st.sampled_from("abc"), st.sampled_from("abc"), st.booleans()).map(
+        lambda t: [min(t[0], t[1]), max(t[0], t[1]), t[2]]
+    ),
+)
+
+
+@PROP
+@given(
+    envs=st.lists(_penv, max_size=6),
+    values=st.lists(st.integers(0, 5), max_size=3, unique=True),
+    want_null=st.booleans(),
+)
+def test_prange_class_matches_bruteforce(envs, values, want_null):
+    """_prange_class vs the set definition. A file's possible partition
+    values are its [min, max] interval (enumerated on a half-step grid,
+    so a wide interval always holds an unrequested value) plus null
+    when it carries nulls. 'disjoint' (read prunes, overwrite carries)
+    means no possible value is requested; 'inside' (overwrite drops)
+    means every one is; otherwise 'mixed' (read keeps, overwrite
+    rewrites). No envelope, or string bounds that cannot compare with
+    the requested ints, is always 'mixed'."""
+    from hudi_spark_utilities_plus_spark.lake import _prange_class
+
+    grid = [x / 2 for x in range(11)]
+    asked = set(values) | ({None} if want_null else set())
+    for env in envs:
+        got = _prange_class(env, set(values), want_null)
+        # the read passes a list, the overwrite a set: same answer
+        assert _prange_class(env, list(values), want_null) == got
+        if env is None:
+            assert got == "mixed"
+            continue
+        pmin, pmax, pnull = env
+        if isinstance(pmin, str):
+            if values:
+                assert got == "mixed", (env, values, want_null)
+                continue
+            possible = {pmin}
+        elif pmin is None:
+            possible = set()
+        else:
+            possible = {x for x in grid if pmin <= x <= pmax}
+        if pnull:
+            possible.add(None)
+        if not possible & asked:
+            want = "disjoint"
+        elif possible <= asked:
+            want = "inside"
+        else:
+            want = "mixed"
+        assert got == want, (env, values, want_null, got, want)
 
 
 # ---------------------------------------------------------------------------

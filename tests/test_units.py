@@ -558,6 +558,22 @@ def test_hudi_rewrite_refuses_object_store_schemes(spark):
         t._local_fs_path()
 
 
+def test_manifest_table_refuses_object_store_schemes(spark):
+    """The manifest layout publishes by hard link, so it runs on local
+    paths only; the refusal must not send the user back to manifest
+    mode."""
+    t = HudiTable(
+        path="s3://bucket/tbl",
+        record_key="id",
+        precombine="v",
+        options={"hoodie.commit.mode": "manifest"},
+    )
+    with pytest.raises(NotImplementedError, match="s3") as err:
+        t._manifest_dir
+    assert "manifest" not in str(err.value)
+    assert "write_via_hudi_bundle" in str(err.value)
+
+
 def test_hive_sync_registers_catalog_table(spark, tmp_path):
     """hoodie.datasource.hive_sync.* → table queryable by name after a
     write (session-catalog analogue of the reference's HiveSyncTool,
@@ -2115,7 +2131,7 @@ def test_manifest_concurrent_append_merges_winner(spark, tmp_path, monkeypatch):
         if not raced["done"] and dst.endswith(".json"):
             raced["done"] = True
             # the winner lands this exact version first
-            head = m._manifest_files()
+            head = m._manifest().files
             with open(dst, "w") as fh:
                 json.dump(
                     {"version": 0, "files": sorted(head + winner_files)}, fh
@@ -2778,7 +2794,7 @@ def test_manifest_partial_upsert_carries_untouched_files(spark, tmp_path):
     ).coalesce(1)
     t.bulk_insert(lo)
     t.bulk_insert(hi)
-    ranges = t._manifest_ranges()
+    ranges = t._manifest().ranges
     assert ranges and all(len(r) == 3 for r in ranges.values())
     lo_files = {f for f, r in ranges.items() if r[1] < 1000}
     assert lo_files
@@ -2788,14 +2804,14 @@ def test_manifest_partial_upsert_carries_untouched_files(spark, tmp_path):
             [(1050, 2, "upd"), (1200, 1, "new")], "id int, ver int, v string"
         )
     )
-    live = set(t._manifest_files())
+    live = set(t._manifest().files)
     assert lo_files <= live, "untouched low-range files were not carried"
     assert {f: os.path.getmtime(f) for f in lo_files} == mtimes
     state = {r["id"]: r["v"] for r in t.read(spark).collect()}
     assert state[1050] == "upd" and state[1200] == "new" and state[0] == "lo0"
     assert len(state) == 201
     # carried files keep their envelopes in the NEW manifest version
-    assert lo_files <= set(t._manifest_ranges())
+    assert lo_files <= set(t._manifest().ranges)
 
 
 def test_manifest_partial_delete_and_null_key_envelope(spark, tmp_path):
@@ -2810,11 +2826,11 @@ def test_manifest_partial_delete_and_null_key_envelope(spark, tmp_path):
     ).coalesce(1)
     t.bulk_insert(a)
     t.bulk_insert(b)
-    a_files = {f for f, r in t._manifest_ranges().items() if not r[2]}
+    a_files = {f for f, r in t._manifest().ranges.items() if not r[2]}
     assert a_files  # the no-null commit
     # split check: a NULL-key batch touches only the has_null file
     touched, untouched = t._manifest_split_touched(
-        spark.createDataFrame([(None,)], "id int"), spark
+        spark.createDataFrame([(None,)], "id int"), spark, t._manifest()
     )
     assert set(untouched) == a_files
     mtimes = {f: os.path.getmtime(f) for f in a_files}
@@ -2822,6 +2838,39 @@ def test_manifest_partial_delete_and_null_key_envelope(spark, tmp_path):
     assert {f: os.path.getmtime(f) for f in a_files} == mtimes
     state = {r["id"] for r in t.read(spark).collect()}
     assert 500 not in state and None in state and len(state) == 51
+
+
+def test_manifest_split_touched_runs_no_count(spark, tmp_path):
+    """The touched-file split is one action: the null-key case rides in
+    the join condition, so DataFrame.count is never called — and the
+    split is still exact for plain, null and missed keys."""
+    import unittest.mock as mock
+
+    t = _fg_manifest_table(tmp_path, "fgcount")
+    for rows in ([(i, 1, f"a{i}") for i in range(10)],
+                 [(100 + i, 1, f"b{i}") for i in range(10)],
+                 [(None, 1, "n"), (200, 1, "c")]):
+        t.bulk_insert(
+            spark.createDataFrame(rows, "id int, ver int, v string").coalesce(1)
+        )
+    m = t._manifest()
+    lo, hi, nul = (
+        next(f for f, r in m.ranges.items() if r[0] == lo_key)
+        for lo_key in (0, 100, 200)
+    )
+    probes = spark.createDataFrame([(None,), (5,), (5,), (150,)], "id int")
+
+    def split(keys):
+        touched, untouched = t._manifest_split_touched(keys, spark, m)
+        return set(touched), set(untouched)
+
+    with mock.patch.object(type(probes), "count", side_effect=AssertionError(
+        "the split must not run a count job"
+    )) as count:
+        assert split(probes) == ({lo, nul}, {hi})
+        assert split(probes.filter("id is null")) == ({nul}, {lo, hi})
+        assert split(probes.filter("id = 150")) == (set(), {lo, hi, nul})
+    assert count.call_count == 0
 
 
 def test_manifest_legacy_no_ranges_full_rewrite(spark, tmp_path):
@@ -2844,18 +2893,18 @@ def test_manifest_legacy_no_ranges_full_rewrite(spark, tmp_path):
     doc.pop("ranges", None)
     with open(p, "w") as fh:
         json.dump(doc, fh)
-    assert t._manifest_ranges() == {}
+    assert t._manifest().ranges == {}
     files, untouched = t._manifest_split_touched(
-        spark.createDataFrame([(1,)], "id int"), spark
+        spark.createDataFrame([(1,)], "id int"), spark, t._manifest()
     )
-    assert untouched == [] and set(files) == set(t._manifest_files())
+    assert untouched == [] and set(files) == set(t._manifest().files)
     t.upsert(
         spark.createDataFrame([(1, 2, "upd")], "id int, ver int, v string")
     )
     state = {r["id"]: r["v"] for r in t.read(spark).collect()}
     assert state[1] == "upd" and len(state) == 20
     # the full rewrite re-establishes envelopes for the new layout
-    assert t._manifest_ranges()
+    assert t._manifest().ranges
 
 
 def test_manifest_prune_probe_failure_falls_back_all_touched(
@@ -2876,13 +2925,13 @@ def test_manifest_prune_probe_failure_falls_back_all_touched(
             "id long, ver int, v string",
         )
     )
-    assert t._manifest_ranges()  # envelopes exist (long keys)
+    assert t._manifest().ranges  # envelopes exist (long keys)
     # int batch: createDataFrame(IntegerType) cannot hold 2**40 →
     # probe raises internally → fallback, never a write failure
     touched, untouched = t._manifest_split_touched(
-        spark.createDataFrame([(7,)], "id int"), spark
+        spark.createDataFrame([(7,)], "id int"), spark, t._manifest()
     )
-    assert untouched == [] and set(touched) == set(t._manifest_files())
+    assert untouched == [] and set(touched) == set(t._manifest().files)
     t.delete(spark.createDataFrame([(7,)], "id int"))
     assert len(t.read(spark).collect()) == 5
 
@@ -2903,7 +2952,7 @@ def test_manifest_point_read_prunes_files(spark, tmp_path):
             "id int, ver int, v string",
         ).coalesce(1)
     )
-    lo_files = {f for f, r in t._manifest_ranges().items() if r[1] < 1000}
+    lo_files = {f for f, r in t._manifest().ranges.items() if r[1] < 1000}
     assert lo_files
     df = t.read(spark, keys=spark.createDataFrame([(1050,)], "id int"))
     assert [(r["id"], r["v"]) for r in df.collect()] == [(1050, "hi1050")]
@@ -2945,7 +2994,7 @@ def test_manifest_mor_point_read_merges_log_over_pruned_base(
             "id int, ver int, v string",
         ).repartitionByRange(2, "id")
     )
-    ranges = t._manifest_ranges()
+    ranges = t._manifest().ranges
     lo_files = {f for f, r in ranges.items() if r[1] < 1000}
     assert lo_files and len(ranges) == 2
     # MOR upsert: goes to the delta log, base untouched
@@ -3069,7 +3118,7 @@ def test_manifest_partitioned_upsert_delete_filegroup(spark, tmp_path):
         "id int, ver int, p string, v string",
     )
     t.bulk_insert(df.repartition(2, "p"))
-    pr = t._manifest_pranges()
+    pr = t._manifest().pranges
     assert sorted(e[:2] for e in pr.values()) == [["a", "a"], ["b", "b"]]
     b_file = next(f for f, e in pr.items() if e[0] == "b")
     mtime = os.path.getmtime(b_file)
@@ -3080,14 +3129,14 @@ def test_manifest_partitioned_upsert_delete_filegroup(spark, tmp_path):
         )
     )
     assert os.path.getmtime(b_file) == mtime
-    assert b_file in t._manifest_files()
+    assert b_file in t._manifest().files
     r = t.read(spark)
     assert r.count() == 100
     assert r.filter("id = 7").collect()[0]["v"] == "upd"
     # pranges carried forward across the partial rewrite
-    assert t._manifest_pranges()[b_file][:2] == ["b", "b"]
+    assert t._manifest().pranges[b_file][:2] == ["b", "b"]
     t.delete(spark.createDataFrame([(60, 9)], "id int, ver int"))
-    assert os.path.getmtime(b_file) != mtime or b_file not in t._manifest_files()
+    assert os.path.getmtime(b_file) != mtime or b_file not in t._manifest().files
     got = t.read(spark)
     assert got.count() == 99 and got.filter("id = 60").count() == 0
 
@@ -3118,7 +3167,7 @@ def test_manifest_partitioned_dynamic_overwrite(spark, tmp_path):
     t.bulk_insert(
         spark.createDataFrame([(200, 1, None, "nul")], schema).coalesce(1)
     )
-    pr = t._manifest_pranges()
+    pr = t._manifest().pranges
     by_env = {tuple(e[:2]) + (e[2],): f for f, e in pr.items()}
     a_pure = by_env[("a", "a", False)]
     b_pure = by_env[("b", "b", False)]
@@ -3129,7 +3178,7 @@ def test_manifest_partitioned_dynamic_overwrite(spark, tmp_path):
     t.insert_overwrite(
         spark.createDataFrame([(1000, 1, "a", "fresh")], schema)
     )
-    live = set(t._manifest_files())
+    live = set(t._manifest().files)
     assert a_pure not in live and mixed not in live
     assert os.path.exists(a_pure), "dropped file must stay for time travel"
     assert {f: os.path.getmtime(f) for f in keep_mtimes} == keep_mtimes
@@ -3149,12 +3198,12 @@ def test_manifest_partitioned_dynamic_overwrite(spark, tmp_path):
         == 11
     )
     # NULL-partition overwrite: null-pure dropped, everything else carried
-    live_before = set(t._manifest_files())
+    live_before = set(t._manifest().files)
     t.insert_overwrite(
         spark.createDataFrame([(300, 1, None, "nul2")], schema)
     )
-    assert null_pure not in set(t._manifest_files())
-    assert live_before - set(t._manifest_files()) == {null_pure}
+    assert null_pure not in set(t._manifest().files)
+    assert live_before - set(t._manifest().files) == {null_pure}
     r2 = t.read(spark)
     assert [(x["id"], x["v"]) for x in r2.filter("p is null").collect()] == [
         (300, "nul2")
@@ -3236,7 +3285,7 @@ def test_partition_scoped_read_prunes_manifest_files(spark, tmp_path):
     t.bulk_insert(
         spark.createDataFrame([(100, 1, None, "nul")], schema).coalesce(1)
     )
-    pr = t._manifest_pranges()
+    pr = t._manifest().pranges
     a_files = {f for f, e in pr.items() if e[0] == "a" == e[1]}
     df = t.read(spark, partitions=["a"])
     assert df.count() == 10
@@ -3314,7 +3363,7 @@ def test_partition_scoped_read_base_duplicate_guard(spark, tmp_path):
         ).repartition(2, "p")
     )
     # overlapping key envelopes ([1,1] vs [1,2]): no uniqueness proof
-    assert not t._manifest_key_unique()
+    assert not t._manifest().key_unique
     # a live log with an UNRELATED key: the merge path runs, and the
     # log's key set alone would keep nothing beyond partition 'b'
     t.upsert(spark.createDataFrame([(3, 1, "b", "log")], schema))
@@ -3339,7 +3388,7 @@ def test_partition_scoped_read_base_duplicate_guard(spark, tmp_path):
     # compaction merges the duplicate away and PUBLISHES the
     # uniqueness claim — same answers, guard now skipped
     t.compact(spark)
-    assert t._manifest_key_unique()
+    assert t._manifest().key_unique
     t.upsert(spark.createDataFrame([(4, 1, "b", "log2")], schema))
     got_b2 = {
         r["id"]: r["v"] for r in t.read(spark, partitions=["b"]).collect()
@@ -3363,7 +3412,7 @@ def test_partition_scoped_read_pruning_intact_when_disjoint(spark, tmp_path):
             schema,
         ).repartition(2, "p")
     )
-    assert t._manifest_key_unique()  # disjoint envelopes proved it
+    assert t._manifest().key_unique  # disjoint envelopes proved it
     # simulate a legacy manifest: strip the claim, keep the envelopes
     mdir = t._manifest_dir
     latest = sorted(os.listdir(mdir))[-1]
@@ -3372,16 +3421,16 @@ def test_partition_scoped_read_pruning_intact_when_disjoint(spark, tmp_path):
     m.pop("key_unique", None)
     with open(os.path.join(mdir, latest), "w") as fh:
         json.dump(m, fh)
-    assert not t._manifest_key_unique()
+    assert not t._manifest().key_unique
     t.upsert(spark.createDataFrame([(25, 1, "b", "log")], schema))
     df = t.read(spark, partitions=["b"])
     assert {r["id"] for r in df.collect()} == set(range(10, 20)) | {25}
-    base = set(t._manifest_files())
+    base = set(t._manifest().files)
     scanned = {
         f.replace("file://", "").replace("file:", "")
         for f in df.inputFiles()
     }
-    pr = t._manifest_pranges()
+    pr = t._manifest().pranges
     b_files = {f for f in base if pr[f][0] == "b"}
     assert scanned & base == b_files, (
         f"disjoint-envelope layout lost its pruning: {scanned & base}"
@@ -3401,13 +3450,13 @@ def test_manifest_key_unique_lifecycle(spark, tmp_path):
     t.bulk_insert(
         spark.createDataFrame(rows, schema).repartitionByRange(4, "id")
     )
-    assert t._manifest_key_unique()
+    assert t._manifest().key_unique
     t.upsert(spark.createDataFrame([(3, 2, "up")], schema))
-    assert t._manifest_key_unique()  # partial rewrite preserves
+    assert t._manifest().key_unique  # partial rewrite preserves
     t.delete(spark.createDataFrame([(7,)], "id int"), spark)
-    assert t._manifest_key_unique()  # delete preserves
+    assert t._manifest().key_unique  # delete preserves
     t.bulk_insert(spark.createDataFrame([(100, 1, "x")], schema))
-    assert not t._manifest_key_unique()  # merge-head append demotes
+    assert not t._manifest().key_unique  # merge-head append demotes
 
     # partitioned COW manifest: overwrite's envelope-disjointness gate
     t2 = _pm_table(tmp_path, "kuow")
@@ -3418,19 +3467,19 @@ def test_manifest_key_unique_lifecycle(spark, tmp_path):
             pschema,
         ).repartition(2, "p")
     )
-    assert t2._manifest_key_unique()  # a:[0,9] / b:[10,19] disjoint
+    assert t2._manifest().key_unique  # a:[0,9] / b:[10,19] disjoint
     # batch keys [0,5] can't live in the carried b file [10,19]: preserved
     t2.insert_overwrite(
         spark.createDataFrame(
             [(i, 2, "a", "ow") for i in range(6)], pschema
         )
     )
-    assert t2._manifest_key_unique()
+    assert t2._manifest().key_unique
     # batch key 15 COULD duplicate a carried b row: demoted
     t2.insert_overwrite(
         spark.createDataFrame([(15, 3, "a", "dup")], pschema)
     )
-    assert not t2._manifest_key_unique()
+    assert not t2._manifest().key_unique
     # and the table now really does hold key 15 twice — the demotion
     # is what keeps a later partition-scoped MOR read honest
     assert t2.read(spark).filter("id = 15").count() == 2
@@ -3460,11 +3509,11 @@ def test_bulk_insert_verify_unique_keys_option(spark, tmp_path):
 
     t0 = mk("novrfy")
     t0.bulk_insert(spark.createDataFrame(rows, schema).repartition(2, "p"))
-    assert not t0._manifest_key_unique()  # overlap, no verification
+    assert not t0._manifest().key_unique  # overlap, no verification
 
     t1 = mk("vrfy", **{"hoodie.bulkinsert.verify.unique.keys": "true"})
     t1.bulk_insert(spark.createDataFrame(rows, schema).repartition(2, "p"))
-    assert t1._manifest_key_unique()  # verified at load time
+    assert t1._manifest().key_unique  # verified at load time
 
     t2 = mk("vrfydup", **{"hoodie.bulkinsert.verify.unique.keys": "true"})
     t2.bulk_insert(
@@ -3472,7 +3521,7 @@ def test_bulk_insert_verify_unique_keys_option(spark, tmp_path):
             rows + [(1, 0, "b", "dup"), (None, 0, "b", "nul")], schema
         ).repartition(2, "p")
     )
-    assert not t2._manifest_key_unique()  # real duplicates: no claim
+    assert not t2._manifest().key_unique  # real duplicates: no claim
     assert t2.read(spark).count() == 22  # and the data is untouched
 
 

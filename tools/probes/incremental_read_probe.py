@@ -23,7 +23,7 @@ Signals:
 
 Band (local[4] through build_spark_session): 2/256 base files opened
 by the 5k-key incremental pull, keys exact, versions newest; snapshot
-16.0 s / incremental 14.5 s wall (3.6 / 3.7 s on 8 local cores with a plain
+10.1 s / incremental 7.5 s wall (3.6 / 3.7 s on 8 local cores with a plain
 SparkSession builder).
 """
 import os
@@ -83,7 +83,7 @@ t_inc = time.time() - t0
 # scan inputs
 base_scanned = len(
     {f.replace("file://", "").replace("file:", "") for f in inc.inputFiles()}
-    & set(t._manifest_files())
+    & set(t._manifest().files)
 )
 inc = inc.persist()
 
@@ -96,7 +96,7 @@ vers_ok = all(ver == (k // BATCH) + 1 for k, ver in got.items())
 print(
     f"rows={ROWS} commits={COMMITS} | snapshot: {n_full} rows {t_full:.1f}s | "
     f"incremental(after c30): {n_inc} rows {t_inc:.1f}s, "
-    f"base_files_scanned={base_scanned}/{len(t._manifest_files())} | "
+    f"base_files_scanned={base_scanned}/{len(t._manifest().files)} | "
     f"keys_exact={keys_ok} versions_newest={vers_ok}",
     flush=True,
 )

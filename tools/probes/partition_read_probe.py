@@ -20,8 +20,8 @@ of a manifest written without it) the base-duplicate guard soundly
 degrades the same read to all 128 files.
 
 Band (local[4] through build_spark_session): A opens 3/128 files
-(6.7 s, against 9.3 s for full-scan+filter); B with the claim opens
-10/128 (3.9 s; the assert allows 16), without it 128/128 (10.2 s);
+(6.4 s, against 9.4 s for full-scan+filter); B with the claim opens
+10/128 (3.0 s; the assert allows 16), without it 128/128 (8.9 s);
 every read returns 125,000 rows. A's 3/128 is also the figure taken on
 8 local cores with a plain SparkSession builder.
 """
@@ -71,7 +71,7 @@ def build(tag, pcol, log_key, **opts):
 
 
 def scoped(t):
-    base = set(t._manifest_files())
+    base = set(t._manifest().files)
     s = time.time()
     d = t.read(spark, partitions=[7])
     n = d.count()
@@ -84,7 +84,7 @@ def scoped(t):
 
 # ---- Phase A: correlated layout ----
 ta = build("corr", F.col("id") / (ROWS // PARTS), 7 * (ROWS // PARTS))
-assert ta._manifest_key_unique(), "disjoint envelopes should prove it"
+assert ta._manifest().key_unique, "disjoint envelopes should prove it"
 na, nb, dta, rows_a = scoped(ta)
 s = time.time()
 n_full = ta.read(spark).filter(F.col("p") == 7).count()
@@ -103,7 +103,7 @@ tb = build(
     7,  # 7 % 64 == 7: stays in partition 7
     **{"hoodie.bulkinsert.verify.unique.keys": "true"},
 )
-assert tb._manifest_key_unique(), "load-time verification should claim it"
+assert tb._manifest().key_unique, "load-time verification should claim it"
 nc, nd, dtc, rows_c = scoped(tb)
 print(
     f"B scattered+claim: {nc}/{nd} base files {dtc}s; rows={rows_c} "

@@ -7,7 +7,7 @@ track the touched files, not the table.
 
 Band (local[4] through build_spark_session): the hash-clustered
 genesis writes 33 files (42 buckets, 64 partition values: 9 buckets
-stay empty), 27/33 are carried by reference, 5.8 s end to end. The
+stay empty), 27/33 are carried by reference, 4.9 s end to end. The
 same probe on 8 local cores with a plain SparkSession builder also writes
 33 files and carries 27.
 """
@@ -44,7 +44,7 @@ df = spark.range(ROWS).select(
 # happens to isolate one — the realistic worst-ish case for the
 # envelope classifier (range-clustered layouts carry even more)
 t.bulk_insert(df.repartition(FILES, "p"))
-live = t._manifest_files()
+live = t._manifest().files
 print(f"genesis: {len(live)} files")
 batch = (
     df.filter(F.col("p") == 7)
@@ -55,7 +55,7 @@ mtimes = {f: os.path.getmtime(f) for f in live}
 s = time.time()
 t.insert_overwrite(batch, spark)
 dt = round(time.time() - s, 2)
-after = set(t._manifest_files())
+after = set(t._manifest().files)
 carried = [f for f in live if f in after and os.path.getmtime(f) == mtimes[f]]
 print(
     f"single-partition overwrite: carried {len(carried)}/{len(live)} "
